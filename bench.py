@@ -316,12 +316,15 @@ def main() -> None:
         warm_knn(vec)
     knn_ms = round((time.perf_counter() - t0) / (len(qvecs) - 1) * 1000, 1)
 
-    # The per-query figure above is ~2/3 driver-side plan compile + py4j
-    # job-launch floor (SCALE.md warm-KNN addendum) — the scale-relevant
-    # serving shape is the SET-ORIENTED batch path (one plan, one job,
-    # N queries broadcast against the store), so report both (r5 verdict
-    # item 7). Batch = 64 queries through knn_topk_batch, ms amortized
-    # per query, min of 2 post-warm-up runs.
+    # The per-query figure above is a fixed per-request cost, not vector
+    # math. Measured at sf0.1 on 4 cores (median of 30 warm calls): 65 ms
+    # of Python-side expression build (the dot-product lambdas go through
+    # py4j) and 70 ms for its one job, of which 11 ms is Catalyst analysis,
+    # optimization and planning. SCALE.md's warm-KNN addendum splits the
+    # client's request path the same way. The SET-ORIENTED batch path (one
+    # plan, one job, N queries broadcast against the store) pays that cost
+    # once, so report both (r5 verdict item 7). Batch = 64 queries through
+    # knn_topk_batch, ms amortized per query, min of 2 post-warm-up runs.
     from cobalt_duckdb_spark.operators.knn import knn_topk_batch
 
     qdf = spark.createDataFrame(

@@ -14,17 +14,21 @@ Parity, mapped call-for-call:
 - ``from_dataframe``: "文章: " document prefix → embedder (lazy per-executor
   pandas_udf singleton; same model-save/load-local cache-aside the reference
   does at vector.py:50-60) → L2-normalized persisted vector store + temp
-  view (the DuckDB ``register`` equivalent, vector.py:131).
-- ``search_top_n``: "クエリ: " prefix → embed → top-n by cosine distance →
-  join back the ORIGINAL dataset columns + ``score`` + 0-based ``rank``
-  (the reference's exact result contract; its app then does rank+1 for
-  display).
+  view (the DuckDB ``register`` equivalent, vector.py:131). The driver also
+  resolves the same embedding kernel once, for queries.
+- ``search_top_n``: "クエリ: " prefix → embed on the driver (vector.py:164)
+  → query vectors as literals (the reference inlines its vector into the
+  SQL, vector.py:176) → top-n by cosine distance → join back the ORIGINAL
+  dataset columns + ``score`` + 0-based ``rank`` (the reference's exact
+  result contract; its app then does rank+1 for display).
 
 Where the Spark version deliberately differs (and why it wins at scale):
-a LIST of queries runs as ONE set-oriented job (broadcast query set ×
-map-only scan — ``operators/knn.knn_topk_batch``), not the reference's
-per-query Python loop (vector.py:171); and the store is a distributed,
-spill-safe persisted frame instead of an in-process pandas register.
+all query texts of a call are embedded in one batched ``encode``, and each
+returned frame is one JVM-only plan (its query row is a literal, scored by
+``operators/knn.knn_topk_batch`` as a top-k over the store, then broadcast
+into the join back to the dataset): no Python worker runs and nothing is
+persisted per request. The store is a distributed, spill-safe persisted
+frame instead of an in-process pandas register.
 """
 
 from __future__ import annotations
@@ -33,9 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.inference import (
+    QUERY_PREFIX,
+    load_embed_backend,
     make_embedder_udf,
     with_doc_prefix,
-    with_query_prefix,
 )
 from cobalt_duckdb_spark.functions.vector import l2_normalize
 from cobalt_duckdb_spark.operators.knn import knn_topk_batch
@@ -51,14 +56,15 @@ class SparkSearchClient:
         dataset: DataFrame,
         target: str,
         store: DataFrame,
-        embed_udf,
+        encode,
         spark: SparkSession,
     ) -> None:
         self.dataset = dataset
         self.target = target
         self.store = store
-        self._embed = embed_udf
+        self._encode = encode
         self._spark = spark
+        self._doc_cols = [c for c in dataset.columns if c != _ID]
 
     @classmethod
     def from_dataframe(
@@ -74,11 +80,18 @@ class SparkSearchClient:
 
         Ids are assigned once (``monotonically_increasing_id``) and frozen by
         persisting the id-stamped dataset BEFORE deriving the store, so the
-        dataset row and its vector can never disagree."""
+        dataset row and its vector can never disagree.
+
+        The driver loads the embedding model here, as the reference does
+        (vector.py:50-60), to encode query text in-process; documents are
+        still embedded on the executors. Both sides call the same
+        ``load_embed_backend`` kernel, so a query vector equals the vector
+        the executors would compute for the same text."""
         from pyspark import StorageLevel
 
         spark = data.sparkSession
         embed = make_embedder_udf(model_name, dim, model_dir)
+        encode, _ = load_embed_backend(model_name, dim, model_dir)
 
         dataset = data.withColumn(_ID, F.monotonically_increasing_id()).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -95,37 +108,44 @@ class SparkSearchClient:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         store.createOrReplaceTempView(vector_store_name)
-        return cls(dataset, target, store, embed, spark)
+        return cls(dataset, target, store, encode, spark)
 
     def search_top_n(
         self, query: str | list[str], n: int = 10
     ) -> list[DataFrame]:
         """Top-n search (reference vector.py:140-190): returns one result
         DataFrame per query — the dataset's own columns plus ``score``
-        (cosine distance) and 0-based ``rank``. All queries score in ONE
-        Spark job; the per-query split is a filter over the cached result."""
-        from pyspark import StorageLevel
+        (cosine distance) and 0-based ``rank``.
+
+        Query texts are embedded on the driver in one ``encode`` call; each
+        returned frame then runs in the JVM alone (see ``_top_n``)."""
+        import numpy as np
 
         queries = [query] if isinstance(query, str) else list(query)
-        qdf = self._spark.createDataFrame(
-            [(i, q) for i, q in enumerate(queries)], "query_id BIGINT, qtext STRING"
-        ).select(
-            "query_id",
-            self._embed(with_query_prefix("qtext")).alias("query_vec"),
+        vecs = np.asarray(
+            self._encode([QUERY_PREFIX + q for q in queries]), dtype=np.float32
         )
-        ranked = knn_topk_batch(
-            self.store, qdf, k=n, round_to=None
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        return [self._top_n(vec, n) for vec in vecs]
 
-        joined = (
-            ranked.join(self.dataset, ranked.vec_id == self.dataset[_ID])
-            .drop(_ID, "vec_id")
-            .withColumn("rank", F.col("rank") - 1)  # reference ranks from 0
-            .withColumnRenamed("distance", "score")
+    def _top_n(self, vec, n: int) -> DataFrame:
+        """One query's result frame. Its query row is a one-row range with
+        the id and the ``ARRAY<FLOAT>`` vector as literals, so Catalyst folds
+        both into the scoring scan: the per-query window loses its partition
+        key and ``knn_topk_batch`` plans as a top-k, with no shuffle. The k
+        ranked rows are broadcast into the join back to the dataset, and
+        ``orderBy().limit()`` plans as ``TakeOrderedAndProject``."""
+        qrow = self._spark.range(0, 1, 1, 1).select(
+            F.lit(0).alias("query_id"),  # one query per plan
+            F.lit(vec).alias("query_vec"),  # one literal, not one per element
         )
-        return [
-            joined.filter(F.col("query_id") == i)
-            .drop("query_id")
+        ranked = F.broadcast(knn_topk_batch(self.store, qrow, k=n, round_to=None))
+        return (
+            ranked.join(self.dataset, ranked["vec_id"] == self.dataset[_ID])
+            .select(
+                (ranked["rank"] - 1).alias("rank"),  # reference ranks from 0
+                ranked["distance"].alias("score"),
+                *self._doc_cols,
+            )
             .orderBy("rank")
-            for i in range(len(queries))
-        ]
+            .limit(n)
+        )

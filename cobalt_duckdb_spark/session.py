@@ -16,7 +16,8 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS`` if set, else this host's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(

@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.vector import (
@@ -133,3 +134,110 @@ def test_spark_search_client_reference_contract(spark, sf_dir):
     both = client.search_top_n(["key agg row scan", "stream window join"], n=3)
     assert len(both) == 2
     assert all(len(b.collect()) == 3 for b in both)
+
+
+@pytest.fixture(scope="module")
+def search_client(spark, sf_dir):
+    from cobalt_duckdb_spark.client import SparkSearchClient
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    client = SparkSearchClient.from_dataframe(docs, "text", dim=16)
+    client.search_top_n("warm up", n=5)[0].collect()  # materializes the store
+    return client
+
+
+def _operators(plan):
+    """Every operator of an executed plan, through adaptive execution and
+    its query stages, but not into the plans that cached relations were
+    built from: an ``InMemoryTableScan`` is a leaf here."""
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    return [plan] + [op for k in kids for op in _operators(k)]
+
+
+def _cached_rdd_ids(df):
+    """Ids of the persisted RDDs behind the cached relations ``df`` reads."""
+    return {
+        op.relation().cacheBuilder().cachedColumnBuffers().id()
+        for op in _operators(df._jdf.queryExecution().executedPlan())
+        if op.getClass().getSimpleName() == "InMemoryTableScanExec"
+    }
+
+
+def test_search_top_n_plan_runs_in_jvm(spark, search_client):
+    """A request runs in the JVM alone: no Python worker (the query text is
+    embedded on the driver and enters the plan as literals), no new cached
+    relation (the store and the id-stamped dataset are the only ones), no
+    range-partitioning sort; a single request starts at most 3 jobs."""
+    client = search_client
+    stored = _cached_rdd_ids(client.store) | _cached_rdd_ids(client.dataset)
+    assert len(stored) == 2
+    for query in ("key agg row scan", ["key agg row scan", "stream window join"]):
+        for frame in client.search_top_n(query, n=5):
+            assert len(frame.collect()) == 5
+            ops = _operators(frame._jdf.queryExecution().executedPlan())
+            names = [op.nodeName() for op in ops]
+            assert not [
+                n
+                for n in names
+                if n in ("ArrowEvalPython", "BatchEvalPython") or "ExistingRDD" in n
+            ], names
+            assert _cached_rdd_ids(frame) <= stored
+            assert not [
+                op
+                for op in ops
+                if op.getClass().getSimpleName() == "ShuffleExchangeExec"
+                and op.outputPartitioning().getClass().getSimpleName()
+                == "RangePartitioning"
+            ]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("search_top_n_jobs", "one single request")
+    try:
+        [frame] = client.search_top_n("key agg row scan", n=5)
+        frame.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("search_top_n_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(jobs) <= 3
+
+
+def test_search_top_n_persists_nothing(spark, search_client):
+    """Requests leave no materialized block behind: the block manager holds
+    as many persisted RDDs after 5 collected requests as before them."""
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    for i in range(5):
+        for frame in search_client.search_top_n(f"query {i}", n=3):
+            frame.collect()
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_driver_query_vectors_match_executor_embedder(spark, search_client):
+    """The client's driver-side encode and the executors' pandas_udf resolve
+    the same kernel: equal vectors, element for element, for the same
+    prefixed text."""
+    from cobalt_duckdb_spark.functions.inference import (
+        QUERY_PREFIX,
+        make_embedder_udf,
+    )
+
+    texts = [QUERY_PREFIX + t for t in ("key agg row scan", "", "検索 クエリ 🚀")]
+    embed = make_embedder_udf(dim=16)
+    rows = (
+        spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+        .select("i", embed("t").alias("v"))
+        .orderBy("i")
+        .collect()
+    )
+    driver = search_client._encode(texts)
+    assert len(rows) == len(texts)
+    for row, vec in zip(rows, driver):
+        assert len(row["v"]) == 16
+        assert row["v"] == [float(x) for x in vec]
