@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import fnmatch
+import glob
 import json
 import os
 import re
@@ -63,6 +64,26 @@ def _calibrate(spark) -> float:
     return round(min(run() for _ in range(3)), 4)
 
 
+def _newest_anchor() -> tuple[str | None, float | None]:
+    """(file name, calib_sec) of the newest committed bench_r*_full.json,
+    or (None, None). Sorted numerically by round: the names are not
+    zero-padded, so a lexicographic sort would pin bench_r9_full.json
+    forever once bench_r10_full.json exists."""
+    files = glob.glob(
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_r*_full.json")
+    )
+    if not files:
+        return None, None
+    newest = max(
+        files, key=lambda p: int(re.search(r"bench_r(\d+)_", os.path.basename(p)).group(1))
+    )
+    try:
+        with open(newest) as f:
+            return os.path.basename(newest), json.load(f).get("calib_sec")
+    except (OSError, ValueError):
+        return None, None
+
+
 def _wait_for_quiet_host(spark, max_wait_s: float = 300.0) -> None:
     """Pre-flight gate (r9 verdict item 1): delay the TIMED sweep until the
     host is steady, so the record lands with calib_spread ≤ 1.2 instead of
@@ -84,29 +105,9 @@ def _wait_for_quiet_host(spark, max_wait_s: float = 300.0) -> None:
     # be within 1.35× of the newest committed anchor; at other core counts
     # (the driver's 8-core leg) the anchor doesn't apply and the
     # self-relative rule alone gates. Still bounded by max_wait_s.
-    anchor = None
-    try:
-        import glob as _glob
+    from cobalt_duckdb_spark.session import default_parallelism
 
-        from cobalt_duckdb_spark.session import default_parallelism
-
-        if default_parallelism() == 32:
-            prior_files = sorted(
-                _glob.glob(
-                    os.path.join(
-                        os.path.dirname(os.path.abspath(__file__)),
-                        "bench_r*_full.json",
-                    )
-                ),
-                key=lambda p: int(
-                    re.search(r"bench_r(\d+)_", os.path.basename(p)).group(1)
-                ),
-            )
-            if prior_files:
-                with open(prior_files[-1]) as f:
-                    anchor = json.load(f).get("calib_sec")
-    except (OSError, ValueError):
-        pass
+    anchor = _newest_anchor()[1] if default_parallelism() == 32 else None
 
     t0 = time.perf_counter()
     prev = _calibrate(spark)
@@ -239,39 +240,16 @@ def main() -> None:
     # >1.5x from the newest committed bench_r*_full.json so the operator
     # re-runs on a quiet host instead of chasing phantom slowdowns.
     calib_warning = None
-    try:
-        import glob as _glob
-
-        # Sort numerically by round: the names are not zero-padded, so a
-        # lexicographic sort would pin the anchor to bench_r9_full.json
-        # forever once bench_r10_full.json exists (ADVICE r7, low).
-        prior_files = sorted(
-            _glob.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "bench_r*_full.json",
-                )
-            ),
-            key=lambda p: int(
-                re.search(r"bench_r(\d+)_", os.path.basename(p)).group(1)
-            ),
+    anchor_file, prior_calib = _newest_anchor()
+    if prior_calib and not (prior_calib / 1.5 <= calib_sec <= prior_calib * 1.5):
+        calib_warning = (
+            f"calib_sec {calib_sec} deviates >1.5x from committed "
+            f"anchor {prior_calib} ({anchor_file})"
+            " — host degraded or sped up; totals from this run are"
+            " not comparable raw, re-run on a quiet host or compare"
+            " calib-normalized only"
         )
-        if prior_files:
-            with open(prior_files[-1]) as f:
-                prior_calib = json.load(f).get("calib_sec")
-            if prior_calib and not (
-                prior_calib / 1.5 <= calib_sec <= prior_calib * 1.5
-            ):
-                calib_warning = (
-                    f"calib_sec {calib_sec} deviates >1.5x from committed "
-                    f"anchor {prior_calib} ({os.path.basename(prior_files[-1])})"
-                    " — host degraded or sped up; totals from this run are"
-                    " not comparable raw, re-run on a quiet host or compare"
-                    " calib-normalized only"
-                )
-                print(f"WARNING: {calib_warning}", file=sys.stderr)
-    except (OSError, ValueError):
-        pass
+        print(f"WARNING: {calib_warning}", file=sys.stderr)
 
     # Warm-path KNN throughput at the reference's operating point: repeated
     # queries against a resident (persisted, normalized) vector store —

@@ -127,357 +127,9 @@ def _load_all_modules() -> None:
 _load_all_modules()
 
 
-# Names the driver's truncated 50-entry gate already verified in rounds 1-2
-# (green keys of CORRECTNESS_r01.json + CORRECTNESS_r02.json). The driver
-# checks the FIRST 50 registry entries per round, so the registry is rotated:
-# retries of previously-failed names first, then every not-yet-driver-verified
-# query (including anything newly registered), then the verified set. This
-# cycles driver verification through the whole surface instead of re-checking
-# the same prefix forever. The flagship is NOT pinned to slot 0: the driver
-# smoke-checks it separately via entry() every round, and it is multiply
-# driver-green (r1/r3/r4), so re-windowing it would burn the scarcest
-# resource — a fresh certification slot (r4 verdict: backlog <= 87 after r5
-# needs all 50 slots fresh). next_window.py still enforces that a
-# not-yet-green flagship must re-enter the window.
-_DRIVER_VERIFIED = frozenset(
-    {
-        # --- r02 greens (CORRECTNESS_r02.json). Deliberately absent (retry
-        # in r03 with fixes/new oracles): text_pii_redaction (oracle comment
-        # bug), udaf_label_centroids (array output), udtf_sentence_split +
-        # multimodal_feature_extract (oracles added this round).
-        "agg_collect_sorted_list", "agg_higher_moments",
-        "join_asof_next_click_after_error", "join_asof_nearest_click_to_error",
-        "events_user_journey_prefix", "events_value_zscore_outliers",
-        "events_windowed_topk_types", "events_latest_user_state",
-        "events_transition_matrix", "events_scd2_user_state",
-        "join_interval_error_click_left", "events_assoc_rules_types",
-        "text_bm25_topk", "text_repetition_scores", "text_bigram_lm_score",
-        "text_vocab_coverage", "text_bpe_merge_pairs", "text_pmi_collocations",
-        "text_tfidf_keywords", "text_gopher_quality_flags",
-        "text_chunk_sliding_windows", "dedup_simhash_pairs",
-        "dedup_embedding_cosine_pairs", "dedup_keep_best_resolution",
-        "dedup_eval_contamination", "dedup_incremental_new_batch",
-        "dedup_shared_span_report", "simsearch_ivf_topk",
-        "embedding_int8_quantization_audit", "hybrid_rrf_topk",
-        "cluster_kmeans_lloyd", "embedding_dim_variance_topk",
-        "simsearch_pq_adc_topk", "simsearch_ivfpq_adc_topk",
-        "simsearch_hard_negatives", "subq_correlated_above_avg_parts",
-        "subq_in_top_spenders", "subq_scalar_vs_global_avg",
-        "sql_api_q6_forecast_revenue", "multimodal_binary_stats",
-        "window_percent_rank_cume", "scalar_null_handling",
-        # Rows-only BY DESIGN (sketches are engine-specific; model in the
-        # loop): the driver recorded their weaker rows-only check in r02 —
-        # re-checking burns slots without new signal.
-        "agg_approx_sketches", "infer_embed_index_search_e2e",
-        "infer_tokenize_stats",
-        # --- r03 greens (CORRECTNESS_r03.json; all green except
-        # pipeline_corpus_curation, which retries in r04 with its HUGEINT
-        # oracle fix).
-        "text_pii_redaction", "udaf_label_centroids", "udtf_sentence_split",
-        "multimodal_feature_extract", "sketch_cms_heavy_hitters",
-        "split_train_valid_test_hash", "split_stratified_sample",
-        "pack_sequences_budget", "mix_temperature_sample",
-        "features_customer_rfm", "skyline_cheap_small_parts",
-        "dq_histogram_totalprice", "stats_chi2_lang_source",
-        "dq_equidepth_deciles", "q2_top_supplier_per_nation",
-        "q4_late_order_priority", "q12_case_aggregation",
-        "q14_promo_revenue_share", "q16_supplier_part_counts",
-        "q19_or_of_ands_predicates", "q22_inactive_wealthy_customers",
-        "q10_returned_revenue_by_customer", "q18_large_volume_orders",
-        "q7_cross_nation_trade", "q15_top_revenue_supplier",
-        "q21_sole_late_supplier", "q8_market_share",
-        "q20_nested_in_supplier_parts", "q9_product_profit_by_nation_year",
-        "q11_important_part_values", "q13_customer_order_distribution",
-        "q17_small_quantity_revenue", "pivot_event_type_totals",
-        "events_multi_resolution_rollup", "events_gap_filled_minutes",
-        "events_signup_to_purchase_funnel", "events_weekly_cohort_retention",
-        "events_seasonal_hour_anomaly", "events_peak_concurrent_incidents",
-        "events_ewma_user_value", "events_mad_robust_outliers",
-        "events_latency_percentile_rollup", "events_time_weighted_avg_value",
-        "events_top_trigram_paths", "sample_weighted_reservoir",
-        "sample_per_user_event_cap", "graph_pagerank_event_flow",
-        "graph_triangle_parts",
-        # --- r01 greens.
-        "agg_corr_quantity_price",
-        "agg_count_distinct", "agg_cube_lineitem", "agg_rollup_revenue",
-        "agg_stats_orders", "dedup_connected_groups",
-        "dedup_exact_fingerprint",
-        "dedup_minhash_lsh_pairs", "dedup_ngram_jaccard_pairs",
-        "distinct_mktsegments",
-        "flagship_knn_cosine_topk",
-        "join_anti_no_urgent_orders", "join_asof_last_click_before_error",
-        "join_band_acctbal", "join_interval_error_click",
-        "join_left_outer_yoy_revenue", "join_semi_urgent_buyers",
-        "json_props_as_map", "json_props_extract", "predicate_pack_part",
-        "q1_pricing_summary", "q3_shipping_priority",
-        "q5_local_supplier_volume", "scalar_string_date_math",
-        "setop_bag_semantics", "setop_union_intersect_except",
-        "simsearch_batch_knn", "stream_dedup_first_event",
-        "stream_session_windows", "stream_sliding_window_avg",
-        "stream_static_enrichment", "stream_tumbling_window_counts",
-        "text_bpe_ish_token_count", "text_fingerprints",
-        "text_langid_confusion", "text_levenshtein_near_titles",
-        "text_quality_scores", "text_token_stats", "text_top_bigrams",
-        "topk_orders_by_price", "unpivot_event_totals_long",
-        "window_lag_lead_orders", "window_moving_avg_rows_frame",
-        "window_range_frame_value", "window_rank_family",
-        "window_trailing_hour_count",
-        # --- r04 greens (CORRECTNESS_r04.json; 50/50 green, 0 errors —
-        # including the pipeline_corpus_curation retry whose HUGEINT oracle
-        # fix is now driver-confirmed).
-        "agg_decimal_exact_money",
-        "dedup_containment_pairs",
-        "dedup_embedding_srp_lsh",
-        "dedup_incremental_lsh_near",
-        "dedup_lsh_quality_audit",
-        "dedup_semdedup_dropped",
-        "embedding_knn_hubness_audit",
-        "embedding_pca_power_iteration",
-        "events_cohort_ltv_curve",
-        "events_haar_wavelet_energy",
-        "events_holt_linear_trend",
-        "events_markov_absorption",
-        "events_markov_removal_attribution",
-        "events_markov_stationary",
-        "events_periodogram_dft",
-        "events_stl_strength",
-        "events_survival_km",
-        "graph_kcore_peeling",
-        "graph_lpa_communities",
-        "graph_scc_mutual_reachability",
-        "join_asof_bucketed_click_before_error",
-        "join_asof_tolerance_click_before_error",
-        "join_range_bucketed_incident_clicks",
-        "json_props_variant",
-        "multimodal_ahash_neardup_pairs",
-        "multimodal_crossmodal_stub_topk",
-        "pack_padding_waste_audit",
-        "pipeline_corpus_curation",
-        "pipeline_incremental_admission",
-        "sql_api_parameterized_query",
-        "sql_api_pipe_syntax",
-        "sql_api_recursive_reachability",
-        "sql_api_try_error_safe_parsing",
-        "stats_ab_test_welch",
-        "stats_benjamini_hochberg_fdr",
-        "stats_diff_in_diff",
-        "stats_gmm_em_one_step",
-        "stats_hill_tail_index",
-        "stats_ks_two_sample",
-        "stats_mann_whitney_u",
-        "stats_permutation_test_hashed",
-        "stats_poisson_bootstrap_ci",
-        "stats_propensity_match_att",
-        "stats_spearman_rank_corr",
-        "text_good_turing_unseen",
-        "text_textrank_keywords",
-        "udaf_arrow_source_stats",
-        "udtf_polymorphic_windows",
-        "udtf_table_argument_sessions",
-        # --- r05 greens (CORRECTNESS_r05.json; 50/50 green, 0 errors, all
-        # fresh names — the entire r4 selection pack plus the float-heaviest
-        # stats/simsearch/embedding backlog is now driver-certified).
-        "cluster_silhouette_audit",
-        "curriculum_quality_phases",
-        "dedup_bloom_prefilter_audit",
-        "dedup_cdc_chunk_report",
-        "dedup_cross_source_matrix",
-        "dedup_family_size_report",
-        "dedup_minhash_estimator_audit",
-        "dq_distinct_chao1_estimate",
-        "dq_orders_lineitem_reconciliation",
-        "dq_value_drift_psi",
-        "embedding_centroid_drift",
-        "embedding_isotropy_audit",
-        "embedding_label_alignment_matrix",
-        "embedding_norm_outlier_screen",
-        "embedding_ood_mahalanobis_diag",
-        "embedding_rptree_partition_audit",
-        "events_activity_streak_islands",
-        "events_autocorrelation_hourly",
-        "events_changepoint_cusum",
-        "events_piecewise_trend_knots",
-        "events_rolling_median",
-        "events_time_decay_attribution",
-        "features_hashing_collision_audit",
-        "graph_hits_hubs_authorities",
-        "graph_personalized_pagerank_error",
-        "hybrid_alpha_blend_curve",
-        "matryoshka_recall_audit",
-        "mix_doremi_proxy_reweight",
-        "pipeline_loso_source_influence",
-        "pipeline_quality_calibration_ece",
-        "pipeline_token_budget_allocator",
-        "sample_coreset_kcenter_greedy",
-        "sample_dsir_importance",
-        "sample_group_holdout_leakage_audit",
-        "simsearch_mmr_diversified",
-        "simsearch_pq_rerank_exact",
-        "simsearch_recall_nprobe_curve",
-        "simsearch_rocchio_feedback_topk",
-        "simsearch_srp_multiprobe_recall",
-        "sql_api_group_by_all",
-        "stats_anova_dow_effect",
-        "stats_bayes_ab_conversion",
-        "stats_key_skew_profiler",
-        "stats_power_analysis_mde",
-        "stats_theil_sen_slope",
-        "text_backoff_bigram_perplexity",
-        "text_heaps_law_fit",
-        "text_tokenizer_fertility_by_lang",
-        "text_winnowing_fingerprints",
-        "text_zipf_law_fit",
-        # --- r06 greens (CORRECTNESS_r06.json; 50/50 green, 0 errors, all
-        # fresh names — the float-trap window the r5 verdict ordered:
-        # profile datacard + events/timeseries tail + text + sample + the
-        # two percentile aggs).
-        "profile_corpus_datacard",
-        "events_winsorized_stats",
-        "events_rolling_beta_24h",
-        "events_gumbel_peak_analysis",
-        "events_mann_kendall_trend",
-        "events_seasonal_naive_backtest",
-        "events_volume_anomaly_weekday_adjusted",
-        "events_markov_entropy_rate",
-        "events_interarrival_burstiness",
-        "events_cross_correlation",
-        "events_linear_attribution",
-        "events_gap_interpolation",
-        "events_error_share_pchart",
-        "events_slo_burn_rate_alerts",
-        "events_revenue_drawdown",
-        "events_growth_accounting",
-        "events_dau_wau_mau_stickiness",
-        "events_bot_detection_screen",
-        "events_interval_coverage",
-        "events_incremental_rollup_merge",
-        "events_bitemporal_restatement",
-        "events_sessionization",
-        "events_fsm_conformance",
-        "events_window_funnel_depth",
-        "events_ohlc_bars",
-        "events_dow_hour_heatmap",
-        "text_doc_length_lognormal_fit",
-        "text_sif_information_density",
-        "text_umass_keyword_coherence",
-        "text_theil_length_inequality",
-        "text_term_burstiness",
-        "text_char_entropy_bound",
-        "text_corpus_drift_kl",
-        "text_yule_k_richness",
-        "text_watermark_greenlist_detect",
-        "text_ngram_novelty_split",
-        "text_bm25_prf_expansion",
-        "text_rake_keywords",
-        "text_bpe_merge_rounds",
-        "text_mojibake_screen",
-        "text_normalization_audit",
-        "sample_raking_calibration",
-        "sample_horvitz_thompson_total",
-        "sample_neyman_allocation",
-        "sample_pps_systematic",
-        "sample_method_bakeoff",
-        "sample_balanced_class_downsample",
-        "sample_epoch_shuffle",
-        "agg_weighted_percentile",
-        "agg_trimmed_mean_comparison",
-        # --- r07 greens (CORRECTNESS_r07.json; 50/50 green, 0 errors — the
-        # final 37 never-driver-checked names plus 13 stale re-certs,
-        # driving the never-certified backlog to zero).
-        "dq_benford_first_digit",
-        "dq_integrity_audit",
-        "dq_column_profile",
-        "dq_freshness_audit",
-        "dq_id_sequence_gaps",
-        "dq_functional_dependency_profile",
-        "orders_abc_pareto",
-        "orders_item_cf_similarity",
-        "orders_fulfillment_leadtime_sla",
-        "orders_tier_migration_matrix",
-        "orders_open_aging_buckets",
-        "orders_repurchase_interval",
-        "simsearch_filtered_topk",
-        "simsearch_index_staleness",
-        "simsearch_binary_hamming_topk",
-        "simsearch_range_radius",
-        "features_quantile_normalize",
-        "features_target_encoding",
-        "features_woe_iv",
-        "multimodal_frame_sample_plan",
-        "multimodal_scene_cut_stub",
-        "pipeline_label_agreement_kappa",
-        "pipeline_mix_entropy_shift",
-        "graph_link_prediction_jaccard",
-        "graph_degree_assortativity",
-        "window_ratio_to_report",
-        "window_distinct_trailing",
-        "dedup_url_canonical",
-        "stats_entropy_event_types",
-        "sql_api_lateral_topk_per_group",
-        "mix_waterfill_budget",
-        "scalar_array_serialization",
-        "agg_grouping_sets_custom",
-        "join_scd2_point_in_time",
-        "cluster_purity_nmi_vs_labels",
-        "lineitem_revenue_waterfall",
-        "train_triplet_margin_audit",
-        "stats_ab_test_welch",
-        "stats_power_analysis_mde",
-        "events_holt_linear_trend",
-        "events_time_weighted_avg_value",
-        "stats_gmm_em_one_step",
-        "text_heaps_law_fit",
-        "dq_value_drift_psi",
-        "dedup_bloom_prefilter_audit",
-        "events_revenue_drawdown",
-        "flagship_knn_cosine_topk",
-        "stats_propensity_match_att",
-        "q1_pricing_summary",
-        "agg_corr_quantity_price",
-        # --- r08 greens (CORRECTNESS_r08.json; 50/50 green, 0 errors — ALL
-        # 50 slots were stale RE-certifications of names already folded
-        # above (the r7-verdict-ordered burn of the 54 src/oracle-stale
-        # set, plus the two r8-edited fixes text_textrank_keywords /
-        # dedup_cross_source_matrix jumping the queue). No new names enter
-        # this set; the certification ROUNDS advance via the
-        # CORRECTNESS_r08.json artifact, which tools/stale_certs.py reads
-        # directly when computing latest-green rounds.
-        # --- r09 greens (CORRECTNESS_r09.json; 49/50 hash-green plus the
-        # rows-only-by-design agg_approx_sketches). Like r08, all 50 slots
-        # were stale RE-certifications of already-folded names (the r8
-        # verdict's src/oracle-stale front + r1/r2 helpers-only block);
-        # rounds advance via the artifact.
-    }
-)
-
-# Highest CORRECTNESS_r*.json round whose outcomes are folded into
-# _DRIVER_VERIFIED above. tools/next_window.py gates its wasted-slot policy
-# failure on rounds <= this constant: when a NEWER driver artifact lands
-# (e.g. CORRECTNESS_r06.json at the next round boundary), the rotation test
-# reports it as a pending fold (warning + instruction) instead of going red
-# with no code change (ADVICE r4, tests/test_registry_contract.py:78).
-_DRIVER_ROUNDS_FOLDED = 9
-
-
-# Previously driver-RED names: fixed this round, so they jump the fresh
-# queue — a fix must be re-verified before never-checked work.
-# r05: none — CORRECTNESS_r04.json is 50/50 green (the r3 red
-# pipeline_corpus_curation retried green and is folded above).
-_DRIVER_RETRY: tuple[str, ...] = ()
-
-# Round-10 window picks (r9 verdict item 9 / policy in tools/next_window.py):
-# r9's 50 green re-certifications are folded (rounds advance via
-# CORRECTNESS_r09.json; _DRIVER_ROUNDS_FOLDED = 9). This round's window
-# fronts the src/oracle-stale class oldest-certifying-round-first — which
-# is exactly the set of queries the r10 optimization pass EDITED (markov
-# shapes, curation/admission funnels, recursive-CTE view, winnowing/umass/
-# watermark/dsir/item-CF restructures, the graph/PQ operator users): an
-# edited query must be externally re-certified before older helpers-only
-# work. The remaining slots burn the helpers-only-stale backlog
-# oldest-first (r2 block — shared operators/ and functions/ helpers
-# drifted since those trees; all are green in this round's full sf0.01
-# differential, but the external gate exists to not take that on faith).
-# Matches `python tools/next_window.py --suggest` exactly.
+# The driver checks the first 50 registry entries each round: this window
+# first, then every other name in registration order.
+# Pasted from `python tools/next_window.py --suggest`.
 _DRIVER_PRIORITY = (
     "events_markov_absorption",  # src+helpers (r4)
     "events_markov_removal_attribution",  # src+helpers (r4)
@@ -531,198 +183,9 @@ _DRIVER_PRIORITY = (
     "simsearch_pq_adc_topk",  # helpers (r2)
 )
 
-# Fresh-but-deferred: queries REGISTERED in round 3 (every one locally
-# hash-matched by tools/check_oracle.py) plus two low-risk misc entries.
-# They yield their round-3 driver slots so the packs promised in the r2
-# verdict (q2–q22, timeseries, graph, pipeline) all fit the 50-entry
-# window; the deferred set rotates in next round.
-_DRIVER_DEFER = (
-    "join_asof_bucketed_click_before_error",
-    "join_range_bucketed_incident_clicks",
-    "matryoshka_recall_audit",
-    "curriculum_quality_phases",
-    "multimodal_frame_sample_plan",
-    "dedup_url_canonical",
-    "dq_benford_first_digit",
-    "simsearch_pq_rerank_exact",
-    "simsearch_filtered_topk",
-    "profile_corpus_datacard",
-    "sample_epoch_shuffle",
-    "stats_entropy_event_types",
-    "text_zipf_law_fit",
-    "dedup_containment_pairs",
-    "dedup_incremental_lsh_near",
-    "dedup_semdedup_dropped",
-    "dedup_embedding_srp_lsh",
-    "text_corpus_drift_kl",
-    "sql_api_recursive_reachability",
-    "sql_api_lateral_topk_per_group",
-    "sample_dsir_importance",
-    "events_linear_attribution",
-    "dedup_cross_source_matrix",
-    "features_quantile_normalize",
-    "events_sessionization",
-    "mix_waterfill_budget",
-    "pack_padding_waste_audit",
-    "simsearch_index_staleness",
-    "json_props_variant",
-    "events_winsorized_stats",
-    "text_normalization_audit",
-    "udtf_polymorphic_windows",
-    "udaf_arrow_source_stats",
-    "events_incremental_rollup_merge",
-    "embedding_centroid_drift",
-    "scalar_array_serialization",
-    "dq_integrity_audit",
-    # --- registered later in round 3 (locally hash-matched; rotate into the
-    # driver window in later rounds).
-    "events_autocorrelation_hourly",
-    "events_interval_coverage",
-    "events_rolling_median",
-    "events_changepoint_cusum",
-    "stats_key_skew_profiler",
-    "features_target_encoding",
-    "dedup_lsh_quality_audit",
-    "graph_lpa_communities",
-    "window_ratio_to_report",
-    "agg_grouping_sets_custom",
-    "orders_abc_pareto",
-    "cluster_silhouette_audit",
-    "simsearch_mmr_diversified",
-    "embedding_pca_power_iteration",
-    "dq_column_profile",
-    "text_mojibake_screen",
-    "dedup_cdc_chunk_report",
-    "simsearch_recall_nprobe_curve",
-    "sql_api_pipe_syntax",
-    "events_survival_km",
-    "window_distinct_trailing",
-    "events_markov_stationary",
-    "graph_link_prediction_jaccard",
-    "join_asof_tolerance_click_before_error",
-    "multimodal_crossmodal_stub_topk",
-    "udtf_table_argument_sessions",
-    "text_bpe_merge_rounds",
-    "stats_ab_test_welch",
-    "events_cross_correlation",
-    "features_woe_iv",
-    "pipeline_incremental_admission",
-    "events_bitemporal_restatement",
-    "join_scd2_point_in_time",
-    "events_gap_interpolation",
-    "embedding_norm_outlier_screen",
-    "sample_balanced_class_downsample",
-    "sql_api_parameterized_query",
-    "dedup_minhash_estimator_audit",
-    "graph_kcore_peeling",
-    "text_bm25_prf_expansion",
-    "events_dow_hour_heatmap",
-    "agg_decimal_exact_money",
-    "stats_ks_two_sample",
-    "dq_freshness_audit",
-    "stats_mann_whitney_u",
-    "stats_permutation_test_hashed",
-    "events_holt_linear_trend",
-    "text_good_turing_unseen",
-    "sample_pps_systematic",
-    "stats_propensity_match_att",
-    "stats_diff_in_diff",
-    "events_markov_absorption",
-    "simsearch_binary_hamming_topk",
-    "stats_poisson_bootstrap_ci",
-    "graph_scc_mutual_reachability",
-    "multimodal_ahash_neardup_pairs",
-    "text_rake_keywords",
-    "events_seasonal_naive_backtest",
-    "text_term_burstiness",
-    "stats_benjamini_hochberg_fdr",
-    "events_fsm_conformance",
-    "sample_neyman_allocation",
-    "text_textrank_keywords",
-    "orders_item_cf_similarity",
-    "graph_personalized_pagerank_error",
-    "events_markov_removal_attribution",
-    "text_yule_k_richness",
-    "events_periodogram_dft",
-    "events_ohlc_bars",
-    "events_markov_entropy_rate",
-    "events_cohort_ltv_curve",
-    "text_ngram_novelty_split",
-    "embedding_knn_hubness_audit",
-    "agg_weighted_percentile",
-    "dq_id_sequence_gaps",
-    "stats_spearman_rank_corr",
-    "events_gumbel_peak_analysis",
-    "embedding_isotropy_audit",
-    "simsearch_range_radius",
-    "events_interarrival_burstiness",
-    "pipeline_label_agreement_kappa",
-    "sample_horvitz_thompson_total",
-    "events_mann_kendall_trend",
-    "dq_functional_dependency_profile",
-    "dedup_family_size_report",
-    "stats_power_analysis_mde",
-    "dq_value_drift_psi",
-    "sample_raking_calibration",
-    "orders_fulfillment_leadtime_sla",
-    "events_dau_wau_mau_stickiness",
-    "events_haar_wavelet_energy",
-    "orders_tier_migration_matrix",
-    "events_rolling_beta_24h",
-    "dq_distinct_chao1_estimate",
-    "graph_degree_assortativity",
-    "text_theil_length_inequality",
-    "text_heaps_law_fit",
-    "events_bot_detection_screen",
-    "orders_open_aging_buckets",
-    "stats_anova_dow_effect",
-    "sql_api_try_error_safe_parsing",
-    "cluster_purity_nmi_vs_labels",
-    "events_stl_strength",
-    "text_watermark_greenlist_detect",
-    "stats_hill_tail_index",
-    "multimodal_scene_cut_stub",
-    "events_window_funnel_depth",
-    "lineitem_revenue_waterfall",
-    "text_umass_keyword_coherence",
-    "train_triplet_margin_audit",
-    "events_revenue_drawdown",
-    "pipeline_mix_entropy_shift",
-    "text_sif_information_density",
-    "orders_repurchase_interval",
-    "events_error_share_pchart",
-    "stats_gmm_em_one_step",
-    "sample_method_bakeoff",
-    "events_growth_accounting",
-    "events_slo_burn_rate_alerts",
-    "text_char_entropy_bound",
-    "events_volume_anomaly_weekday_adjusted",
-    "agg_trimmed_mean_comparison",
-    "text_doc_length_lognormal_fit",
-)
-
 
 def _rotate_registry() -> None:
-    retries = [n for n in _DRIVER_RETRY if n in QUERIES]
-    priority = [
-        n for n in _DRIVER_PRIORITY if n in QUERIES and n not in retries
-    ]
-    skip = {*retries, *priority}
-    defer = [
-        n
-        for n in _DRIVER_DEFER
-        if n in QUERIES and n not in skip and n not in _DRIVER_VERIFIED
-    ]
-    fresh = [
-        n
-        for n in QUERIES
-        if n not in skip and n not in _DRIVER_VERIFIED and n not in defer
-    ]
-    stale = [n for n in QUERIES if n not in skip and n in _DRIVER_VERIFIED]
-    ordered = {
-        n: QUERIES[n]
-        for n in [*retries, *priority, *fresh, *defer, *stale]
-    }
+    ordered = {n: QUERIES[n] for n in (*_DRIVER_PRIORITY, *QUERIES) if n in QUERIES}
     QUERIES.clear()
     QUERIES.update(ordered)
 

@@ -247,12 +247,21 @@ def enrich_with_customers(events: DataFrame, customers: DataFrame) -> DataFrame:
 def running_user_totals(events: DataFrame, timeout_minutes: int = 60) -> DataFrame:
     """T5: arbitrary stateful processing via applyInPandasWithState — a
     per-user running (count, sum) accumulator that emits an updated row per
-    micro-batch and expires idle users by processing-time timeout. This is
-    the custom-operator escape hatch when windowed aggs can't express the
-    state machine (the batch-twin equivalent is a plain groupBy sum).
+    micro-batch and expires a user once the event-time watermark passes
+    ``timeout_minutes`` after their last event. This is the custom-operator
+    escape hatch when windowed aggs can't express the state machine (the
+    batch-twin equivalent is a plain groupBy sum).
 
-    State layout: one (count, total) tuple per user_id — O(|users|), bounded
-    by the timeout. The shuffle key is user_id, same as the batch twin's.
+    The timeout is event time, not processing time: a processing-time
+    timeout makes Spark run another (no-data) micro-batch after every batch
+    to look for expiries, so an ``availableNow`` query never terminates.
+    An event-time timeout runs one more batch only when the watermark moves.
+    The watermark (delay = ``timeout_minutes``) also drops rows that arrive
+    later than that behind the newest event seen.
+
+    State layout: one (count, total) tuple per user_id — O(|active users|),
+    bounded by the timeout. The shuffle key is user_id, same as the batch
+    twin's.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
@@ -272,26 +281,38 @@ def running_user_totals(events: DataFrame, timeout_minutes: int = 60) -> DataFra
     state_schema = StructType(
         [StructField("n", LongType()), StructField("total", DoubleType())]
     )
+    timeout_ms = timeout_minutes * 60 * 1000
 
     def update(key, pdf_iter, state: "GroupState"):
         import pandas as pd
 
+        if state.hasTimedOut:
+            state.remove()
+            return
         n, total = state.get if state.exists else (0, 0.0)
+        last_ms = 0
         for pdf in pdf_iter:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
+            if len(pdf):
+                n += len(pdf)
+                total += float(pdf["value"].sum())
+                last_ms = max(last_ms, int(pdf["ts_ms"].max()))
         state.update((n, total))
-        state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+        state.setTimeoutTimestamp(last_ms + timeout_ms)
         yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return (
+        events.withWatermark("ts", f"{timeout_minutes} minutes")
+        .withColumn("ts_ms", F.unix_millis("ts"))
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 

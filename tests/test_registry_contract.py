@@ -86,6 +86,19 @@ def test_driver_window_rotation_policy():
     assert proc.returncode == 0, proc.stdout + proc.stderr
 
 
+def test_registry_order_is_window_then_registration_order():
+    """The driver checks the first 50 entries: they are exactly the
+    hand-picked _DRIVER_PRIORITY window, and every other name follows in
+    registration order. ORACLE is never reordered, so its keys carry the
+    registration order of every query with an oracle."""
+    from cobalt_duckdb_spark.queries import _DRIVER_PRIORITY
+
+    names = list(QUERIES)
+    assert names[:50] == list(_DRIVER_PRIORITY)
+    rest = [n for n in names[50:] if n in ORACLE]
+    assert rest == [n for n in ORACLE if n not in _DRIVER_PRIORITY]
+
+
 def test_round_close_seed_hygiene():
     """tools/round_close.py's redraw stage (r5 verdict item 5b) must pick
     never-used seeds: round-derived (deterministic, no builder diligence),

@@ -117,17 +117,45 @@ def test_latest_green_round_reads_all_artifacts():
     assert greens.get("flagship_knn_cosine_topk", 0) >= 1
 
 
+def test_classify_agrees_with_latest_green_round():
+    """The one CORRECTNESS-row classifier, applied to the raw artifacts,
+    yields exactly latest_green_round() (each name's newest green or
+    rows-only round) and driver_history() (each name's newest outcome)."""
+    import glob
+    import re
+
+    from stale_certs import GREEN, classify, driver_history, latest_green_round
+
+    newest: dict[str, tuple[int, str]] = {}
+    green: dict[str, int] = {}
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for name, rec in json.load(f).items():
+                outcome = classify(rec)
+                assert outcome in ("green", "rows_only", "red", "error")
+                if rnd >= newest.get(name, (-1, ""))[0]:
+                    newest[name] = (rnd, outcome)
+                if outcome in GREEN:
+                    green[name] = max(rnd, green.get(name, -1))
+    assert newest and green
+    assert driver_history() == newest
+    assert latest_green_round() == green
+
+
 def test_driver_priority_all_recerts_after_backlog_zero():
     """The r8 window contract: the never-certified backlog hit zero in r7,
     so every slot is a re-certification of an already-verified name (the
-    stale-cert burn-down the r7 verdict ordered) — 50 unique names, all in
-    _DRIVER_VERIFIED."""
+    stale-cert burn-down the r7 verdict ordered) — 50 unique names, all
+    green (or rows-only) in the committed CORRECTNESS artifacts."""
     sys.path.insert(0, REPO)
-    from cobalt_duckdb_spark.queries import _DRIVER_PRIORITY, _DRIVER_VERIFIED
+    from cobalt_duckdb_spark.queries import _DRIVER_PRIORITY
+    from stale_certs import latest_green_round
 
+    verified = latest_green_round()
     assert len(_DRIVER_PRIORITY) == 50
     assert len(set(_DRIVER_PRIORITY)) == 50
-    not_verified = [n for n in _DRIVER_PRIORITY if n not in _DRIVER_VERIFIED]
+    not_verified = [n for n in _DRIVER_PRIORITY if n not in verified]
     assert not_verified == [], (
         f"window slot holds a never-verified name {not_verified} — with "
         "backlog zero every slot must be a re-cert"

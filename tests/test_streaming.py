@@ -24,6 +24,16 @@ def events_stream_dir(tmp_path_factory, sf_dir):
     return str(d)
 
 
+def _await(q, timeout=120):
+    """Wait for an availableNow query to finish on its own: a query that is
+    still running after ``timeout`` seconds fails the test instead of
+    passing slowly, and the query is stopped either way."""
+    try:
+        assert q.awaitTermination(timeout), f"query still active after {timeout}s"
+    finally:
+        q.stop()
+
+
 def _run_to_memory(spark, stream_df, name, mode="append"):
     q = (
         stream_df.writeStream.format("memory")
@@ -32,7 +42,7 @@ def _run_to_memory(spark, stream_df, name, mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await(q)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -147,7 +157,7 @@ def test_foreach_batch_sink(spark, events_stream_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await(q)
     landed = spark.read.parquet(out_dir)
     want = tumbling_counts(load_table(spark, SF_DIR, "events")).count()
     assert landed.count() == want
@@ -308,7 +318,7 @@ def test_stream_topk_types_foreachbatch(spark, sf_dir, events_stream_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await(q)
     # complete mode: the LAST batch holds the full counts; ranks from it are
     # final. Keep only the final batch's rows (sink accumulates per batch —
     # rebuild from the last full snapshot).
@@ -343,7 +353,7 @@ def test_stream_checkpoint_restart_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await(q)
 
     run_once()
     first = spark.read.parquet(out)
@@ -375,7 +385,7 @@ def test_latest_state_upsert_foreachbatch(spark, tmp_path):
     _append_events(spark, src, [(1, 0, 1, "signup"), (2, 5, 2, "signup"),
                                 (3, 10, 1, "click")])
     q = latest_state_upsert(read_events_stream(spark, src), state, ckpt)
-    q.awaitTermination(120)
+    _await(q)
 
     s1 = {r["user_id"]: r["event_type"]
           for r in read_latest_state(spark, state).collect()}
@@ -384,7 +394,7 @@ def test_latest_state_upsert_foreachbatch(spark, tmp_path):
     # second growth: user 2 advances, user 3 appears; restart from checkpoint
     _append_events(spark, src, [(4, 20, 2, "purchase"), (5, 25, 3, "view")])
     q = latest_state_upsert(read_events_stream(spark, src), state, ckpt)
-    q.awaitTermination(120)
+    _await(q)
 
     got = read_latest_state(spark, state)
     s2 = {r["user_id"]: r["event_type"] for r in got.collect()}
@@ -499,7 +509,7 @@ def test_scd2_history_upsert_foreachbatch(spark, tmp_path):
         [(1, 0, 1, "signup"), (2, 5, 2, "signup"), (3, 10, 1, "click")],
     )
     q = scd2_history_upsert(read_events_stream(spark, src), state, ckpt)
-    q.awaitTermination(120)
+    _await(q)
     h1 = read_latest_state(spark, state)
     rows1 = {
         (r["user_id"], r["version"]): (r["state"], r["valid_to"] is None)
@@ -514,7 +524,7 @@ def test_scd2_history_upsert_foreachbatch(spark, tmp_path):
     # growth touches ONLY user 2 (click then purchase); user 1 untouched
     _append_events(spark, src, [(4, 20, 2, "click"), (5, 25, 2, "purchase")])
     q = scd2_history_upsert(read_events_stream(spark, src), state, ckpt)
-    q.awaitTermination(120)
+    _await(q)
     h2 = read_latest_state(spark, state)
     rows2 = {
         (r["user_id"], r["version"]): (r["state"], r["valid_to"] is None)
@@ -562,7 +572,7 @@ def test_streaming_composed_pipeline_matches_batch(spark, sf_dir, events_stream_
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await(q)
     got = {
         (r["user_id"], r["start"], r["n"], r["v"])
         for r in spark.sql("SELECT * FROM t_composed").collect()
@@ -668,7 +678,7 @@ def test_arbitrary_state_survives_restart_rocksdb(spark, tmp_path):
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            _await(q)
 
     _append_events(spark, src, [(1, 0, 1, "click"), (2, 5, 1, "view"),
                                 (3, 8, 2, "click")])
@@ -709,7 +719,7 @@ def test_tws_dedup_state_survives_restart(spark, tmp_path):
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            _await(q)
 
     run_once()
     assert spark.read.parquet(out).count() == 2

@@ -4,9 +4,11 @@ With 300+ registry entries and a 50-slot driver gate per round, the window
 choice is the scarcest external-verification resource. This tool keeps the
 rotation honest mechanically instead of by builder diligence:
 
-- Reads every CORRECTNESS_r*.json in the repo root (the driver's per-round
-  gate records) and classifies each name's LATEST driver outcome:
-  green / red / error / never-checked.
+- Reads every committed CORRECTNESS_r*.json in the repo root (the driver's
+  per-round gate records, classified by ``stale_certs.classify``) and takes
+  each name's LATEST driver outcome: green / rows_only / red / error /
+  never-checked. The artifacts are the only certification state: a new
+  round counts as soon as its artifact is committed.
 - Loads the registry (post-rotation) and prints the ACTUAL next window
   (first 50 entries) annotated with that history, plus a policy check:
   * every latest-red name must be inside the window (retries first),
@@ -25,7 +27,8 @@ src/oracle surface changed (riskiest class — round 7's live bug was one),
 oldest certifying round first, (3) helpers-only-stale names oldest-first,
 (4) spare slots re-certify the OLDEST still-fresh greens so no
 certification ages unboundedly. ``--suggest`` prints a paste-ready
-``_DRIVER_PRIORITY`` tuple computed under that policy; the summary reports
+``_DRIVER_PRIORITY`` tuple computed under that policy (the one hand-kept
+ordering decision in ``queries/__init__.py``); the summary reports
 ``oldest_cert_round`` so aging is visible per-round.
 
 Usage: python tools/next_window.py [--json] [--suggest]
@@ -33,7 +36,6 @@ Usage: python tools/next_window.py [--json] [--suggest]
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
@@ -50,60 +52,17 @@ ROWS_ONLY_TERMINAL = frozenset(
 )
 
 
-def driver_history(max_round: int | None = None) -> dict[str, tuple[int, str]]:
-    """{name: (round, outcome)} with the LATEST driver outcome per name;
-    outcome in {'green', 'red', 'error'}. ``max_round`` limits to rounds the
-    registry has already folded (see _DRIVER_ROUNDS_FOLDED)."""
-    hist: dict[str, tuple[int, str]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int("".join(ch for ch in os.path.basename(path) if ch.isdigit()))
-        if max_round is not None and rnd > max_round:
-            continue
-        with open(path) as f:
-            rows = json.load(f)
-        for name, rec in rows.items():
-            if rec.get("err") == "no_oracle" and rec.get("spark_rows", 0) >= 0:
-                # rows-only entry that RAN (driver records err='no_oracle'):
-                # the weaker gate passed — terminal signal for exempt names
-                outcome = "rows_only"
-            elif rec.get("err"):
-                outcome = "error"
-            elif (
-                rec.get("rows_match")
-                and rec.get("schema_match", True)
-                and rec.get("hash_match", True)
-            ):
-                outcome = "green"
-            else:
-                outcome = "red"
-            if name not in hist or rnd >= hist[name][0]:
-                hist[name] = (rnd, outcome)
-    return hist
-
-
 def main() -> int:
     sys.path.insert(0, REPO)
-    from cobalt_duckdb_spark.queries import _DRIVER_ROUNDS_FOLDED, queries
+    from cobalt_duckdb_spark.queries import queries
+    from stale_certs import GREEN, compute_stale, driver_history
 
-    # Full history drives the retry rule (a red from ANY round must be in
-    # the window); the wasted-slot rule is gated on rounds the registry has
-    # folded, so a brand-new CORRECTNESS artifact at a round boundary shows
-    # as a pending fold instead of failing CI before the rotation commit
-    # (ADVICE r4).
     hist = driver_history()
-    folded_hist = driver_history(max_round=_DRIVER_ROUNDS_FOLDED)
-    pending_rounds = sorted({r for _, (r, _) in hist.items() if r > _DRIVER_ROUNDS_FOLDED})
     names = list(queries())
-    window, rest = names[:WINDOW], names[WINDOW:]
+    window = names[:WINDOW]
 
     problems: list[str] = []
     warnings: list[str] = []
-    if pending_rounds:
-        warnings.append(
-            f"driver rounds {pending_rounds} not yet folded into "
-            "_DRIVER_VERIFIED (bump _DRIVER_ROUNDS_FOLDED after folding); "
-            "wasted-slot policy evaluated against folded rounds only"
-        )
     flagship_green = FLAGSHIP in {
         n for n, (_, o) in hist.items() if o == "green"
     }
@@ -122,15 +81,13 @@ def main() -> int:
     if missing_retries:
         problems.append(f"latest-red names outside window: {sorted(missing_retries)}")
 
-    never = [n for n in names if n not in folded_hist]
-    green = {n for n, (_, o) in folded_hist.items() if o in ("green", "rows_only")}
+    never = [n for n in names if n not in hist]
+    green = {n for n, (_, o) in hist.items() if o in GREEN}
     # Modified-since-certification detection (r6 verdict item 2): a green
     # name whose function source or oracle SQL changed AFTER its certifying
     # round's tree is STALE — re-windowing it is a legitimate re-cert, not a
     # wasted slot. Guarded: the git-worktree machinery needs a full clone.
     try:
-        from stale_certs import compute_stale
-
         stale_map = compute_stale()
     except Exception as exc:  # pragma: no cover - degraded env
         stale_map = {}
@@ -151,33 +108,20 @@ def main() -> int:
     # non-stale name should go to the OLDEST certification. Warning, not
     # failure — membership is the hard policy, ordering is guidance.
     if wasted:
-        fresh_green_rounds = sorted(
-            r for n, (r, o) in folded_hist.items()
-            if o in ("green", "rows_only")
-            and n in names and n not in stale_map
-            and n not in ROWS_ONLY_TERMINAL
+        oldest_outside = min(
+            (r for n, (r, o) in hist.items()
+             if o in GREEN and n in names
+             and n not in stale_map and n not in ROWS_ONLY_TERMINAL
+             and n not in window),
+            default=None,
         )
-        if fresh_green_rounds:
-            oldest_outside = min(
-                (r for n, (r, o) in folded_hist.items()
-                 if o in ("green", "rows_only") and n in names
-                 and n not in stale_map and n not in ROWS_ONLY_TERMINAL
-                 and n not in window),
-                default=None,
+        newest_inside = max((hist[n][0] for n in wasted if n in hist), default=0)
+        if oldest_outside is not None and newest_inside > oldest_outside:
+            warnings.append(
+                "spare re-cert slots are not oldest-first: window holds "
+                f"a r{newest_inside} green while a r{oldest_outside} green "
+                "waits outside"
             )
-            in_window_rounds = [
-                folded_hist[n][0] for n in wasted if n in folded_hist
-            ]
-            if (
-                oldest_outside is not None
-                and in_window_rounds
-                and max(in_window_rounds) > oldest_outside
-            ):
-                warnings.append(
-                    "spare re-cert slots are not oldest-first: window holds "
-                    f"a r{max(in_window_rounds)} green while a r"
-                    f"{oldest_outside} green waits outside"
-                )
 
     # Oldest-first re-cert policy (r7 verdict item 5): with the
     # never-checked backlog at zero, spare slots re-certify the OLDEST
@@ -185,8 +129,8 @@ def main() -> int:
     # retries, then src/oracle-stale oldest-first (the riskiest class),
     # then helpers-only-stale oldest-first, then oldest greens.
     green_round: dict[str, int] = {
-        n: r for n, (r, o) in folded_hist.items()
-        if o in ("green", "rows_only") and n in names
+        n: r for n, (r, o) in hist.items()
+        if o in GREEN and n in names
     }
     retry_slots = sorted(latest_red)
     stale_src = sorted(
@@ -211,7 +155,7 @@ def main() -> int:
     # 50-unique registry test catches it only after the window is pasted
     # (ADVICE r8). Retries win (earliest tier keeps the slot).
     suggested = list(dict.fromkeys([
-        *retry_slots, *[n for n in names if n not in folded_hist],
+        *retry_slots, *[n for n in names if n not in hist],
         *stale_src, *stale_helpers, *oldest_greens,
     ]))[:WINDOW]
     oldest_cert_round = min(green_round.values()) if green_round else None
@@ -241,16 +185,15 @@ def main() -> int:
             "driver_green": len(green),
             "latest_red": sorted(latest_red),
             "never_checked": len(never),
-            "fresh_in_window": sum(1 for n in window if n not in folded_hist),
+            "fresh_in_window": sum(1 for n in window if n not in hist),
             "remaining_after_this_window": max(
-                0, len(never) - sum(1 for n in window if n not in folded_hist)
+                0, len(never) - sum(1 for n in window if n not in hist)
             ),
             "stale_certs": len(stale_map),
             "stale_src_oracle": len(stale_src),
             "stale_helpers_only": len(stale_helpers),
             "stale_in_window": sum(1 for n in window if n in stale_map),
             "oldest_cert_round": oldest_cert_round,
-            "pending_unfolded_rounds": pending_rounds,
         },
         "suggested_window": suggested,
         "problems": problems,
@@ -263,7 +206,7 @@ def main() -> int:
                 "retry" if n in latest_red
                 else stale_map[n]["why"] + f" (r{stale_map[n]['round']})"
                 if n in stale_map
-                else "fresh" if n not in folded_hist
+                else "fresh" if n not in hist
                 else f"oldest green (r{green_round.get(n)})"
             )
             print(f'    "{n}",  # {tag}')

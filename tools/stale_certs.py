@@ -2,8 +2,8 @@
 
 A driver certification (CORRECTNESS_rN.json green) binds to the TREE the
 driver ran, not to the name: rewriting a query after its certifying round
-leaves the name in ``_DRIVER_VERIFIED`` while the code the driver actually
-hashed no longer exists. Round 6 did exactly that to 8+ queries (the
+leaves the name certified while the code the driver actually hashed no
+longer exists. Round 6 did exactly that to 8+ queries (the
 divergence-class rewrites), and the judge flagged the gap. This tool makes
 staleness mechanical instead of a judge spot-check:
 
@@ -11,9 +11,9 @@ staleness mechanical instead of a judge spot-check:
   driver's ``round N: verdict/advice/correctness/bench`` commit (the driver
   runs the gate on the builder's final tree, then commits the artifacts on
   top — judge-verified mtime ordering, VERDICT r6).
-- For every ``_DRIVER_VERIFIED`` name, finds its latest GREEN round from the
-  CORRECTNESS artifacts, materializes that round's certified commit in a
-  temp ``git worktree``, and dumps ``inspect.getsource(fn)`` + the oracle
+- For every name the CORRECTNESS artifacts record as green (or rows-only),
+  takes its latest green round, materializes that round's certified commit
+  in a temp ``git worktree``, and dumps ``inspect.getsource(fn)`` + the oracle
   SQL string from a subprocess importing THAT tree.
 - A name is STALE when its function source, its oracle SQL, or the digest
   of its transitive package-helper closure (``tools/closure_hash.py`` —
@@ -26,12 +26,19 @@ staleness mechanical instead of a judge spot-check:
 Dumps are cached per commit hash (immutable trees) under
 ``.stale_cache/`` (gitignored).
 
+The committed CORRECTNESS_r*.json artifacts are the only record of driver
+outcomes: ``classify`` is the one rule that turns a row into green /
+rows_only / red / error, and ``driver_history`` / ``latest_green_round``
+(also used by ``next_window.py``) are both built on it, so a new artifact
+counts as soon as it is committed.
+
 Usage: python tools/stale_certs.py [--json]
 Library: ``compute_stale() -> dict[name, {round, commit, why}]``.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -95,29 +102,46 @@ def certified_commits() -> dict[int, str]:
     return out
 
 
+GREEN = ("green", "rows_only")
+
+
+def classify(rec: dict) -> str:
+    """Outcome of one CORRECTNESS_r*.json row: 'green', 'rows_only' (an
+    oracle-less query that ran; the driver records err='no_oracle'),
+    'error' or 'red'."""
+    if rec.get("err") == "no_oracle" and rec.get("spark_rows", 0) >= 0:
+        return "rows_only"
+    if rec.get("err"):
+        return "error"
+    if (
+        rec.get("rows_match")
+        and rec.get("schema_match", True)
+        and rec.get("hash_match", True)
+    ):
+        return "green"
+    return "red"
+
+
+def driver_rows() -> list[tuple[int, str, str]]:
+    """(round, name, outcome) for every row of every committed
+    CORRECTNESS_r*.json, oldest round first."""
+    rows = []
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path)).group(1))
+        with open(path) as f:
+            rows += [(rnd, name, classify(rec)) for name, rec in json.load(f).items()]
+    return sorted(rows)
+
+
+def driver_history() -> dict[str, tuple[int, str]]:
+    """{name: (round, outcome)} with each name's LATEST driver outcome."""
+    return {name: (rnd, outcome) for rnd, name, outcome in driver_rows()}
+
+
 def latest_green_round() -> dict[str, int]:
     """{name: round} with each name's most recent green (or rows-only)
     driver certification."""
-    import glob
-
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()))
-        with open(path) as f:
-            rows = json.load(f)
-        for name, rec in rows.items():
-            ok = (
-                rec.get("err") == "no_oracle"
-                or (
-                    not rec.get("err")
-                    and rec.get("rows_match")
-                    and rec.get("schema_match", True)
-                    and rec.get("hash_match", True)
-                )
-            )
-            if ok and rnd >= latest.get(name, -1):
-                latest[name] = rnd
-    return latest
+    return {name: rnd for rnd, name, outcome in driver_rows() if outcome in GREEN}
 
 
 def _dump_at_commit(commit: str) -> dict[str, dict[str, str]]:
@@ -192,14 +216,10 @@ def _dump_head() -> dict[str, dict[str, str]]:
 def compute_stale(verified: set[str] | None = None) -> dict[str, dict]:
     """{name: {round, commit, why}} for every certified name whose function
     source or oracle SQL has changed since its certifying round's tree."""
-    if verified is None:
-        sys.path.insert(0, REPO)
-        from cobalt_duckdb_spark.queries import _DRIVER_VERIFIED
-
-        verified = set(_DRIVER_VERIFIED)
-
     commits = certified_commits()
     greens = latest_green_round()
+    if verified is None:
+        verified = set(greens)
     head = _dump_head()
     stale: dict[str, dict] = {}
     by_round: dict[int, list[str]] = {}
