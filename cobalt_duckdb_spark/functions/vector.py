@@ -64,17 +64,6 @@ def l2_normalize(a: Column | str) -> Column:
     return F.when(n != 0.0, F.transform(a, lambda x: x / n))
 
 
-def euclidean_distance(a: Column | str, b: Column | str) -> Column:
-    a, b = _as_double_array(a), _as_double_array(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Arrow/NumPy fast path — same semantics, vectorized per batch. Use when the
 # vector is wide enough that per-element codegen loses to SIMD (>~256 dims).

@@ -195,10 +195,6 @@ def load_table(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` queries mirror the
     oracle's pre-registered DuckDB views."""

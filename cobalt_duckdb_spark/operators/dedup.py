@@ -215,21 +215,6 @@ def shingle_hashes(
     )
 
 
-def minhash_signature(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Per-doc MinHash signature: explode shingles, one 32-bit token hash per
-    shingle, then 32 per-permutation MINs in a single hash aggregate."""
-    exploded = shingle_hashes(docs, id_col, text_col, n).withColumnRenamed("h", "x")
-    aggs = [
-        F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
-            f"sig{i}"
-        )
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,

@@ -299,20 +299,17 @@ def asof_join_bucketed(
 
     # (2) spine: one row per distinct (key, bucket) seen on either side,
     #     annotated with that bucket's boundary right row (if any):
-    #     last for backward carry, first for forward carry
-    bt_agg = F.min("_t") if fwd else F.max("_t")
+    #     last for backward carry, first for forward carry — one aggregate
+    #     over the union, where only right rows carry an ordering time
+    #     (min_by/max_by skip NULL orderings)
+    bt_agg = F.min if fwd else F.max
     bv_agg = F.min_by if fwd else F.max_by
-    last_per_bucket = r_side.groupBy("_k", "_b").agg(
-        bt_agg.alias("_bt"),
+    spine = unioned.groupBy("_k", "_b").agg(
+        bt_agg(r_marker).alias("_bt"),
         *[
-            bv_agg(f"_rv_{c}", "_t").alias(f"_bv_{c}")  # (key,time) unique
+            bv_agg(f"_rv_{c}", r_marker).alias(f"_bv_{c}")  # (key,time) unique
             for c in right_values
         ],
-    )
-    spine = (
-        unioned.select("_k", "_b")
-        .distinct()
-        .join(last_per_bucket, ["_k", "_b"], "left")
     )
 
     # (3) carry-in per (key, bucket): boundary right row of any EARLIER

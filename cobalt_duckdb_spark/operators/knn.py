@@ -25,47 +25,10 @@ window top-k.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.vector import cosine_distance
-
-
-def knn_topk(
-    embeddings: DataFrame,
-    documents: DataFrame,
-    query_vec: Column,
-    k: int = 10,
-    id_col: str = "vec_id",
-    doc_id_col: str = "doc_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Flagship query: cosine top-k over ``embeddings`` joined to ``documents``.
-
-    ``query_vec`` is a Column (usually a literal array or a scalar-subquery
-    style 1-row broadcast). Returns (rank, doc_id, text, distance) ordered by
-    rank; distance rounded for cross-engine comparability.
-    """
-    scored = embeddings.select(
-        F.col(id_col),
-        cosine_distance(F.col("embedding"), query_vec).alias("_dist"),
-    )
-    # TakeOrderedAndProject: per-partition heaps, k-row merge on the driver.
-    topk = scored.orderBy(F.asc("_dist"), F.asc(id_col)).limit(k)
-
-    w = Window.orderBy(F.asc("_dist"), F.asc(id_col))
-    dist = F.round("_dist", round_to) if round_to is not None else F.col("_dist")
-    return (
-        F.broadcast(topk)
-        .join(documents, topk[id_col] == documents[doc_id_col], "inner")
-        .select(
-            F.row_number().over(w).cast("bigint").alias("rank"),
-            F.col(doc_id_col),
-            F.col("text"),
-            dist.alias("distance"),
-        )
-        .orderBy("rank")
-    )
 
 
 def knn_topk_broadcast_query(
@@ -78,11 +41,14 @@ def knn_topk_broadcast_query(
     query_vec_col: str = "query_vec",
     round_to: int | None = 6,
 ) -> DataFrame:
-    """``knn_topk`` with the query vector supplied as a 1-row DataFrame and
+    """Flagship query: cosine top-k over ``embeddings`` joined to
+    ``documents``, with the query vector supplied as a 1-row DataFrame and
     broadcast into the scoring scan — one job end-to-end, no driver
     round-trip (the reference inlines the vector as a SQL literal,
     ``vector.py:176``; a broadcast join is the Spark-native equivalent and
-    composes when query vectors live in a table)."""
+    composes when query vectors live in a table). Returns (rank, doc_id,
+    text, distance) ordered by rank; distance rounded for cross-engine
+    comparability."""
     q = F.broadcast(query.select(F.col(query_vec_col)))
     scored = embeddings.crossJoin(q).select(
         F.col(id_col),

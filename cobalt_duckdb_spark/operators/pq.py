@@ -98,7 +98,8 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, sub, code): nearest centroid per subspace (L2², tie → lowest
-    cid).
+    cid); any other non-vector columns of ``embeddings`` (e.g. an IVF cell)
+    ride along on every code row.
 
     Genuinely map-only: codebooks pack to M broadcast rows of per-subspace
     (cid, cvec) struct arrays; the per-(vector, sub) argmin is ``array_min``
@@ -117,10 +118,11 @@ def pq_encode(
             lambda c: F.struct(_l2sq(sub_v, c["cvec"]).alias("d"), c["cid"].alias("cid")),
         )
     )
+    keep = [c for c in embeddings.columns if c != vec_col]
     return (
-        embeddings.select(F.col(id_col), v.alias("v"))
+        embeddings.select(*keep, v.alias("v"))
         .crossJoin(F.broadcast(packed))
-        .select(id_col, "sub", best["cid"].alias("code"))
+        .select(*keep, "sub", best["cid"].alias("code"))
     )
 
 
@@ -198,45 +200,54 @@ def ivfpq_adc_topk(
     Scale shape: both codebooks broadcast; cell assignment + PQ encode are
     one-time map-only ingest jobs (lake layout: partition by cell, codes as
     an M-byte BINARY column → every query is a partition-pruned scan of
-    compressed codes). Search = candidates ⋈ codes ⋈ broadcast LUT + one
+    compressed codes). Search = codes ⋈ broadcast LUT whose rows carry the
+    query's probed cells (probing is a filter, codes never shuffle) + one
     partial-aggregated sum per (query, vec) + per-query top-k window."""
+    from cobalt_duckdb_spark.functions.vector import cosine_distance
     from cobalt_duckdb_spark.operators.similarity import ivf_assign, make_centroids
 
     centroids = make_centroids(embeddings, num_centroids, id_col)
-    cells = ivf_assign(embeddings, centroids, id_col).select(id_col, "cell")
-
     books = pq_codebooks(embeddings, m, dsub, ksub, id_col)
-    codes = pq_encode(embeddings, books, m, dsub, id_col)
-
-    from cobalt_duckdb_spark.functions.vector import cosine_distance
-
-    qscored = queries.crossJoin(F.broadcast(centroids)).select(
-        F.col(query_id_col),
-        F.col(query_vec_col),
-        F.col("centroid_id"),
-        cosine_distance(F.col(query_vec_col), F.col("centroid_vec")).alias("_cd"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(F.asc("_cd"), F.asc("centroid_id"))
-    probes = (
-        qscored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select(query_id_col, F.col("centroid_id").alias("cell"))
+    codes = pq_encode(
+        ivf_assign(embeddings, centroids, id_col), books, m, dsub, id_col
     )
 
-    qv = F.col(query_vec_col).cast("array<double>")
-    lut = queries.select(F.col(query_id_col), qv.alias("qv")).crossJoin(
-        F.broadcast(books)
-    ).select(
-        query_id_col,
-        "sub",
-        F.col("cid").alias("code"),
-        _l2sq(F.slice("qv", F.col("sub") * dsub + 1, dsub), F.col("cvec")).alias("pd"),
+    # per query: the nprobe nearest cells (cosine, tie → lowest centroid
+    # id — lexicographic struct order), then its LUT rows
+    packed = centroids.groupBy().agg(
+        F.collect_list(
+            F.struct(F.col("centroid_id").alias("cid"), F.col("centroid_vec").alias("cvec"))
+        ).alias("cents")
+    )
+    nearest = F.array_sort(
+        F.transform(
+            "cents",
+            lambda c: F.struct(
+                cosine_distance(F.col(query_vec_col), c["cvec"]).alias("d"),
+                c["cid"].alias("cid"),
+            ),
+        )
+    )
+    lut = (
+        queries.crossJoin(F.broadcast(packed))
+        .select(
+            F.col(query_id_col),
+            F.col(query_vec_col).cast("array<double>").alias("qv"),
+            F.slice(nearest, 1, nprobe)["cid"].alias("probes"),
+        )
+        .crossJoin(F.broadcast(books))
+        .select(
+            query_id_col,
+            "probes",
+            "sub",
+            F.col("cid").alias("code"),
+            _l2sq(F.slice("qv", F.col("sub") * dsub + 1, dsub), F.col("cvec")).alias("pd"),
+        )
     )
 
-    candidates = cells.join(F.broadcast(probes), "cell").select(query_id_col, id_col)
     scored = (
-        codes.join(candidates, id_col)
-        .join(F.broadcast(lut), [query_id_col, "sub", "code"])
+        codes.join(F.broadcast(lut), ["sub", "code"])
+        .filter(F.array_contains("probes", F.col("cell")))
         .groupBy(query_id_col, id_col)
         .agg(F.round(F.sum("pd"), round_to).alias("adc_distance"))
     )
@@ -428,17 +439,14 @@ def write_ivfpq_index(
 
     centroids = make_centroids(embeddings, num_centroids, id_col)
     books = pq_codebooks(embeddings, m, dsub, ksub, id_col)
-    cells = ivf_assign(embeddings, centroids, id_col).select(id_col, "cell")
-    codes = pq_encode(embeddings, books, m, dsub, id_col)
-    packed = codes.groupBy(id_col).agg(
+    codes = pq_encode(ivf_assign(embeddings, centroids, id_col), books, m, dsub, id_col)
+    packed = codes.groupBy(id_col, "cell").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub", "code"))),
             lambda s: s["code"].cast("tinyint"),
         ).alias("codes")
     )
-    packed.join(cells, id_col).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
+    packed.write.mode("overwrite").partitionBy("cell").parquet(path)
     return centroids, books
 
 

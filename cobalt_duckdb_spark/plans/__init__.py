@@ -64,14 +64,3 @@ def assert_no_cartesian(df: DataFrame) -> None:
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan, f"unplanned cartesian product:\n{plan}"
 
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans — wider/fewer is better (more ops
-    fused into single generated loops)."""
-    plan = formatted_plan(df)
-    ids = {
-        ln.split("(")[-1].rstrip(")")
-        for ln in plan.splitlines()
-        if "WholeStageCodegen" in ln
-    }
-    return len(ids)

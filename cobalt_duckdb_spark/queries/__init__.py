@@ -131,56 +131,56 @@ _load_all_modules()
 # first, then every other name in registration order.
 # Pasted from `python tools/next_window.py --suggest`.
 _DRIVER_PRIORITY = (
-    "events_markov_absorption",  # src+helpers (r4)
-    "events_markov_removal_attribution",  # src+helpers (r4)
-    "graph_kcore_peeling",  # src+helpers (r4)
-    "graph_lpa_communities",  # src+helpers (r4)
-    "pipeline_corpus_curation",  # src+helpers (r4)
-    "pipeline_incremental_admission",  # src+helpers (r4)
-    "sql_api_recursive_reachability",  # src+helpers (r4)
-    "stats_permutation_test_hashed",  # src+helpers (r4)
-    "graph_hits_hubs_authorities",  # src+helpers (r5)
-    "pipeline_token_budget_allocator",  # src+helpers (r5)
-    "sample_dsir_importance",  # src+helpers (r5)
-    "simsearch_recall_nprobe_curve",  # src+helpers (r5)
-    "text_winnowing_fingerprints",  # src+helpers (r5)
-    "text_umass_keyword_coherence",  # src+helpers (r6)
-    "text_watermark_greenlist_detect",  # src+helpers (r6)
-    "cluster_purity_nmi_vs_labels",  # src+helpers (r7)
-    "graph_link_prediction_jaccard",  # src+helpers (r7)
-    "orders_item_cf_similarity",  # src+helpers (r7)
-    "train_triplet_margin_audit",  # src+helpers (r7)
-    "cluster_silhouette_audit",  # src+helpers (r8)
-    "embedding_isotropy_audit",  # src+helpers (r8)
-    "embedding_knn_hubness_audit",  # src+helpers (r8)
-    "embedding_pca_power_iteration",  # src+helpers (r8)
-    "events_markov_stationary",  # src+helpers (r8)
-    "stats_poisson_bootstrap_ci",  # src+helpers (r8)
-    "stats_spearman_rank_corr",  # src+helpers (r8)
-    "dedup_incremental_new_batch",  # helpers (r2)
-    "dedup_keep_best_resolution",  # helpers (r2)
-    "dedup_shared_span_report",  # helpers (r2)
-    "dedup_simhash_pairs",  # helpers (r2)
-    "embedding_int8_quantization_audit",  # helpers (r2)
-    "events_assoc_rules_types",  # helpers (r2)
-    "events_latest_user_state",  # helpers (r2)
-    "events_scd2_user_state",  # helpers (r2)
-    "events_transition_matrix",  # helpers (r2)
-    "events_user_journey_prefix",  # helpers (r2)
-    "events_value_zscore_outliers",  # helpers (r2)
-    "events_windowed_topk_types",  # helpers (r2)
-    "hybrid_rrf_topk",  # helpers (r2)
-    "infer_embed_index_search_e2e",  # helpers (r2)
-    "infer_tokenize_stats",  # helpers (r2)
-    "join_asof_nearest_click_to_error",  # helpers (r2)
-    "join_asof_next_click_after_error",  # helpers (r2)
-    "join_interval_error_click_left",  # helpers (r2)
-    "multimodal_binary_stats",  # helpers (r2)
-    "scalar_null_handling",  # helpers (r2)
-    "simsearch_hard_negatives",  # helpers (r2)
-    "simsearch_ivf_topk",  # helpers (r2)
-    "simsearch_ivfpq_adc_topk",  # helpers (r2)
-    "simsearch_pq_adc_topk",  # helpers (r2)
+    "stats_chi2_lang_source",  # src+helpers (r3)
+    "events_survival_km",  # src+helpers (r4)
+    "matryoshka_recall_audit",  # src+helpers (r5)
+    "events_growth_accounting",  # src+helpers (r6)
+    "events_window_funnel_depth",  # src+helpers (r6)
+    "sample_method_bakeoff",  # src+helpers (r6)
+    "sample_neyman_allocation",  # src+helpers (r6)
+    "sample_raking_calibration",  # src+helpers (r6)
+    "text_corpus_drift_kl",  # src+helpers (r6)
+    "text_rake_keywords",  # src+helpers (r6)
+    "text_sif_information_density",  # src+helpers (r6)
+    "dq_column_profile",  # src+helpers (r7)
+    "dq_freshness_audit",  # src+helpers (r7)
+    "features_woe_iv",  # src+helpers (r7)
+    "lineitem_revenue_waterfall",  # src+helpers (r7)
+    "mix_waterfill_budget",  # src+helpers (r7)
+    "orders_tier_migration_matrix",  # src+helpers (r7)
+    "pipeline_mix_entropy_shift",  # src+helpers (r7)
+    "stats_gmm_em_one_step",  # src+helpers (r7)
+    "text_heaps_law_fit",  # src+helpers (r7)
+    "events_mad_robust_outliers",  # src+helpers (r8)
+    "stats_benjamini_hochberg_fdr",  # src+helpers (r8)
+    "stats_key_skew_profiler",  # src+helpers (r9)
+    "embedding_knn_hubness_audit",  # src (r10)
+    "events_assoc_rules_types",  # src (r10)
+    "join_interval_error_click_left",  # src (r10)
+    "train_triplet_margin_audit",  # src (r10)
+    "subq_correlated_above_avg_parts",  # helpers (r2)
+    "subq_in_top_spenders",  # helpers (r2)
+    "text_bm25_topk",  # helpers (r2)
+    "text_bpe_merge_pairs",  # helpers (r2)
+    "text_chunk_sliding_windows",  # helpers (r2)
+    "text_gopher_quality_flags",  # helpers (r2)
+    "text_repetition_scores",  # helpers (r2)
+    "text_tfidf_keywords",  # helpers (r2)
+    "text_vocab_coverage",  # helpers (r2)
+    "window_percent_rank_cume",  # helpers (r2)
+    "dq_equidepth_deciles",  # helpers (r3)
+    "dq_histogram_totalprice",  # helpers (r3)
+    "events_gap_filled_minutes",  # helpers (r3)
+    "events_multi_resolution_rollup",  # helpers (r3)
+    "events_peak_concurrent_incidents",  # helpers (r3)
+    "events_seasonal_hour_anomaly",  # helpers (r3)
+    "events_signup_to_purchase_funnel",  # helpers (r3)
+    "events_top_trigram_paths",  # helpers (r3)
+    "events_weekly_cohort_retention",  # helpers (r3)
+    "features_customer_rfm",  # helpers (r3)
+    "graph_pagerank_event_flow",  # helpers (r3)
+    "graph_triangle_parts",  # helpers (r3)
+    "mix_temperature_sample",  # helpers (r3)
 )
 
 

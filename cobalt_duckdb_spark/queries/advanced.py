@@ -840,44 +840,54 @@ def stats_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     confounded sampling (e.g. one crawl source supplying all of one
     language, which a per-column profile cannot see). Expected counts from
     the marginal product; zero-observed cells still contribute (the grid is
-    completed by a cross join of the marginals before the left join back).
+    completed from the marginals, not from the observed cells).
 
     Scale shape: ONE aggregate over the data → a contingency table of
-    |langs|×|sources| rows; everything after runs on marginals (tiny,
-    broadcast). The statistic is a single mergeable sum — per-partition
-    contingency counts roll up exactly."""
-    d = load_table(spark, sf_dir, "documents")
-    obs = d.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("double").alias("o")
-    )
-    rows_ = obs.groupBy("lang").agg(F.sum("o").alias("r"))
-    cols_ = obs.groupBy("source").agg(F.sum("o").alias("c"))
-    tot = obs.agg(F.sum("o").alias("n"))
-    grid = (
-        rows_.crossJoin(F.broadcast(cols_))
-        .crossJoin(F.broadcast(tot))
-        .select("lang", "source", (F.col("r") * F.col("c") / F.col("n")).alias("expected"))
-    )
-    cells = grid.join(F.broadcast(obs), ["lang", "source"], "left").select(
-        "lang", "source", F.coalesce("o", F.lit(0.0)).alias("o"), "expected"
-    )
-    nr = rows_.agg((F.count(F.lit(1)) - 1).alias("nr"))
-    nc = cols_.agg((F.count(F.lit(1)) - 1).alias("nc"))
-    return (
-        cells.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-            F.round(
-                F.sum((F.col("o") - F.col("expected")) * (F.col("o") - F.col("expected")) / F.col("expected")),
-                4,
-            ).alias("chi2"),
-        )
-        .crossJoin(F.broadcast(nr))
-        .crossJoin(F.broadcast(nc))
+    |langs|×|sources| rows; marginals are windows over it, and each lang
+    explodes over the source list to complete the grid. The statistic is a
+    single mergeable sum — per-partition contingency counts roll up."""
+    from pyspark.sql import Window
+
+    by_lang = Window.partitionBy("lang")
+    obs = (
+        load_table(spark, sf_dir, "documents")
+        .groupBy("lang", "source")
+        .agg(F.count(F.lit(1)).cast("double").alias("o"))
         .select(
-            "n_cells",
-            (F.col("nr") * F.col("nc")).cast("bigint").alias("dof"),
-            "chi2",
+            "lang",
+            "source",
+            "o",
+            F.sum("o").over(by_lang).alias("r"),
+            F.sum("o").over(Window.partitionBy("source")).alias("c"),
+            F.sum("o").over(Window.partitionBy()).alias("n"),
+            F.collect_list(F.struct("source", "o")).over(by_lang).alias("seen"),
         )
+    )
+    langs = obs.select(
+        "lang",
+        "r",
+        "n",
+        "seen",
+        F.collect_set(F.struct("source", "c")).over(Window.partitionBy()).alias("sources"),
+    ).dropDuplicates(["lang"])
+    cells = langs.select(
+        "r", "n", "seen", F.size("sources").alias("ns"), F.inline("sources")
+    ).select(
+        "ns",
+        F.coalesce(
+            F.get(F.filter("seen", lambda x: x["source"] == F.col("source")), 0)["o"],
+            F.lit(0.0),
+        ).alias("o"),
+        (F.col("r") * F.col("c") / F.col("n")).alias("expected"),
+    )
+    return cells.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
+        # |langs| = |grid| div |sources| — exact integer arithmetic
+        F.expr("(count(1) div first(ns) - 1) * (first(ns) - 1)").alias("dof"),
+        F.round(
+            F.sum((F.col("o") - F.col("expected")) * (F.col("o") - F.col("expected")) / F.col("expected")),
+            4,
+        ).alias("chi2"),
     )
 
 
@@ -1455,20 +1465,23 @@ def stats_key_skew_profiler(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the raw scan collapses to one row per key, then to one row
     per DISTINCT COUNT VALUE — the Gini rank sum is computed over tied
     blocks (rank range of a block = keys_before·m + m(m+1)/2), so the only
-    windows run over |distinct count values| and |keys| rows, never a
-    global sort of the raw stream. Top-10 is TakeOrderedAndProject; the
-    median/p99 are DISCRETE order statistics over the per-key table (swap
-    approx_percentile in at 1e9+ keys, same plan) — and every published
-    share/ratio, the Gini included, is an exact integer rational
+    windows run over |distinct count values| rows, never a global sort.
+    The top-10 sum and the DISCRETE median/p99 are read off the blocks
+    (a block holds key ranks (keys_before, keys_before + m]) — and every
+    published share/ratio, the Gini included, is an exact integer rational
     (functions/exact.py): per-key counts are integers, so a rounded double
     division here is the redraw-fuzz boundary class, and the engines'
     percentile interpolation at the non-dyadic 0.99 is the
     `events_winsorized_stats` class."""
     from pyspark.sql import Window
 
-    e = load_table(spark, sf_dir, "events")
-    counts = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
-    blocks = counts.groupBy("cnt").agg(F.count(F.lit(1)).alias("m"))
+    blocks = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .groupBy("cnt")
+        .agg(F.count(F.lit(1)).alias("m"))
+    )
     cum = blocks.select(
         "cnt",
         "m",
@@ -1480,14 +1493,26 @@ def stats_key_skew_profiler(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.lit(0),
         ).alias("keys_before"),
+        F.sum("m").over(Window.partitionBy()).alias("nn"),
     )
+
+    def at_rank(rank: str):
+        """The count at ascending key rank ``rank`` (a discrete order
+        statistic: the block whose rank range holds it)."""
+        return F.min(
+            F.when(F.expr(f"{rank} > keys_before AND {rank} <= keys_before + m"), F.col("cnt"))
+        )
+
     # the rank-sum accumulates keys_before·m products (up to |keys|² per
     # term) — every factor is widened to DECIMAL(38,0) BEFORE its multiply
     # (ADVICE r5: an int64 inner product wraps silently in non-ANSI Spark
     # near ~3e9 keys while DuckDB throws), like the oracle's HUGEINT. The
     # triangular term splits on parity (m or m+1 is even) so it stays pure
     # integer decimal arithmetic with no div-result narrowing.
-    gini_terms = cum.agg(
+    agg = cum.agg(
+        F.coalesce(F.sum("m"), F.lit(0)).cast("bigint").alias("n_keys"),
+        F.sum(F.col("cnt") * F.col("m")).alias("n_rows"),
+        F.max("cnt").alias("max_cnt"),
         F.sum(
             F.col("cnt").cast("decimal(38,0)")
             * (
@@ -1498,36 +1523,18 @@ def stats_key_skew_profiler(spark: SparkSession, sf_dir: str) -> DataFrame:
                     " ELSE cast((m + 1) div 2 as decimal(38,0)) * m END"
                 )
             )
-        ).alias("sum_rank_x")
-    )
-    top10 = (
-        counts.orderBy(F.col("cnt").desc(), F.col("user_id").asc())
-        .limit(10)
-        .agg(F.sum("cnt").alias("s"))
-    )
-    # cnt is COUNT(*)-derived and never NULL, but the rank window keeps the
-    # uniform NULLS LAST + non-null-count discipline of every discrete
-    # order statistic in this repo (ADVICE r5) so a future edit can't
-    # reintroduce the engine null-order divergence.
-    ranked_cnt = counts.select(
-        "cnt",
-        F.row_number()
-        .over(Window.orderBy(F.asc_nulls_last("cnt")))
-        .alias("rn"),
-        F.count("cnt").over(Window.partitionBy()).alias("nn"),
-    )
-    pct = ranked_cnt.agg(
-        F.min(F.when(F.expr("rn = (nn + 1) div 2"), F.col("cnt"))).alias(
-            "med"
-        ),
-        F.min(
-            F.when(F.expr("rn = (99 * nn + 99) div 100"), F.col("cnt"))
-        ).alias("p99"),
-    )
-    agg = counts.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_keys"),
-        F.sum("cnt").alias("n_rows"),
-        F.max("cnt").alias("max_cnt"),
+        ).alias("sum_rank_x"),
+        # the ten largest counts: each block contributes its keys that rank
+        # among the top 10 (ties are equal counts, so the sum is exact)
+        F.sum(
+            F.col("cnt")
+            * F.least(
+                F.col("m"),
+                F.greatest(F.lit(0), 10 - (F.col("nn") - F.col("keys_before") - F.col("m"))),
+            )
+        ).alias("s"),
+        at_rank("(nn + 1) div 2").alias("med"),
+        at_rank("(99 * nn + 99) div 100").alias("p99"),
     )
     wide = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     gini_num = 2 * F.col("sum_rank_x") - (
@@ -1535,10 +1542,7 @@ def stats_key_skew_profiler(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) * F.col("n_rows")
     gini_den = wide(F.col("n_keys")) * F.col("n_rows")
     return (
-        agg.crossJoin(F.broadcast(gini_terms))
-        .crossJoin(F.broadcast(top10))
-        .crossJoin(F.broadcast(pct))
-        .select(
+        agg.select(
             "n_keys",
             F.col("n_rows").cast("bigint").alias("n_rows"),
             exact_round_ratio(F.col("max_cnt"), F.col("n_rows"), 6).alias(
@@ -1610,33 +1614,35 @@ def dq_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     `approx_count_distinct` in — same plan minus the Expand. min/max of
     doubles round at 2 dp before the string cast so both engines print
     identically."""
-    o = load_table(spark, sf_dir, "orders")
-
-    def prof(col: str, distinct_expr, minmax_expr):
-        return o.agg(
-            F.lit(col).alias("column_name"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.count(col).cast("bigint").alias("n_nonnull"),
-            F.countDistinct(distinct_expr).cast("bigint").alias("n_distinct"),
-            F.min(minmax_expr).cast("string").alias("min_value"),
-            F.max(minmax_expr).cast("string").alias("max_value"),
-        )
-
     price = F.round(F.col("o_totalprice"), 2)
-    parts = [
-        prof("o_orderkey", F.col("o_orderkey"), F.col("o_orderkey")),
-        prof("o_custkey", F.col("o_custkey"), F.col("o_custkey")),
-        prof("o_orderstatus", F.col("o_orderstatus"), F.col("o_orderstatus")),
-        prof("o_totalprice", price, price),
-        prof(
-            "o_orderpriority",
-            F.col("o_orderpriority"),
-            F.col("o_orderpriority"),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
+    cols = {
+        "o_orderkey": F.col("o_orderkey"),
+        "o_custkey": F.col("o_custkey"),
+        "o_orderstatus": F.col("o_orderstatus"),
+        "o_totalprice": price,
+        "o_orderpriority": F.col("o_orderpriority"),
+    }
+    # one aggregate profiles every column; stack turns it into a row each
+    stats = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
+    for i, (name, c) in enumerate(cols.items()):
+        stats += [
+            F.count(name).cast("bigint").alias(f"nn{i}"),
+            F.countDistinct(c).cast("bigint").alias(f"nd{i}"),
+            F.min(c).cast("string").alias(f"lo{i}"),
+            F.max(c).cast("string").alias(f"hi{i}"),
+        ]
+    stack = ", ".join(f"'{name}', nn{i}, nd{i}, lo{i}, hi{i}" for i, name in enumerate(cols))
+    out = (
+        load_table(spark, sf_dir, "orders")
+        .agg(*stats)
+        .select(
+            "n_rows",
+            F.expr(
+                f"stack({len(cols)}, {stack})"
+                " AS (column_name, n_nonnull, n_distinct, min_value, max_value)"
+            ),
+        )
+    )
     return out.select(
         "column_name",
         "n_rows",
@@ -2026,9 +2032,10 @@ def dq_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.max("ts").alias("latest"))
     )
-    g = per_source.agg(F.max("latest").alias("g"))
+    from pyspark.sql import Window
+
     return (
-        per_source.crossJoin(F.broadcast(g))
+        per_source.withColumn("g", F.max("latest").over(Window.partitionBy()))
         .select(
             "source",
             F.col("latest").cast("string").alias("latest_event"),
@@ -2814,7 +2821,8 @@ def stats_benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one keyed aggregate over events, then everything —
     totals, rest-moments, p-values, the BH step-up scan (a rank window +
-    running max over |types| rows) — happens on a 5-row frame."""
+    running max over |types| rows) — happens on a 5-row frame, the totals
+    and the step-up cut as whole-frame windows."""
     e = load_table(spark, sf_dir, "events")
     stats = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -2827,17 +2835,22 @@ def stats_benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,6)")).alias("s6"),
         F.count("value").alias("cnt"),
     )
-    tot = stats.agg(
-        F.sum("n").alias("tn"),
-        F.sum(F.col("m") * F.col("n")).alias("tsum"),
-        F.sum(
-            (F.col("n") - 1) * F.col("v") + F.col("n") * F.col("m") * F.col("m")
-        ).alias("tss"),
-        F.sum("s6").alias("t6"),
-        F.sum("cnt").alias("tcnt"),
+    from pyspark.sql import Window
+
+    every = Window.partitionBy()
+    tot = stats.withColumns(
+        {
+            "tn": F.sum("n").over(every),
+            "tsum": F.sum(F.col("m") * F.col("n")).over(every),
+            "tss": F.sum(
+                (F.col("n") - 1) * F.col("v") + F.col("n") * F.col("m") * F.col("m")
+            ).over(every),
+            "t6": F.sum("s6").over(every),
+            "tcnt": F.sum("cnt").over(every),
+        }
     )
     rm = (F.col("tsum") - F.col("m") * F.col("n")) / (F.col("tn") - F.col("n"))
-    rest = stats.crossJoin(F.broadcast(tot)).select(
+    rest = tot.select(
         "event_type",
         "n",
         "m",
@@ -2896,8 +2909,6 @@ def stats_benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "n", "m", "rm", "grp_mean_x", "rest_mean_x",
         "zval", pval.alias("pval"),
     )
-    from pyspark.sql import Window
-
     bh = p.select(
         "*",
         # NULLS LAST to match the oracle (degenerate tests rank after real
@@ -2909,19 +2920,17 @@ def stats_benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             Window.partitionBy()
         ).alias("mtests"),
     )
-    kmax = bh.agg(
-        F.coalesce(
-            F.max(
-                F.when(
-                    F.col("pval") <= F.col("prank") * _BH_ALPHA / F.col("mtests"),
-                    F.col("prank"),
-                )
-            ),
-            F.lit(0),
-        ).alias("kmax")
+    kmax = F.coalesce(
+        F.max(
+            F.when(
+                F.col("pval") <= F.col("prank") * _BH_ALPHA / F.col("mtests"),
+                F.col("prank"),
+            )
+        ).over(every),
+        F.lit(0),
     )
     return (
-        bh.crossJoin(F.broadcast(kmax))
+        bh.withColumn("kmax", kmax)
         .select(
             "event_type",
             F.col("grp_mean_x").alias("grp_mean"),
@@ -3796,8 +3805,10 @@ def stats_gmm_em_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: E-step is map-side arithmetic against a broadcast 1-row init;
     each M-step statistic is one mergeable aggregate; sigma needs the
-    second pass over responsibilities (classic two-pass EM in SQL). Two
-    scans of the filtered slice, zero shuffles beyond the aggregates."""
+    second pass over responsibilities (classic two-pass EM in SQL). The two
+    component rows are one ``stack`` of the single sigma row, so the plan
+    reads the slice once per pass (init, M-step, sigma), not twice per
+    component; zero shuffles beyond the aggregates."""
     e = load_table(spark, sf_dir, "events")
     x = e.filter(F.col("event_type") == "purchase").select(
         F.col("value").alias("v")
@@ -3851,17 +3862,17 @@ def stats_gmm_em_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # yield ZERO rows like the oracle's GROUP BY over the empty join —
     # Spark's global agg emits one all-NULL row instead; the n > 0 filter
     # (NULL fails it) restores the shared row contract
-    sig = sig.filter(F.col("n") > 0)
-    c1 = sig.select(
-        F.lit(1).alias("component"),
-        F.round(F.col("n1") / F.col("n"), 4).alias("weight"),
-        F.round("mu1", 4).alias("mu"),
-        F.round("s1", 4).alias("sigma"),
+    return (
+        sig.filter(F.col("n") > 0)
+        .select(
+            "n",
+            F.expr("stack(2, 1, n1, mu1, s1, 2, n2, mu2, s2) AS (component, nk, mu, s)"),
+        )
+        .select(
+            "component",
+            F.round(F.col("nk") / F.col("n"), 4).alias("weight"),
+            F.round("mu", 4).alias("mu"),
+            F.round("s", 4).alias("sigma"),
+        )
+        .orderBy("component")
     )
-    c2 = sig.select(
-        F.lit(2).alias("component"),
-        F.round(F.col("n2") / F.col("n"), 4).alias("weight"),
-        F.round("mu2", 4).alias("mu"),
-        F.round("s2", 4).alias("sigma"),
-    )
-    return c1.unionByName(c2).orderBy("component")

@@ -652,17 +652,32 @@ def join_interval_error_click_left(spark: SparkSession, sf_dir: str) -> DataFram
     In streaming mode the outer row is emitted only after the watermark
     proves no match can arrive (pinned by
     ``tests/test_streaming.py::test_left_outer_interval_join_emits_orphans``).
-    Same double-bounded interval condition → same finite join state."""
-    from cobalt_duckdb_spark.streaming.events import correlate_clicks_to_errors
 
-    e = load_table(spark, sf_dir, "events")
-    pairs = correlate_clicks_to_errors(
-        e.filter(F.col("event_type") == "error"),
-        e.filter(F.col("event_type") == "click"),
-        how="left_outer",
+    Batch plan: one read; an error's matches are a click count over a
+    [ts − 1 h, ts] range window per user, an orphan a zero count."""
+    from pyspark.sql import Window
+
+    typ = F.col("event_type")
+    hour_before = (
+        Window.partitionBy("user_id")
+        .orderBy(F.unix_micros(F.col("ts").cast("timestamp_ltz")))
+        .rangeBetween(-3_600_000_000, 0)
     )
-    per_error = pairs.groupBy("user_id", "error_id").agg(
-        F.count("click_id").alias("n_clicks")
+    per_error = (
+        load_table(spark, sf_dir, "events")
+        .filter(typ.isin("error", "click"))
+        .select(
+            "user_id",
+            "event_id",
+            typ,
+            F.when(
+                F.col("ts").isNotNull(),
+                F.count(F.when(typ == "click", F.lit(1))).over(hour_before),
+            ).alias("n_clicks"),
+        )
+        .filter(typ == "error")
+        .groupBy("user_id", "event_id")
+        .agg(F.max("n_clicks").alias("n_clicks"))
     )
     return (
         per_error.groupBy("user_id")
@@ -713,43 +728,60 @@ def events_assoc_rules_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     types co-occurring beyond independence; the behavioral cousin of
     ``text_pmi_collocations``).
 
-    Scale shape: baskets = one distinct shuffle on (user, item); the pair
-    self-join meets only within a user (key-partitioned, basket-size-bounded
-    fan-out — |types|² max per user, never users²); item counts are a tiny
-    broadcast. At real vocabulary sizes the standard guard is a support
-    floor pushed below the pair join (drop rare items first) — here the
-    5-type vocabulary needs none."""
-    e = load_table(spark, sf_dir, "events")
-    baskets = e.select("user_id", "event_type").distinct()
-    nu = baskets.agg(F.countDistinct("user_id").cast("double").alias("n"))
-    item = baskets.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("double").alias("n_item")
+    Scale shape: one read, one shuffle into per-user baskets; each basket
+    emits a (NULL, NULL) user row and one (x, y ≥ x) row per in-basket pair
+    (x = y is the item; |types|² max per user, never users²), one rollup
+    counts them, and windows over that |types|²-row frame bring totals and
+    item counts to the pairs. At real vocabulary sizes the standard guard
+    is a support floor on the basket — the 5-type vocabulary needs none."""
+    from pyspark.sql import Window
+
+    def pair(x, y):
+        return F.struct(x.alias("lhs"), y.alias("rhs"))
+
+    none = F.lit(None).cast("string")
+    rows = F.concat(
+        F.array(pair(none, none)),
+        F.flatten(
+            F.transform(
+                "types",
+                lambda x: F.transform(F.filter("types", lambda y: y >= x), lambda y: pair(x, y)),
+            )
+        ),
     )
-    b2 = baskets.select(
-        F.col("user_id").alias("b_user"), F.col("event_type").alias("rhs")
-    )
-    pair = (
-        baskets.join(
-            b2,
-            (F.col("user_id") == F.col("b_user"))
-            & (F.col("event_type") < F.col("rhs")),
+    # a NULL user_id still holds items, but is no user and pairs with
+    # nobody (COUNT DISTINCT and the equi-join both skip it)
+    counts = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id")
+        .agg(F.array_sort(F.collect_set("event_type")).alias("types"))
+        .select(
+            F.inline(
+                F.filter(rows, lambda r: F.col("user_id").isNotNull() | (r["lhs"] == r["rhs"]))
+            )
         )
-        .groupBy(F.col("event_type").alias("lhs"), "rhs")
-        .agg(F.count(F.lit(1)).cast("double").alias("n_pair"))
+        .groupBy("lhs", "rhs")
+        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
     )
-    ia = item.select(F.col("event_type").alias("lhs"), F.col("n_item").alias("n_lhs"))
-    ib = item.select(F.col("event_type").alias("rhs"), F.col("n_item").alias("n_rhs"))
+    item = F.max(F.when(F.col("lhs") == F.col("rhs"), F.col("cnt")))
+    n = F.max(F.when(F.col("lhs").isNull(), F.col("cnt"))).over(Window.partitionBy())
     return (
-        pair.join(F.broadcast(ia), "lhs")
-        .join(F.broadcast(ib), "rhs")
-        .crossJoin(F.broadcast(nu))
+        counts.select(
+            "lhs",
+            "rhs",
+            "cnt",
+            n.alias("n"),
+            item.over(Window.partitionBy("lhs")).alias("n_lhs"),
+            item.over(Window.partitionBy("rhs")).alias("n_rhs"),
+        )
+        .filter(F.col("lhs") < F.col("rhs"))
         .select(
             "lhs",
             "rhs",
-            F.round(F.col("n_pair") / F.col("n"), 6).alias("support"),
-            F.round(F.col("n_pair") / F.col("n_lhs"), 6).alias("confidence"),
+            F.round(F.col("cnt") / F.col("n"), 6).alias("support"),
+            F.round(F.col("cnt") / F.col("n_lhs"), 6).alias("confidence"),
             F.round(
-                (F.col("n_pair") / F.col("n_lhs")) / (F.col("n_rhs") / F.col("n")), 6
+                (F.col("cnt") / F.col("n_lhs")) / (F.col("n_rhs") / F.col("n")), 6
             ).alias("lift"),
         )
         .orderBy("lhs", "rhs")
@@ -2446,49 +2478,40 @@ def events_window_funnel_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying event per stage), which keeps every stage a keyed MIN
     instead of a sequential scan.
 
-    Plan: stage k is one filtered aggregate joined to stage k-1 on
-    user_id (events scanned once per stage with the type filter pushed
-    down — 3 narrow passes, no window sort, no per-user state); depth
-    resolution is two broadcast-scale left joins."""
-    e = load_table(spark, sf_dir, "events")
-    v = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(
-            (F.col("ts") > F.col("t1"))
-            & (F.col("ts") <= F.col("t1") + F.expr("INTERVAL 1 HOUR"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .join(v, "user_id")
-        .filter(
-            (F.col("ts") > F.col("t2"))
-            & (F.col("ts") <= F.col("t1") + F.expr("INTERVAL 1 HOUR"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
+    Plan: one read of the three funnel types, shuffled once on user_id;
+    stage k's anchor is a MIN over the user window of the rows that
+    qualify against stage k-1's anchor (two stacked windows on the same
+    partitioning), and the per-user depth is one keyed aggregate — no
+    per-user state beyond the user's own rows."""
+    from pyspark.sql import Window
+
+    user = Window.partitionBy("user_id")
+    typ, ts = F.col("event_type"), F.col("ts")
+    deadline = F.col("t1") + F.expr("INTERVAL 1 HOUR")
     depth = (
-        v.join(c.select("user_id", F.lit(1).alias("has_c")), "user_id", "left")
-        .join(p.select("user_id", F.lit(1).alias("has_p")), "user_id", "left")
-        .select(
-            F.when(F.col("has_p").isNotNull(), 3)
-            .when(F.col("has_c").isNotNull(), 2)
+        load_table(spark, sf_dir, "events")
+        .filter(typ.isin("view", "click", "purchase"))
+        .withColumn("t1", F.min(F.when(typ == "view", ts)).over(user))
+        .filter(F.col("t1").isNotNull())
+        .withColumn(
+            "t2",
+            F.min(
+                F.when((typ == "click") & (ts > F.col("t1")) & (ts <= deadline), ts)
+            ).over(user),
+        )
+        .groupBy("user_id")
+        .agg(
+            F.when(
+                F.max(
+                    (typ == "purchase") & (ts > F.col("t2")) & (ts <= deadline)
+                ),
+                3,
+            )
+            .when(F.max(F.col("t2").isNotNull()), 2)
             .otherwise(1)
             .alias("funnel_depth")
         )
     )
-    from pyspark.sql import Window
-
     wall = Window.partitionBy()
     return (
         depth.groupBy("funnel_depth")
@@ -2558,50 +2581,53 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort-LTV discipline). Complements retention (diagonal view) and
     DAU/MAU (volume view) with the flow view.
 
-    Plan: one distinct user-week compaction, one user-keyed lag/lead
-    window each for entry and exit classification, week-sized rollups —
-    raw event volume touched once."""
+    Plan: one distinct user-week compaction, one user-keyed window that
+    classifies each user-week's entry (first week / lag) and exit (lead),
+    and one week-sized rollup over a ``stack`` of both — raw event volume
+    touched once; the last-week cut-off for churn rows is a window over
+    the rolled-up weeks."""
     from pyspark.sql import Window
 
-    e = load_table(spark, sf_dir, "events")
-    uw = e.select(
-        "user_id", F.date_trunc("week", "ts").alias("w")
-    ).distinct()
-    firsts = uw.groupBy("user_id").agg(F.min("w").alias("fw"))
+    week = F.expr("INTERVAL 7 DAYS")
     wu = Window.partitionBy("user_id").orderBy("w")
-    flags = uw.join(firsts, "user_id").select(
-        "w", "fw", F.lag("w").over(wu).alias("prev_w")
+    flags = (
+        load_table(spark, sf_dir, "events")
+        .select("user_id", F.date_trunc("week", "ts").alias("w"))
+        .distinct()
+        .select(
+            "w",
+            F.min("w").over(Window.partitionBy("user_id")).alias("fw"),
+            F.lag("w").over(wu).alias("prev_w"),
+            F.lead("w").over(wu).alias("next_w"),
+        )
     )
     stage = (
         F.when(F.col("w") == F.col("fw"), "new")
-        .when(
-            F.col("prev_w") == F.col("w") - F.expr("INTERVAL 7 DAYS"),
-            "retained",
-        )
+        .when(F.col("prev_w") == F.col("w") - week, "retained")
         .otherwise("resurrected")
     )
-    active = (
-        flags.select("w", stage.alias("stage"))
+    churned = F.col("next_w").isNull() | (F.col("next_w") > F.col("w") + week)
+    counts = (
+        flags.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col("w"), stage.alias("stage")),
+                    F.struct(
+                        (F.col("w") + week).alias("w"),
+                        F.when(churned, "churned").alias("stage"),
+                    ),
+                )
+            )
+        )
+        .filter(F.col("stage").isNotNull())
         .groupBy("w", "stage")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    nxt = uw.select(
-        "w", F.lead("w").over(wu).alias("next_w")
+    mw = F.max(F.when(F.col("stage") != "churned", F.col("w"))).over(
+        Window.partitionBy()
     )
-    churn = (
-        nxt.filter(
-            F.col("next_w").isNull()
-            | (F.col("next_w") > F.col("w") + F.expr("INTERVAL 7 DAYS"))
-        )
-        .select((F.col("w") + F.expr("INTERVAL 7 DAYS")).alias("w"))
-        .groupBy("w")
-        .agg(F.lit("churned").alias("stage"), F.count(F.lit(1)).alias("n"))
-    )
-    max_w = uw.agg(F.max("w").alias("mw"))
-    allr = active.unionByName(
-        churn.crossJoin(F.broadcast(max_w))
-        .filter(F.col("w") <= F.col("mw"))
-        .select("w", "stage", "n")
+    allr = counts.withColumn("mw", mw).filter(
+        (F.col("stage") != "churned") | (F.col("w") <= F.col("mw"))
     )
     return allr.select(
         F.col("w").alias("week"),

@@ -850,54 +850,44 @@ def mix_waterfill_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest capped sources in (size, name) order), so the allocation is
     exact and cross-engine identical. Scale shape: per-source token counts
     are one mergeable aggregate over the corpus; everything after runs on
-    the |sources|-row table — window prefix sums + a prefix-property max,
-    no per-doc work at all."""
+    the |sources|-row table — window prefix sums + a prefix-property max
+    (whole-table windows over those rows), no per-doc work at all."""
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.groupBy("source").agg(
-        F.sum(F.size(F.split("text", " "))).alias("n")
-    )
-    b = F.broadcast(
-        tok.agg(
-            F.expr("CAST(SUM(n) * 3 AS BIGINT) div 10").alias("budget"),
-            F.count("*").alias("m"),
-        )
-    )
+    every = Window.partitionBy()
     w_ord = Window.orderBy("n", "source")
-    ranked = tok.select(
-        "source",
-        "n",
-        F.row_number().over(w_ord).alias("rn"),
-        F.sum("n").over(w_ord.rowsBetween(Window.unboundedPreceding, 0)).alias("pre"),
+    ranked = (
+        load_table(spark, sf_dir, "documents")
+        .groupBy("source")
+        .agg(F.sum(F.size(F.split("text", " "))).alias("n"))
+        .select(
+            "source",
+            "n",
+            F.row_number().over(w_ord).alias("rn"),
+            F.sum("n").over(w_ord.rowsBetween(Window.unboundedPreceding, 0)).alias("pre"),
+            F.expr("CAST(SUM(n) OVER () * 3 AS BIGINT) div 10").alias("budget"),
+            F.count("*").over(every).alias("m"),
+        )
     )
-    kk = F.broadcast(
-        ranked.crossJoin(b)
-        .filter(
-            F.col("pre") + (F.col("m") - F.col("rn")) * F.col("n")
-            <= F.col("budget")
-        )
-        .agg(
-            F.coalesce(F.max("rn"), F.lit(0)).alias("k"),
-            F.coalesce(F.max("pre"), F.lit(0)).cast("bigint").alias("pre_k"),
-        )
+    fits = F.col("pre") + (F.col("m") - F.col("rn")) * F.col("n") <= F.col("budget")
+    kk = ranked.select(
+        "*",
+        F.coalesce(F.max(F.when(fits, F.col("rn"))).over(every), F.lit(0)).alias("k"),
+        F.coalesce(F.max(F.when(fits, F.col("pre"))).over(every), F.lit(0))
+        .cast("bigint")
+        .alias("pre_k"),
     )
     full = (F.col("k") == F.col("m")) | (F.col("rn") <= F.col("k"))
     capped = F.expr(
         "(budget - pre_k) div (m - k) + CASE WHEN rn - k <= (budget - pre_k) % (m - k) THEN 1 ELSE 0 END"
     )
     alloc = F.when(full, F.col("n")).otherwise(capped)
-    return (
-        ranked.crossJoin(kk)
-        .crossJoin(b)
-        .select(
-            "source",
-            F.col("n").cast("bigint").alias("n_tokens"),
-            alloc.cast("bigint").alias("allocated"),
-            F.round(alloc / F.col("n"), 6).alias("fill_ratio"),
-        )
-        .orderBy("source")
-    )
+    return kk.select(
+        "source",
+        F.col("n").cast("bigint").alias("n_tokens"),
+        alloc.cast("bigint").alias("allocated"),
+        F.round(alloc / F.col("n"), 6).alias("fill_ratio"),
+    ).orderBy("source")
 
 
 @register(
@@ -1011,67 +1001,53 @@ def features_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rule of thumb: IV < 0.02 useless, > 0.5 suspicious). Laplace 0.5
     smoothing keeps empty cells finite, identically on both engines.
 
-    Scale: two user-keyed aggregates (target + dominant category via
-    argmax window over the per-user type counts), then all WOE/IV math on
-    the |categories|-row frame."""
+    Scale: one read — the (user, type) counts carry both the target (a max
+    over the user window) and the dominant category (argmax row_number over
+    the same window, purchase rows sorted last), then all WOE/IV math runs
+    as windows over the |categories|-row frame."""
     from pyspark.sql import Window
 
-    e = load_table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.max(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("is_pos")
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("user_id").orderBy(
-            F.col("cnt").desc(), F.col("event_type").asc()
-        )
-    )
+    is_purchase = F.col("event_type") == "purchase"
+    user = Window.partitionBy("user_id")
     dominant = (
-        e.filter(F.col("event_type") != "purchase")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("dom_type"))
-    )
-    cat = (
-        dominant.join(per_user, "user_id")
-        .groupBy("dom_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_users"),
-            F.sum("is_pos").cast("bigint").alias("n_pos"),
-            F.sum(1 - F.col("is_pos")).cast("bigint").alias("n_neg"),
+        .select(
+            "event_type",
+            F.max(F.when(is_purchase, 1).otherwise(0)).over(user).alias("is_pos"),
+            F.row_number()
+            .over(user.orderBy(is_purchase, F.col("cnt").desc(), F.col("event_type")))
+            .alias("rn"),
         )
+        .filter((F.col("rn") == 1) & ~is_purchase)
     )
-    tot = cat.agg(
-        F.sum("n_pos").alias("tp"),
-        F.sum("n_neg").alias("tn"),
-        F.count(F.lit(1)).cast("bigint").alias("k"),
+    cat = dominant.groupBy(F.col("event_type").alias("dom_type")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_users"),
+        F.sum("is_pos").cast("bigint").alias("n_pos"),
+        F.sum(1 - F.col("is_pos")).cast("bigint").alias("n_neg"),
     )
-    pshare = (F.col("n_pos") + 0.5) / (F.col("tp") + 0.5 * F.col("k"))
-    nshare = (F.col("n_neg") + 0.5) / (F.col("tn") + 0.5 * F.col("k"))
-    woe = cat.crossJoin(F.broadcast(tot)).select(
+    # windows over the |categories|-row frame: corpus totals and IV
+    every = Window.partitionBy()
+    tp = F.sum("n_pos").over(every)
+    tn = F.sum("n_neg").over(every)
+    k = F.count(F.lit(1)).over(every).cast("bigint")
+    pshare = (F.col("n_pos") + 0.5) / (tp + 0.5 * k)
+    nshare = (F.col("n_neg") + 0.5) / (tn + 0.5 * k)
+    woe = cat.select(
         "dom_type",
         "n_users",
         "n_pos",
         F.log(pshare / nshare).alias("w"),
         (pshare - nshare).alias("dshare"),
     )
-    iv = woe.agg(
-        F.round(F.sum(F.col("dshare") * F.col("w")), 6).alias("iv_total")
-    )
-    return (
-        woe.crossJoin(F.broadcast(iv))
-        .select(
-            "dom_type",
-            "n_users",
-            "n_pos",
-            F.round("w", 6).alias("woe"),
-            "iv_total",
-        )
-        .orderBy("dom_type")
-    )
+    return woe.select(
+        "dom_type",
+        "n_users",
+        "n_pos",
+        F.round("w", 6).alias("woe"),
+        F.round(F.sum(F.col("dshare") * F.col("w")).over(every), 6).alias("iv_total"),
+    ).orderBy("dom_type")
 
 
 def _incremental_admission_oracle() -> str:
@@ -1426,35 +1402,40 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be a cross-engine hash hazard.
 
     Plan: one keyed moment aggregate over orders, then pure arithmetic on
-    a |strata|-row broadcast frame; the whole decision costs one scan."""
-    o = load_table(spark, sf_dir, "orders")
-    strata = o.groupBy(F.col("o_orderpriority").alias("stratum")).agg(
-        F.count(F.lit(1)).cast("double").alias("nh"),
-        F.avg("o_totalprice").alias("mh"),
-        F.stddev_samp("o_totalprice").alias("sh"),
+    the |strata|-row frame, its totals as whole-frame windows; the whole
+    decision costs one scan."""
+    from pyspark.sql import Window
+
+    every = Window.partitionBy()
+    strata = (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(F.col("o_orderpriority").alias("stratum"))
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("nh"),
+            F.avg("o_totalprice").alias("mh"),
+            F.stddev_samp("o_totalprice").alias("sh"),
+        )
     )
-    tot = strata.agg(
-        F.sum("nh").alias("n_pop"),
-        F.sum(F.col("nh") * F.col("sh")).alias("sum_ns"),
-    )
-    alloc = strata.crossJoin(F.broadcast(tot)).select(
+    n_pop = F.sum("nh").over(every)
+    sum_ns = F.sum(F.col("nh") * F.col("sh")).over(every)
+    alloc = strata.select(
         "stratum",
         "nh",
         "mh",
         "sh",
-        (F.lit(_NEYMAN_BUDGET) * F.col("nh") * F.col("sh") / F.col("sum_ns")).alias(
+        (F.lit(_NEYMAN_BUDGET) * F.col("nh") * F.col("sh") / sum_ns).alias(
             "n_neyman"
         ),
-        (F.lit(_NEYMAN_BUDGET) * F.col("nh") / F.col("n_pop")).alias("n_prop"),
-        (F.col("nh") / F.col("n_pop")).alias("wh"),
+        (F.lit(_NEYMAN_BUDGET) * F.col("nh") / n_pop).alias("n_prop"),
+        (F.col("nh") / n_pop).alias("wh"),
     )
     w2s2 = F.col("wh") * F.col("wh") * F.col("sh") * F.col("sh")
-    vv = alloc.agg(
-        F.sum(w2s2 / F.col("n_neyman")).alias("v_ney"),
-        F.sum(w2s2 / F.col("n_prop")).alias("v_prop"),
-    )
     return (
-        alloc.crossJoin(F.broadcast(vv))
+        alloc.select(
+            "*",
+            F.sum(w2s2 / F.col("n_neyman")).over(every).alias("v_ney"),
+            F.sum(w2s2 / F.col("n_prop")).over(every).alias("v_prop"),
+        )
         .select(
             "stratum",
             F.col("nh").cast("bigint").alias("n_pop"),
@@ -1726,12 +1707,14 @@ def sample_raking_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`sample_pps_systematic`), HT estimation
     (`sample_horvitz_thompson_total`), calibration (this).
 
-    Plan: two margin aggregates (broadcast), two window-normalized weight
-    updates keyed on the margin columns, one audit rollup — each IPF
-    sweep is two keyed shuffles of the SAMPLE only, never the corpus."""
+    Plan: one (lang, source) cell aggregate carries both margins (windows
+    over the cell frame) and each cell's sample count; the sample rows are
+    re-emitted from their cells (every sampled doc of a cell starts at
+    w0 = 1), then two window-normalized weight updates keyed on the margin
+    columns and one audit rollup — each IPF sweep is two keyed shuffles
+    of the SAMPLE only, never the corpus."""
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents")
     u = (
         F.conv(
             F.substring(
@@ -1744,41 +1727,46 @@ def sample_raking_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint")
         / F.lit(4294967296.0)
     )
-    samp = docs.filter(u < _RAKE_SAMPLE_P).select(
-        "lang", "source", F.lit(1.0).alias("w0")
-    )
-    t_lang = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("double").alias("t_l")
-    )
-    t_src = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("double").alias("t_s")
-    )
-    r1 = samp.join(F.broadcast(t_lang), "lang").select(
-        "lang",
-        "source",
-        (
-            F.col("w0")
-            * F.col("t_l")
-            / F.sum("w0").over(Window.partitionBy("lang"))
-        ).alias("w1"),
-    )
-    r2 = r1.join(F.broadcast(t_src), "source").select(
-        "lang",
-        "source",
-        (
-            F.col("w1")
-            * F.col("t_s")
-            / F.sum("w1").over(Window.partitionBy("source"))
-        ).alias("w2"),
-    )
-    chk = (
-        r2.join(F.broadcast(t_lang), "lang")
-        .groupBy("lang")
+    by_lang = Window.partitionBy("lang")
+    by_src = Window.partitionBy("source")
+    samp = (
+        load_table(spark, sf_dir, "documents")
+        .groupBy("lang", "source")
         .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_sampled"),
-            F.sum("w2").alias("raked_total"),
-            F.max("t_l").alias("target_total"),
+            F.count(F.lit(1)).cast("double").alias("n_cell"),
+            F.count(F.when(u < _RAKE_SAMPLE_P, F.lit(1))).cast("int").alias("n_samp"),
         )
+        .select(
+            "lang",
+            "source",
+            "n_samp",
+            F.sum("n_cell").over(by_lang).alias("t_l"),
+            F.sum("n_cell").over(by_src).alias("t_s"),
+        )
+        .select(
+            "lang",
+            "source",
+            "t_l",
+            "t_s",
+            F.explode(F.array_repeat(F.lit(1.0), F.col("n_samp"))).alias("w0"),
+        )
+    )
+    r1 = samp.select(
+        "lang",
+        "source",
+        "t_l",
+        "t_s",
+        (F.col("w0") * F.col("t_l") / F.sum("w0").over(by_lang)).alias("w1"),
+    )
+    r2 = r1.select(
+        "lang",
+        "t_l",
+        (F.col("w1") * F.col("t_s") / F.sum("w1").over(by_src)).alias("w2"),
+    )
+    chk = r2.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_sampled"),
+        F.sum("w2").alias("raked_total"),
+        F.max("t_l").alias("target_total"),
     )
     return chk.select(
         "lang",
@@ -1849,8 +1837,8 @@ def pipeline_mix_entropy_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix-neutral on synthetic data (the A/A reading).
 
     Plan: one scan computing the admission flag map-side, one per-source
-    rollup, entropy on the |sources|-row share frame; the audit costs
-    one pass regardless of filter complexity."""
+    rollup, totals and entropy as windows over the |sources|-row share
+    frame; the audit costs one pass regardless of filter complexity."""
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1870,10 +1858,10 @@ def pipeline_mix_entropy_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("admitted").cast("double").alias("n_after"),
         )
     )
-    tot = per_src.agg(
-        F.sum("n_before").alias("tb"), F.sum("n_after").alias("ta")
-    )
-    shares = per_src.crossJoin(F.broadcast(tot)).select(
+    every = Window.partitionBy()
+    shares = per_src.withColumns(
+        {"tb": F.sum("n_before").over(every), "ta": F.sum("n_after").over(every)}
+    ).select(
         "source",
         "n_before",
         "n_after",
@@ -1884,18 +1872,15 @@ def pipeline_mix_entropy_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # contract (no admitted corpus → after-shares undefined).
         F.when(F.col("ta") > 0, F.col("n_after") / F.col("ta")).alias("sa"),
     )
-    ent = shares.agg(
-        (-F.sum(F.col("sb") * F.log("sb"))).alias("h_before"),
-        (
-            -F.sum(
-                F.when(F.col("sa") > 0, F.col("sa") * F.log("sa")).otherwise(
-                    0.0
-                )
-            )
-        ).alias("h_after"),
-    )
     return (
-        shares.crossJoin(F.broadcast(ent))
+        shares.withColumns(
+            {
+                "h_before": -F.sum(F.col("sb") * F.log("sb")).over(every),
+                "h_after": -F.sum(
+                    F.when(F.col("sa") > 0, F.col("sa") * F.log("sa")).otherwise(0.0)
+                ).over(every),
+            }
+        )
         .select(
             "source",
             F.col("n_before").cast("bigint").alias("n_before"),
@@ -1961,8 +1946,9 @@ def sample_method_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-adjusts) with the selection step.
 
     Plan: one scan computes every method's membership flag (two rank
-    windows + one hash), three conditional aggregates, truth alongside —
-    the bake-off costs one pass, not one pass per method."""
+    windows + one hash), one aggregate of three conditional estimates with
+    the truth alongside, stacked into one row per method — the bake-off
+    costs one pass, not one pass per method."""
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1994,25 +1980,28 @@ def sample_method_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("srn"),
         F.count(F.lit(1)).over(Window.partitionBy("source")).alias("sn"),
     )
-    truth = base.agg(F.avg("y").alias("mu"))
-    ests = None
-    for name, cond in (
+    methods = (
         ("bernoulli_10pct", F.col("u") < 0.1),
         ("systematic_every_10th", F.col("rn") % 10 == 1),
         (
             "stratified_by_source_10pct",
             F.col("srn") <= F.ceil(F.col("sn") * 0.1).cast("bigint"),
         ),
-    ):
-        e = base.filter(cond).agg(
-            F.lit(name).alias("method"),
-            F.avg("y").alias("est"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-        )
-        ests = e if ests is None else ests.unionByName(e)
+    )
+    stack = ", ".join(f"'{name}', est{i}, n{i}" for i, (name, _) in enumerate(methods))
+    ests = base.agg(
+        F.avg("y").alias("mu"),
+        *[
+            c
+            for i, (_, cond) in enumerate(methods)
+            for c in (
+                F.avg(F.when(cond, F.col("y"))).alias(f"est{i}"),
+                F.count(F.when(cond, F.lit(1))).cast("bigint").alias(f"n{i}"),
+            )
+        ],
+    ).select("mu", F.expr(f"stack({len(methods)}, {stack}) AS (method, est, n)"))
     return (
-        ests.crossJoin(F.broadcast(truth))
-        .select(
+        ests.select(
             "method",
             F.col("n").alias("n_sampled"),
             F.round("est", 4).alias("estimate"),

@@ -507,39 +507,50 @@ def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     4x smaller and 4x faster per comparison, and this measures the quality
     bill. recall@k = |topk_full ∩ topk_prefix| / k per query.
 
-    Scale shape: two batch-KNN passes (broadcast queries x map-only scan +
-    per-query top-k window — same plan as ``simsearch_batch_knn``) over full
-    and sliced vectors, then a join of two k-row-per-query sets. The slice
-    is a Catalyst expression at scan time, so the prefix pass reads the same
-    column without a second materialized table."""
+    Scale shape: one batch-KNN pass (broadcast queries x map-only scan —
+    same plan as ``simsearch_batch_knn``) scores every pair on the full and
+    the sliced vectors at once, and two rank windows over the same
+    per-query partitioning pick both top-k sets; recall is one count of
+    the pairs in both. The slice is a Catalyst expression at scan time, so
+    the prefix ranking reads the same column without a second pass."""
+    from pyspark.sql import Window
+
+    from cobalt_duckdb_spark.functions.vector import cosine_distance
+
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    q = emb.filter(F.col("vec_id") < _MRL_NQ)
-    full_top = knn_topk_batch(
-        emb,
-        q.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        ),
-        k=_MRL_K,
+    q = F.broadcast(
+        emb.filter(F.col("vec_id") < _MRL_NQ).select(
+            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        )
     )
-    pref_emb = emb.select(
-        "vec_id", F.slice("embedding", 1, _MRL_PREFIX).alias("embedding")
+
+    per_query = Window.partitionBy("query_id")
+    ranked = (
+        emb.crossJoin(q)
+        .select(
+            "query_id",
+            "vec_id",
+            cosine_distance(F.col("v"), F.col("qv")).alias("d_full"),
+            cosine_distance(
+                F.slice("v", 1, _MRL_PREFIX), F.slice("qv", 1, _MRL_PREFIX)
+            ).alias("d_pref"),
+        )
+        .select(
+            "query_id",
+            F.row_number().over(per_query.orderBy("d_full", "vec_id")).alias("r_full"),
+            F.row_number().over(per_query.orderBy("d_pref", "vec_id")).alias("r_pref"),
+        )
+        .filter(F.col("r_full") <= _MRL_K)
     )
-    pref_top = knn_topk_batch(
-        pref_emb,
-        q.select(
-            F.col("vec_id").alias("query_id"),
-            F.slice("embedding", 1, _MRL_PREFIX).alias("query_vec"),
-        ),
-        k=_MRL_K,
-    )
-    hits = pref_top.select("query_id", "vec_id", F.lit(1).alias("_hit"))
     return (
-        full_top.select("query_id", "vec_id")
-        .join(hits, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce("_hit", F.lit(0))).cast("bigint").alias("n_overlap"))
+        ranked.groupBy("query_id")
+        .agg(
+            F.count(F.when(F.col("r_pref") <= _MRL_K, F.lit(1)))
+            .cast("bigint")
+            .alias("n_overlap")
+        )
         .select(
             "query_id",
             F.lit(_MRL_K).cast("bigint").alias("k"),
@@ -1785,10 +1796,11 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: brute-force scored pairs from a BOUNDED query sample (constant
     200 — audit cost does not scale with the corpus), per-query
-    top-k via rank window, then in-degree and its central moments on the
-    reached-node frame. Skewness is computed from explicit population
-    moments (same discipline as `agg_higher_moments` — Spark's builtin
-    and DuckDB's disagree on bias correction)."""
+    top-k via rank window, then in-degree and its central moments as
+    windows over the reached-node frame (≤ 200·k rows, so the corpus is
+    read once per side of the pair join). Skewness is computed from
+    explicit population moments (same discipline as `agg_higher_moments`
+    — Spark's builtin and DuckDB's disagree on bias correction)."""
     from pyspark.sql import Window
 
     from cobalt_duckdb_spark.functions.vector import dot_product, l2_normalize
@@ -1818,23 +1830,18 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     indeg = knn.groupBy(F.col("did").alias("vec_id")).agg(
         F.count(F.lit(1)).cast("double").alias("d")
     )
-    mu = indeg.agg(
-        F.avg("d").alias("mu"), F.count(F.lit(1)).alias("n_reached")
-    )
+    every = Window.partitionBy()
     dev = F.col("d") - F.col("mu")
-    mom = (
-        indeg.crossJoin(F.broadcast(mu))
-        .agg(
-            F.first("mu").alias("mu"),
-            (F.sum(dev * dev) / F.count(F.lit(1))).alias("m2"),
-            (F.sum(dev * dev * dev) / F.count(F.lit(1))).alias("m3"),
-            F.first("n_reached").alias("n_reached"),
-        )
+    mom = indeg.withColumn("mu", F.avg("d").over(every)).select(
+        "vec_id",
+        "d",
+        F.count(F.lit(1)).over(every).alias("n_reached"),
+        (F.sum(dev * dev).over(every) / F.count(F.lit(1)).over(every)).alias("m2"),
+        (F.sum(dev * dev * dev).over(every) / F.count(F.lit(1)).over(every)).alias("m3"),
     )
     hub_rank = F.row_number().over(Window.orderBy(F.desc("d"), "vec_id"))
     return (
-        indeg.crossJoin(F.broadcast(mom))
-        .select(
+        mom.select(
             hub_rank.cast("bigint").alias("hub_rank"),
             "vec_id",
             F.col("d").cast("bigint").alias("in_degree"),
@@ -2179,7 +2186,8 @@ def train_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: normalize once, bounded anchor sample broadcast against the
     corpus scan (single dot fold per pair — the hubness-audit discipline),
-    two conditional MAX aggregates per anchor, label-sized rollup."""
+    both conditional MAXes in one aggregate per anchor, label-sized
+    rollup."""
     from cobalt_duckdb_spark.functions.vector import dot_product, l2_normalize
 
     # spread=True: one-row-group scan; heavy per-row vector work below
@@ -2203,20 +2211,21 @@ def train_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "aid", "albl", "dlbl", dot_product("ae", "de").alias("sim")
         )
     )
-    pos = (
-        scored.filter(F.col("albl") == F.col("dlbl"))
-        .groupBy("aid", "albl")
-        .agg(F.max("sim").alias("pos_sim"))
-    )
-    neg = (
-        scored.filter(F.col("albl") != F.col("dlbl"))
-        .groupBy("aid")
-        .agg(F.max("sim").alias("neg_sim"))
+    same = F.col("albl") == F.col("dlbl")
+    hardest = (
+        scored.groupBy("aid", "albl")
+        .agg(
+            F.max(F.when(same, F.col("sim"))).alias("pos_sim"),
+            F.max(F.when(~same, F.col("sim"))).alias("neg_sim"),
+            # an anchor needs a positive AND a negative (the pos ⋈ neg join)
+            F.count(F.when(same, 1)).alias("n_pos"),
+            F.count(F.when(~same, 1)).alias("n_neg"),
+        )
+        .filter((F.col("n_pos") > 0) & (F.col("n_neg") > 0))
     )
     margin = F.col("pos_sim") - F.col("neg_sim")
     return (
-        pos.join(neg, "aid")
-        .groupBy(F.col("albl").alias("label"))
+        hardest.groupBy(F.col("albl").alias("label"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_anchors"),
             F.round(F.avg(margin), 6).alias("mean_margin"),

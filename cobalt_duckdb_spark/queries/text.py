@@ -1063,34 +1063,52 @@ def text_corpus_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch or source lands (is this slice "the same language" as what the
     model trained on?).
 
-    Shape: one (source, token) count shuffle; the per-pair union vocab is an
-    equi-join on token (hot tokens hash-spread; baseline vocab is a
-    candidate for broadcast when one source dominates); divergences are
-    plain mergeable sums. JS is bounded [0, ln 2] and symmetric — the
-    reported pair (kl, js) separates "new words" (overlap) from "reweighted
-    words" (divergence on shared vocab)."""
+    Shape: one (source, token) count shuffle; a token-keyed window attaches
+    the baseline count, and each baseline row fans out to the sources that
+    lack the token — the per-pair union vocab without a join; divergences
+    are plain mergeable sums. JS is bounded [0, ln 2] and symmetric — the
+    reported pair (kl, js) separates "new words" (overlap) from
+    "reweighted words" (divergence on shared vocab)."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("w"))
     counts = tok.groupBy("source", "w").agg(
         F.count("*").cast("double").alias("c")
     )
-    base = counts.filter(F.col("source") == "src0").select(
-        "w", F.col("c").alias("cb")
+    others = counts.filter(F.col("source") != "src0").agg(
+        F.collect_set("source").alias("others")
     )
-    oth = counts.filter(F.col("source") != "src0")
-    vocab = (
-        oth.select("source", "w")
-        .union(oth.select("source").distinct().crossJoin(base.select("w")))
-        .distinct()
-    )
+    by_token = Window.partitionBy("w")
+    is_base = F.col("source") == "src0"
+
+    def cell(src, cs, cb):
+        return F.struct(src.alias("source"), cs.alias("cs"), cb.alias("cb"))
+
     jj = (
-        vocab.join(oth, ["source", "w"], "left")
-        .join(base, "w", "left")
-        .select(
+        counts.select(
             "source",
-            "w",
-            F.coalesce("c", F.lit(0.0)).alias("cs"),
-            F.coalesce("cb", F.lit(0.0)).alias("cb"),
+            "c",
+            F.max(F.when(is_base, F.col("c"))).over(by_token).alias("base_c"),
+            F.collect_set("source").over(by_token).alias("have"),
+        )
+        .crossJoin(F.broadcast(others))
+        .select(
+            F.inline(
+                F.when(
+                    is_base,
+                    F.transform(
+                        F.array_except("others", "have"),
+                        lambda src: cell(src, F.lit(0.0), F.col("c")),
+                    ),
+                ).otherwise(
+                    F.array(
+                        cell(
+                            F.col("source"),
+                            F.col("c"),
+                            F.coalesce("base_c", F.lit(0.0)),
+                        )
+                    )
+                )
+            )
         )
     )
     w = Window.partitionBy("source")
@@ -1616,7 +1634,8 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: tokenize with posexplode (map-only row multiplier), phrase ids
     from ONE per-doc running-sum window (the gaps-and-islands shuffle on
-    doc_id), phrase assembly + membership from the same keyed frame, and
+    doc_id), phrase assembly in one keyed aggregate whose ordered word
+    list is exploded back into the membership rows, and
     the word-score table is vocabulary-bounded so it BROADCASTS back onto
     members — phrase scoring never reshuffles the corpus. Final top-k is
     TakeOrderedAndProject."""
@@ -1638,23 +1657,24 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             Window.partitionBy("doc_id").orderBy("p")
         ),
     )
-    nonstop = seg.filter(F.col("is_stop") == 0)
-    phrases = (
-        nonstop.groupBy("doc_id", "phrase_id")
+    members = (
+        seg.filter(F.col("is_stop") == 0)
+        .groupBy("doc_id", "phrase_id")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("p", "w"))),
-                    lambda s: s["w"],
-                ),
-                " ",
-            ).alias("phrase"),
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("p", "w"))),
+                lambda s: s["w"],
+            ).alias("ws"),
             F.count(F.lit(1)).alias("plen"),
         )
         .filter(F.col("plen").between(1, _RAKE_MAX_PHRASE))
-    )
-    members = nonstop.select("doc_id", "phrase_id", "w").join(
-        phrases, ["doc_id", "phrase_id"]
+        .select(
+            "doc_id",
+            "phrase_id",
+            F.array_join("ws", " ").alias("phrase"),
+            "plen",
+            F.explode("ws").alias("w"),
+        )
     )
     wstats = members.groupBy("w").agg(
         F.count(F.lit(1)).alias("freq"), F.sum("plen").alias("deg")
@@ -2218,50 +2238,49 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `text_zipf_law_fit`: Zipf describes the frequency ranks, Heaps the
     type-discovery rate; the two exponents are theoretically linked.
 
-    Plan: first-occurrence attribution is a vocab-keyed min aggregate
-    (NOT a running distinct — no per-prefix state); the growth curve is
-    one ordered prefix-sum window over the |docs| frame; the fit is
-    closed-form moments over 20 checkpoints."""
+    Plan: one GROUPING SETS aggregate yields the vocab-keyed first
+    occurrence (a min — NOT a running distinct) and the per-doc token
+    counts, re-keyed by doc; the growth curve is one ordered prefix-sum
+    window, the fit one conditional aggregate over 20 checkpoints."""
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    firstdoc = (
-        tok.groupBy("w")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("cnt_new"))
-    )
-    d = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("cnt_tok"))
-    ww = Window.orderBy("doc_id")
-    per_doc = (
-        d.join(firstdoc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.sum("cnt_tok").over(ww).alias("cum_tokens"),
-            F.sum(F.coalesce("cnt_new", F.lit(0))).over(ww).alias("cum_vocab"),
+    is_doc = F.col("by_doc") == 1
+    d = (
+        tok.groupingSets([["w"], ["doc_id"]], "w", "doc_id")
+        .agg(
+            F.grouping("w").alias("by_doc"),
+            F.min("doc_id").alias("first_doc"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .groupBy(F.when(is_doc, F.col("doc_id")).otherwise(F.col("first_doc")).alias("doc_id"))
+        .agg(
+            F.sum(F.when(is_doc, F.col("n"))).alias("cnt_tok"),
+            F.count(F.when(~is_doc, F.lit(1))).alias("cnt_new"),
         )
     )
-    pts = per_doc.filter(F.col("doc_id") % 25 == 24).select(
-        F.log("cum_tokens").alias("lx"),
-        F.log("cum_vocab").alias("ly"),
-        "cum_vocab",
-        "cum_tokens",
+    ww = Window.orderBy("doc_id")
+    per_doc = d.select(
+        "doc_id",
+        F.sum("cnt_tok").over(ww).alias("cum_tokens"),
+        F.sum("cnt_new").over(ww).alias("cum_vocab"),
+        (F.max("doc_id").over(Window.partitionBy()) / 2).alias("half_doc"),
     )
-    fit = pts.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("lx").alias("sx"),
-        F.sum("ly").alias("sy"),
-        F.sum(F.col("lx") * F.col("ly")).alias("sxy"),
-        F.sum(F.col("lx") * F.col("lx")).alias("sxx"),
-        F.max("cum_vocab").alias("v_final"),
-        F.max("cum_tokens").alias("t_final"),
-    )
-    max_doc = per_doc.agg((F.max("doc_id") / 2).alias("half_doc"))
-    v_half = (
-        per_doc.crossJoin(F.broadcast(max_doc))
-        .filter(F.col("doc_id") <= F.col("half_doc"))
-        .agg(F.max("cum_vocab").cast("double").alias("v_half"))
+    pt = F.col("doc_id") % 25 == 24
+    lx = F.when(pt, F.log("cum_tokens"))
+    ly = F.when(pt, F.log("cum_vocab"))
+    fit = per_doc.agg(
+        F.count(F.when(pt, F.lit(1))).cast("double").alias("n"),
+        F.sum(lx).alias("sx"),
+        F.sum(ly).alias("sy"),
+        F.sum(lx * ly).alias("sxy"),
+        F.sum(lx * lx).alias("sxx"),
+        F.max(F.when(pt, F.col("cum_vocab"))).alias("v_final"),
+        F.max(F.when(pt, F.col("cum_tokens"))).alias("t_final"),
+        F.max(F.when(F.col("doc_id") <= F.col("half_doc"), F.col("cum_vocab")))
+        .cast("double")
+        .alias("v_half"),
     )
     # the OLS determinant n·sxx − sx² is 0 with fewer than two sample
     # points (a starved corpus leaves ≤1 doc on the %25 sampling grid —
@@ -2272,7 +2291,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         det != 0,
         (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / det,
     )
-    return fit.crossJoin(F.broadcast(v_half)).select(
+    return fit.select(
         F.col("n").cast("bigint").alias("n_points"),
         F.when(F.abs(beta) < 5e-5, F.lit(0.0))
         .otherwise(F.round(beta, 4))
@@ -2623,42 +2642,37 @@ def text_sif_information_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooling precomputation.
 
     Plan: tokenize once, vocabulary-sized probability table broadcast
-    back onto the token stream, per-source mass rollup — two keyed
-    shuffles, both on frames far smaller than the stream."""
+    back onto the token stream, per-source mass rollup; totals are
+    windows over those small frames, not rescans of the stream."""
+    from pyspark.sql import Window
+
+    every = Window.partitionBy()
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("w"))
-    n_tok = tok.agg(F.count(F.lit(1)).cast("double").alias("nt"))
     p = (
         tok.groupBy("w")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .crossJoin(F.broadcast(n_tok))
-        .select("w", (F.col("c") / F.col("nt")).alias("pw"))
+        .select("w", (F.col("c") / F.sum("c").over(every)).alias("pw"))
     )
-    weighted = tok.join(F.broadcast(p), "w").select(
-        "source", (F.lit(_SIF_A) / (_SIF_A + F.col("pw"))).alias("sw")
-    )
-    per_src = weighted.groupBy("source").agg(
-        F.count(F.lit(1)).cast("double").alias("n_tokens"),
-        F.sum("sw").alias("sif_mass"),
-    )
-    tot = per_src.agg(
-        F.sum("n_tokens").alias("tn"), F.sum("sif_mass").alias("tm")
-    )
-    return (
-        per_src.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            F.round(F.col("n_tokens") / F.col("tn"), 4).alias("raw_share"),
-            F.round(F.col("sif_mass") / F.col("tm"), 4).alias("sif_share"),
-            F.round(
-                (F.col("sif_mass") / F.col("tm"))
-                / (F.col("n_tokens") / F.col("tn")),
-                4,
-            ).alias("information_density"),
+    per_src = (
+        tok.join(F.broadcast(p), "w")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n_tokens"),
+            F.sum(F.lit(_SIF_A) / (_SIF_A + F.col("pw"))).alias("sif_mass"),
         )
-        .orderBy("source")
     )
+    tn = F.sum("n_tokens").over(every)
+    tm = F.sum("sif_mass").over(every)
+    return per_src.select(
+        "source",
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        F.round(F.col("n_tokens") / tn, 4).alias("raw_share"),
+        F.round(F.col("sif_mass") / tm, 4).alias("sif_share"),
+        F.round((F.col("sif_mass") / tm) / (F.col("n_tokens") / tn), 4).alias(
+            "information_density"
+        ),
+    ).orderBy("source")
 
 
 # ---------------------------------------------------------------------------

@@ -532,21 +532,27 @@ def events_mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     point. Exact medians on both sides (Spark ``percentile``, DuckDB
     ``percentile_cont`` — both interpolate), flag |x−med| > 3·1.4826·MAD.
 
-    Scale shape: two grouped exact percentiles over event_type (5 groups —
-    per-group sort state, the honest cost of exact medians; swap
-    ``percentile_approx`` in when groups get hot, same plan otherwise) and
-    two broadcast joins of 5-row stats back onto the stream — map-only
-    flagging, no second shuffle of the big table."""
-    e = load_table(spark, sf_dir, "events")
-    med = e.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("med"))
-    dev = e.join(F.broadcast(med), "event_type").select(
-        "event_id", "event_type", "value", "med",
-        F.abs(F.col("value") - F.col("med")).alias("adev"),
+    Scale shape: one read, shuffled once on event_type; both exact
+    percentiles are whole-partition windows over that partitioning (5
+    groups — per-group sort state, the honest cost of exact medians; swap
+    ``percentile_approx`` in when groups get hot, same plan otherwise), so
+    the MAD's second pass over |x−med| needs no rescan or join back."""
+    from pyspark.sql import Window
+
+    by_type = Window.partitionBy("event_type")
+    dev = (
+        load_table(spark, sf_dir, "events")
+        .select(
+            "event_id",
+            "event_type",
+            "value",
+            F.expr("percentile(value, 0.5)").over(by_type).alias("med"),
+        )
+        .withColumn("adev", F.abs(F.col("value") - F.col("med")))
+        .withColumn("mad", F.expr("percentile(adev, 0.5)").over(by_type))
     )
-    mad = dev.groupBy("event_type").agg(F.expr("percentile(adev, 0.5)").alias("mad"))
     return (
-        dev.join(F.broadcast(mad), "event_type")
-        .filter(
+        dev.filter(
             (F.col("mad") > 0)
             & (F.col("adev") > F.lit(_MAD_CUT * _MAD_K) * F.col("mad"))
         )
@@ -1304,8 +1310,10 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     S(t) = Π over event times ≤ t of (1 − dᵢ/nᵢ); the cumulative product
     runs as exp(Σ ln(·)) so it's a window SUM.
 
-    Scale shape: the per-user duration table is two grouped MINs + a left
-    join; everything after collapses to one row per distinct duration hour
+    Scale shape: the per-user duration table is one user-keyed pass over
+    the signup/purchase rows (t0 is a MIN over the user window, t1 the
+    keyed MIN of the purchases after it) plus the broadcast corpus end;
+    everything after collapses to one row per distinct duration hour
     (bounded by the observation span, not by users), so the unpartitioned
     KM windows run over that tiny frame — same aggregated-series argument
     as the ACF query."""
@@ -1313,25 +1321,28 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     obs_end = e.agg(F.max("ts").alias("t_end"))
-    signups = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
-    p = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("pts")
-    )
-    purchases = (
-        signups.join(p, "user_id")
-        .filter(F.col("pts") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("pts").alias("t1"))
+    per_user = (
+        e.filter(F.col("event_type").isin("signup", "purchase"))
+        .withColumn(
+            "t0",
+            F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).over(
+                Window.partitionBy("user_id")
+            ),
+        )
+        .filter(F.col("t0").isNotNull())
+        .groupBy("user_id", "t0")
+        .agg(
+            F.min(
+                F.when(
+                    (F.col("event_type") == "purchase") & (F.col("ts") > F.col("t0")),
+                    F.col("ts"),
+                )
+            ).alias("t1")
+        )
     )
     durations = (
-        signups.join(purchases, "user_id", "left")
-        .crossJoin(F.broadcast(obs_end))
+        per_user.crossJoin(F.broadcast(obs_end))
         .select(
-            "user_id",
             # full elapsed hours via micros floor-div: Spark's
             # timestampdiff(HOUR) floors while DuckDB's date_diff('hour')
             # counts boundary crossings — micros agree exactly
@@ -1354,15 +1365,13 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_event").cast("bigint").alias("d"),
         F.count(F.lit(1)).cast("bigint").alias("total_here"),
     )
-    n_total = durations.agg(F.count(F.lit(1)).alias("n_tot"))
     w = Window.orderBy("dur_h")
     risk = (
-        grouped.crossJoin(F.broadcast(n_total))
-        .select(
+        grouped.select(
             "dur_h",
             "d",
             (
-                F.col("n_tot")
+                F.sum("total_here").over(Window.partitionBy())
                 - F.coalesce(
                     F.sum("total_here").over(
                         w.rowsBetween(Window.unboundedPreceding, -1)

@@ -961,8 +961,9 @@ def orders_tier_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (spend, custkey) order so both engines cut identically.
 
     Plan: per-(customer, half) spend rollup, two ntile windows keyed on
-    the half, a self-join on custkey (both sides the compact customer
-    frame), one 9-cell matrix aggregate with a row-normalizing window."""
+    the half, a custkey-keyed pivot of the two tiers (customers active in
+    both halves), one 9-cell matrix aggregate with a row-normalizing
+    window."""
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
@@ -991,13 +992,14 @@ def orders_tier_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("half").orderBy("spend", "o_custkey"))
         .alias("tier"),
     )
-    a = tiers.filter(F.col("half") == 1).select(
-        "o_custkey", F.col("tier").alias("tier_h1")
+    wide = (
+        tiers.groupBy("o_custkey")
+        .agg(
+            F.max(F.when(F.col("half") == 1, F.col("tier"))).alias("tier_h1"),
+            F.max(F.when(F.col("half") == 2, F.col("tier"))).alias("tier_h2"),
+        )
+        .dropna(subset=["tier_h1", "tier_h2"])
     )
-    b = tiers.filter(F.col("half") == 2).select(
-        "o_custkey", F.col("tier").alias("tier_h2")
-    )
-    wide = a.join(b, "o_custkey")
     row = Window.partitionBy("tier_h1")
     return (
         wide.groupBy("tier_h1", "tier_h2")
@@ -1143,7 +1145,7 @@ def lineitem_revenue_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the reporting shape finance consumes.
 
     Plan: ONE scan computing all components as parallel aggregates, then
-    a 3-row union with a running-sum window. Adding a waterfall step
+    a 3-row stack with a running-sum window. Adding a waterfall step
     adds an aggregate expression, never a scan."""
     from pyspark.sql import Window
 
@@ -1169,19 +1171,13 @@ def lineitem_revenue_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("net"),
     )
-    rows = None
-    for step, name, col in (
-        (1, "gross_revenue", "gross"),
-        (2, "discount", "discount_effect"),
-        (3, "tax", "tax_effect"),
-    ):
-        r = comp.select(
-            F.lit(step).alias("step"),
-            F.lit(name).alias("component"),
-            F.col(col).alias("amount"),
-            F.col("net"),
-        )
-        rows = r if rows is None else rows.unionByName(r)
+    rows = comp.select(
+        F.expr(
+            "stack(3, 1, 'gross_revenue', gross, 2, 'discount', discount_effect,"
+            " 3, 'tax', tax_effect) AS (step, component, amount)"
+        ),
+        "net",
+    )
     run = Window.orderBy("step")
     return rows.select(
         F.col("step").cast("bigint").alias("step"),

@@ -13,7 +13,11 @@ from cobalt_duckdb_spark.functions.vector import (
     l2_normalize,
 )
 from cobalt_duckdb_spark.io import load_table, EXPECTED_DDL, TABLE_NAMES
-from cobalt_duckdb_spark.operators.knn import knn_topk, knn_topk_batch, query_vector_of
+from cobalt_duckdb_spark.operators.knn import (
+    knn_topk_batch,
+    knn_topk_broadcast_query,
+    query_vector_of,
+)
 from cobalt_duckdb_spark.queries import QUERIES
 
 
@@ -81,7 +85,8 @@ def test_knn_ties_break_by_id_and_k_exceeds_n(spark):
     docs = spark.createDataFrame(
         [(10, "a"), (11, "b"), (12, "c")], "doc_id BIGINT, text STRING"
     )
-    out = knn_topk(emb, docs, F.array(F.lit(1.0), F.lit(0.0)), k=99).collect()
+    query = spark.createDataFrame([([1.0, 0.0],)], "query_vec ARRAY<DOUBLE>")
+    out = knn_topk_broadcast_query(emb, docs, query, k=99).collect()
     assert len(out) == 3  # k > N → all rows
     assert [r["doc_id"] for r in out] == [10, 11, 12]  # tie 10/11 broken by id
 

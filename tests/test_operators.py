@@ -307,25 +307,6 @@ def test_build_vector_store(spark, sf_dir):
         store.unpersist()
 
 
-def test_stop_watch_decorator_and_timed():
-    import time as _time
-
-    from cobalt_duckdb_spark.instrument import stop_watch, timed
-
-    sink = {}
-
-    @stop_watch(sink)
-    def work():
-        _time.sleep(0.01)
-        return 7
-
-    assert work() == 7
-    assert sink["work"] >= 0.01
-    with timed(sink, "block"):
-        _time.sleep(0.01)
-    assert sink["block"] >= 0.01
-
-
 def test_cms_never_underestimates(spark, sf_dir):
     """CMS property: estimate >= exact count for EVERY token (not just heavy
     hitters)."""

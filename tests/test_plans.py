@@ -82,9 +82,17 @@ def test_bm25_topk_is_take_ordered(spark, sf_dir):
     assert_no_cartesian(q)
 
 
+# Registry-wide ceilings: ratchets that may only fall. Redundant scans are
+# a table read again in a plan that already reads it; a new checkpoint
+# must not hide a scan by turning it into a Scan ExistingRDD leaf.
+MAX_REDUNDANT_PARQUET_SCANS = 160
+MAX_EXISTING_RDD_SCANS = 312
+
+
 def test_no_plan_smells_anywhere(spark, sf_dir):
     """Registry-wide physical-plan audit: no CartesianProduct, no
-    row-at-a-time Python (BatchEvalPython) in ANY registered query's plan.
+    row-at-a-time Python (BatchEvalPython) in ANY registered query's plan,
+    and the redundant-scan / materialized-leaf totals under their ceilings.
     A de-optimized plan is a failed test, not a surprise at 100 TB."""
     import sys, os
     sys.path.insert(
@@ -92,8 +100,13 @@ def test_no_plan_smells_anywhere(spark, sf_dir):
     )
     from plan_audit import audit
 
-    bad = {k: v for k, v in audit(spark, sf_dir).items() if v}
+    results = audit(spark, sf_dir)
+    bad = {k: a.smells for k, a in results.items() if a.smells}
     assert bad == {}
+    redundant = sum(a.redundant_scans for a in results.values())
+    rdd = sum(a.rdd_scans for a in results.values())
+    assert redundant <= MAX_REDUNDANT_PARQUET_SCANS, redundant
+    assert rdd <= MAX_EXISTING_RDD_SCANS, rdd
 
 
 def test_no_python_in_library_operator_plans(spark, sf_dir):

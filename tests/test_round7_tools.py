@@ -399,3 +399,15 @@ def test_bench_record_smoke_carries_calib_triplet():
     with open(os.path.join(REPO, "tools", "bench_compare.py")) as f:
         cmp_src = f.read()
     assert "calib_start_sec" in cmp_src and "calib_spread" in cmp_src
+
+
+def test_tools_resolve_their_own_checkout():
+    """Tools import and write relative to the checkout they live in, so an
+    A/B run from a copy of the repo never imports the original's package."""
+    files = [os.path.join(REPO, "bench.py")] + [
+        os.path.join(REPO, "tools", f)
+        for f in sorted(os.listdir(os.path.join(REPO, "tools")))
+        if f.endswith(".py")
+    ]
+    hits = [f for f in files if REPO in open(f).read()]
+    assert hits == [], f"checkout path hard-coded in {hits}"

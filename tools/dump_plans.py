@@ -8,9 +8,11 @@ TakeOrderedAndProject, partial aggregation).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from cobalt_duckdb_spark.plans import formatted_plan
 from cobalt_duckdb_spark.queries import QUERIES
@@ -222,7 +224,7 @@ def main() -> None:
     for name, why in SHOWCASE.items():
         df = QUERIES[name](spark, sf_dir)
         out += [f"## {name}", "", why, "", "```", formatted_plan(df).strip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

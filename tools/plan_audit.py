@@ -13,33 +13,57 @@ itself does) for patterns that don't survive scale:
   flagged: every occurrence here is a deliberate single-row/corpus-stats
   broadcast (cutoffs, corpus aggregates), which is the intended pattern.
 
+It also counts, per query, the parquet scans of each table path and the
+``Scan ExistingRDD`` leaves (materialized frames: ``localCheckpoint``,
+``createDataFrame``). A table read k times in one plan is k - 1 redundant
+scans; the registry totals of both counts are ratcheted by test_plans.py.
+
 Usage: python tools/plan_audit.py [sf_dir] [name ...]
-Exit 1 if any smell is found. Run by pytest (test_plans.py) over the full
-registry — a de-optimized plan is a failed test, not a surprise at 100 TB.
+Prints the registry totals; exit 1 if any smell is found. Run by pytest
+(test_plans.py) over the full registry — a de-optimized plan is a failed
+test, not a surprise at 100 TB.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+from collections import Counter
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SMELLS = ("CartesianProduct", "BatchEvalPython")
+_SCAN = re.compile(r"FileScan parquet .*?Location: \w+\(\d+ paths?\)\[([^\],]+)")
 
 
-def audit(spark, sf_dir: str, only: set[str] | None = None) -> dict[str, list[str]]:
-    """Return {query_name: [smells]} for every audited query (empty list =
-    clean). Queries are built, not executed."""
+class PlanAudit(NamedTuple):
+    smells: list[str]
+    scans: dict[str, int]  # parquet table path -> scans in the plan
+    rdd_scans: int  # Scan ExistingRDD leaves
+
+    @property
+    def redundant_scans(self) -> int:
+        return sum(n - 1 for n in self.scans.values())
+
+
+def audit(spark, sf_dir: str, only: set[str] | None = None) -> dict[str, PlanAudit]:
+    """Return {query_name: PlanAudit} for every audited query (empty
+    ``smells`` = clean). Queries are built, not executed."""
     from cobalt_duckdb_spark.queries import queries
 
-    out: dict[str, list[str]] = {}
+    out: dict[str, PlanAudit] = {}
     for name, fn in queries().items():
         if only and name not in only:
             continue
         df = fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        out[name] = [s for s in SMELLS if s in plan]
+        out[name] = PlanAudit(
+            [s for s in SMELLS if s in plan],
+            dict(Counter(m.group(1) for m in _SCAN.finditer(plan))),
+            plan.count("Scan ExistingRDD"),
+        )
     return out
 
 
@@ -51,10 +75,15 @@ def main() -> int:
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     results = audit(spark, sf_dir, only)
-    bad = {k: v for k, v in results.items() if v}
+    bad = {k: a.smells for k, a in results.items() if a.smells}
     for name, smells in bad.items():
         print(f"SMELL {name}: {', '.join(smells)}")
+    for name, a in sorted(results.items(), key=lambda kv: -kv[1].redundant_scans):
+        if a.redundant_scans:
+            print(f"REDUNDANT {a.redundant_scans} {name}")
     print(f"{len(results) - len(bad)}/{len(results)} plans clean")
+    print(f"redundant parquet scans: {sum(a.redundant_scans for a in results.values())}")
+    print(f"Scan ExistingRDD leaves: {sum(a.rdd_scans for a in results.values())}")
     return 1 if bad else 0
 
 

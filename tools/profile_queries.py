@@ -27,7 +27,7 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cobalt_duckdb_spark.plans import formatted_plan
 from cobalt_duckdb_spark.queries import queries

@@ -9,6 +9,7 @@ Exit code 0 only if every gate passes.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -29,7 +30,7 @@ print(f'driver-sim OK: entry_rows={len(rows)} queries={len(qs)} oracles={len(osq
 
 def run(desc: str, cmd: list[str]) -> bool:
     print(f"--- {desc}: {' '.join(cmd[:4])}...")
-    r = subprocess.run(cmd, cwd="/root/repo")
+    r = subprocess.run(cmd, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     ok = r.returncode == 0
     print(f"--- {desc}: {'OK' if ok else 'FAIL'}")
     return ok
