@@ -254,10 +254,13 @@ def main() -> None:
     # Warm-path KNN throughput at the reference's operating point: repeated
     # queries against a resident (persisted, normalized) vector store —
     # the reference's serving loop (vector.py:139-188) equivalent.
-    from pyspark.sql import functions as F
-
     from cobalt_duckdb_spark.io import load_table
-    from cobalt_duckdb_spark.operators.knn import build_vector_store
+    from cobalt_duckdb_spark.operators.knn import (
+        build_vector_store,
+        knn_topk_batch,
+        knn_topk_unit,
+        unit_cosine_distance,
+    )
 
     # serve-path store: coalesce to a few partitions — per-query latency at
     # this store size is dominated by fixed task overhead (32 tasks of
@@ -272,21 +275,13 @@ def main() -> None:
         [float(x) for x in r["embedding"]]
         for r in store.orderBy("vec_id").limit(11).collect()
     ]
-    # normalized store → distance = 1 − dot (single fold)
-    from cobalt_duckdb_spark.functions.vector import dot_product
+    # the client's serving kernel: a normalized store scored with 1 − dot
+    # (one fold per row) against one query literal, the distance Column
+    # built once for all calls
+    distance = unit_cosine_distance()
 
     def warm_knn(vec):
-        # single array literal (one expression node) — an array() of 64
-        # F.lit()s costs measurably more per-query analysis time
-        q = F.lit(vec)
-        return (
-            store.select(
-                "vec_id", (F.lit(1.0) - dot_product(F.col("embedding"), q)).alias("d")
-            )
-            .orderBy("d", "vec_id")
-            .limit(10)
-            .collect()
-        )
+        return knn_topk_unit(store, distance, vec, 10).collect()
 
     warm_knn(qvecs[0])  # plan warm-up
     t0 = time.perf_counter()
@@ -295,16 +290,16 @@ def main() -> None:
     knn_ms = round((time.perf_counter() - t0) / (len(qvecs) - 1) * 1000, 1)
 
     # The per-query figure above is a fixed per-request cost, not vector
-    # math. Measured at sf0.1 on 4 cores (median of 30 warm calls): 65 ms
-    # of Python-side expression build (the dot-product lambdas go through
-    # py4j) and 70 ms for its one job, of which 11 ms is Catalyst analysis,
-    # optimization and planning. SCALE.md's warm-KNN addendum splits the
-    # client's request path the same way. The SET-ORIENTED batch path (one
-    # plan, one job, N queries broadcast against the store) pays that cost
-    # once, so report both (r5 verdict item 7). Batch = 64 queries through
-    # knn_topk_batch, ms amortized per query, min of 2 post-warm-up runs.
-    from cobalt_duckdb_spark.operators.knn import knn_topk_batch
-
+    # math. Measured at sf0.1 on 4 cores (median of 30 warm calls): 28 ms
+    # of driver-side build (four DataFrame calls and the query literal; a
+    # version that rebuilt the dot-product lambdas through py4j on every
+    # call took 58 ms) and 59 ms for its one job, of which 9 ms is Catalyst
+    # analysis, optimization and planning. SCALE.md's warm-KNN addendum
+    # splits the client's request path the same way. The SET-ORIENTED batch
+    # path (one plan, one job, N queries broadcast against the store) pays
+    # that cost once, so report both (r5 verdict item 7). Batch = 64 queries
+    # through knn_topk_batch, ms amortized per query, min of 2 post-warm-up
+    # runs.
     qdf = spark.createDataFrame(
         [(i, vec) for i, vec in enumerate(qvecs * 6)][:64],
         "query_id int, query_vec array<double>",

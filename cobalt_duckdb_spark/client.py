@@ -17,23 +17,26 @@ Parity, mapped call-for-call:
   view (the DuckDB ``register`` equivalent, vector.py:131). The driver also
   resolves the same embedding kernel once, for queries.
 - ``search_top_n``: "クエリ: " prefix → embed on the driver (vector.py:164)
-  → query vectors as literals (the reference inlines its vector into the
+  → query vector as a literal (the reference inlines its vector into the
   SQL, vector.py:176) → top-n by cosine distance → join back the ORIGINAL
   dataset columns + ``score`` + 0-based ``rank`` (the reference's exact
   result contract; its app then does rank+1 for display).
 
 Where the Spark version deliberately differs (and why it wins at scale):
 all query texts of a call are embedded in one batched ``encode``, and each
-returned frame is one JVM-only plan (its query row is a literal, scored by
-``operators/knn.knn_topk_batch`` as a top-k over the store, then broadcast
-into the join back to the dataset): no Python worker runs and nothing is
-persisted per request. The store is a distributed, spill-safe persisted
-frame instead of an in-process pandas register.
+returned frame is one JVM-only plan of two jobs. The query vector is
+normalized on the driver and scored against the unit store with one
+dot-product fold per row (``operators/knn.knn_topk_unit``); the n winners
+are ranked and broadcast into the join back to the dataset. No Python
+worker runs, nothing is persisted per request, and the scoring Column and
+rank window are built once per client, so a request adds only its
+literal. The store is a distributed, spill-safe persisted frame instead of
+an in-process pandas register.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.inference import (
@@ -43,7 +46,7 @@ from cobalt_duckdb_spark.functions.inference import (
     with_doc_prefix,
 )
 from cobalt_duckdb_spark.functions.vector import l2_normalize
-from cobalt_duckdb_spark.operators.knn import knn_topk_batch
+from cobalt_duckdb_spark.operators.knn import knn_topk_unit, unit_cosine_distance
 
 _ID = "_cobalt_doc_id"
 
@@ -57,14 +60,17 @@ class SparkSearchClient:
         target: str,
         store: DataFrame,
         encode,
-        spark: SparkSession,
     ) -> None:
         self.dataset = dataset
         self.target = target
         self.store = store
         self._encode = encode
-        self._spark = spark
         self._doc_cols = [c for c in dataset.columns if c != _ID]
+        self._distance = unit_cosine_distance()
+        # 0-based, as the reference ranks
+        self._rank = (
+            F.row_number().over(Window.orderBy("distance", "vec_id")) - 1
+        ).cast("bigint")
 
     @classmethod
     def from_dataframe(
@@ -89,7 +95,6 @@ class SparkSearchClient:
         the executors would compute for the same text."""
         from pyspark import StorageLevel
 
-        spark = data.sparkSession
         embed = make_embedder_udf(model_name, dim, model_dir)
         encode, _ = load_embed_backend(model_name, dim, model_dir)
 
@@ -108,7 +113,7 @@ class SparkSearchClient:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         store.createOrReplaceTempView(vector_store_name)
-        return cls(dataset, target, store, encode, spark)
+        return cls(dataset, target, store, encode)
 
     def search_top_n(
         self, query: str | list[str], n: int = 10
@@ -128,21 +133,17 @@ class SparkSearchClient:
         return [self._top_n(vec, n) for vec in vecs]
 
     def _top_n(self, vec, n: int) -> DataFrame:
-        """One query's result frame. Its query row is a one-row range with
-        the id and the ``ARRAY<FLOAT>`` vector as literals, so Catalyst folds
-        both into the scoring scan: the per-query window loses its partition
-        key and ``knn_topk_batch`` plans as a top-k, with no shuffle. The k
-        ranked rows are broadcast into the join back to the dataset, and
-        ``orderBy().limit()`` plans as ``TakeOrderedAndProject``."""
-        qrow = self._spark.range(0, 1, 1, 1).select(
-            F.lit(0).alias("query_id"),  # one query per plan
-            F.lit(vec).alias("query_vec"),  # one literal, not one per element
-        )
-        ranked = F.broadcast(knn_topk_batch(self.store, qrow, k=n, round_to=None))
+        """One query's result frame: ``knn_topk_unit`` scores the store
+        against the query literal and keeps the n nearest
+        (``TakeOrderedAndProject``, one job); the rank window runs over
+        those n rows only, and they are broadcast into the join back to the
+        dataset, whose ``orderBy().limit()`` is the second job."""
+        top = knn_topk_unit(self.store, self._distance, vec, n)
+        ranked = F.broadcast(top.withColumn("rank", self._rank))
         return (
             ranked.join(self.dataset, ranked["vec_id"] == self.dataset[_ID])
             .select(
-                (ranked["rank"] - 1).alias("rank"),  # reference ranks from 0
+                ranked["rank"],
                 ranked["distance"].alias("score"),
                 *self._doc_cols,
             )

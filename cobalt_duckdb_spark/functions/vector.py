@@ -56,9 +56,11 @@ def cosine_distance(a: Column | str, b: Column | str) -> Column:
 
 
 def l2_normalize(a: Column | str) -> Column:
-    """Scale to unit norm (zero vectors → NULL). Pre-normalizing at ingest
-    turns cosine distance into ``1 − dot`` — one multiply-add chain per pair
-    instead of three folds; this is the 100 TB ingest-side optimization."""
+    """Scale to unit norm (zero vectors → NULL). A store normalized at
+    ingest is scored with ``1 − dot`` — one fold per row instead of three —
+    by the serving kernel ``operators/knn.knn_topk_unit``, which normalizes
+    the query on the driver; ``cosine_distance`` itself still folds three
+    times, since it does not know its inputs are unit vectors."""
     a = _as_double_array(a)
     n = l2_norm(a)
     return F.when(n != 0.0, F.transform(a, lambda x: x / n))

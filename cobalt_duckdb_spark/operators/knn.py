@@ -21,14 +21,22 @@ Batch queries: the reference loops one SQL statement per query
 (``vector.py:171``); ``knn_topk_batch`` is the set-oriented rewrite — one job
 for all queries via broadcast of the (small) query set and a per-query
 window top-k.
+
+Serving: ``knn_topk_unit`` is the one-request kernel of ``client`` and
+``bench.py``. The store is unit-normalized at ingest and the query on the
+driver, so each row costs one dot-product fold against a query literal; the
+distance Column (``unit_cosine_distance``) names columns only and is built
+once per caller, so a request adds one literal to the plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cobalt_duckdb_spark.functions.vector import cosine_distance
+from cobalt_duckdb_spark.functions.vector import cosine_distance, dot_product
+
+_QUERY_COL = "_q"
 
 
 def knn_topk_broadcast_query(
@@ -77,9 +85,9 @@ def build_vector_store(
 ) -> DataFrame:
     """The reference's index build (``from_dataframe`` → register,
     ``vector.py:97-135``) Spark-style: optionally L2-normalize at ingest
-    (turning cosine distance into ``1 − dot`` — one fold per query instead of
-    three), persist in memory-and-disk, and register as a temp view for the
-    SQL surface. Returns the persisted frame; caller owns ``unpersist()``."""
+    (so ``knn_topk_unit`` can score it with ``1 − dot``, one fold per row),
+    persist in memory-and-disk, and register as a temp view for the SQL
+    surface. Returns the persisted frame; caller owns ``unpersist()``."""
     from pyspark import StorageLevel
 
     from cobalt_duckdb_spark.functions.vector import l2_normalize
@@ -92,6 +100,36 @@ def build_vector_store(
     store = store.persist(StorageLevel.MEMORY_AND_DISK)
     store.createOrReplaceTempView(view_name)
     return store
+
+
+def unit_cosine_distance() -> Column:
+    """Cosine distance of a unit-normalized ``embedding`` to the unit query
+    that ``knn_topk_unit`` adds as column ``_QUERY_COL``: ``1 − dot``. It
+    refers to columns by name only, so build it once and pass it to every
+    request; its lambdas then cost no py4j round trips per request."""
+    return F.lit(1.0) - dot_product("embedding", _QUERY_COL)
+
+
+def knn_topk_unit(store: DataFrame, distance: Column, vec, k: int) -> DataFrame:
+    """Top-k of a unit-normalized ``store`` (``vec_id``, ``embedding``)
+    against one query vector: (``vec_id``, ``distance``), the k nearest by
+    (distance, id), planned as ``TakeOrderedAndProject`` over the store scan.
+
+    ``vec`` is normalized here on the driver, in float64, and enters the
+    plan as one array literal; ``distance`` is ``unit_cosine_distance()``.
+    A zero-norm query has no direction: its literal is NULL, every distance
+    is NULL (as ``cosine_distance`` gives) and the k lowest ids win."""
+    import numpy as np
+
+    q = np.asarray(vec, dtype=np.float64)
+    norm = np.linalg.norm(q)
+    query = F.lit(q / norm) if norm else F.lit(None).cast("array<double>")
+    return (
+        store.withColumn(_QUERY_COL, query)
+        .select("vec_id", distance.alias("distance"))
+        .orderBy("distance", "vec_id")
+        .limit(k)
+    )
 
 
 def query_vector_of(embeddings: DataFrame, vec_id: int) -> list[float]:

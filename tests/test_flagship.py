@@ -177,9 +177,11 @@ def _cached_rdd_ids(df):
 
 def test_search_top_n_plan_runs_in_jvm(spark, search_client):
     """A request runs in the JVM alone: no Python worker (the query text is
-    embedded on the driver and enters the plan as literals), no new cached
+    embedded on the driver and enters the plan as a literal), no new cached
     relation (the store and the id-stamped dataset are the only ones), no
-    range-partitioning sort; a single request starts at most 3 jobs."""
+    range-partitioning sort, no nested-loop join against a query row and no
+    per-row norm (``sqrt``: the store and the query are unit vectors); a
+    single request starts at most 2 jobs."""
     client = search_client
     stored = _cached_rdd_ids(client.store) | _cached_rdd_ids(client.dataset)
     assert len(stored) == 2
@@ -194,6 +196,12 @@ def test_search_top_n_plan_runs_in_jvm(spark, search_client):
                 if n in ("ArrowEvalPython", "BatchEvalPython") or "ExistingRDD" in n
             ], names
             assert _cached_rdd_ids(frame) <= stored
+            assert "BroadcastNestedLoopJoin" not in names, names
+            assert not [
+                op.simpleString(10_000)
+                for op in ops
+                if "sqrt" in op.simpleString(10_000).lower()
+            ]
             assert not [
                 op
                 for op in ops
@@ -210,7 +218,90 @@ def test_search_top_n_plan_runs_in_jvm(spark, search_client):
         jobs = sc.statusTracker().getJobIdsForGroup("search_top_n_jobs")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert 0 < len(jobs) <= 3
+    assert 0 < len(jobs) <= 2
+
+
+def _brute_force_top_n(client, texts, n):
+    """numpy float64 cosine top-n over the collected store, ties broken by
+    ascending id (the rule of ``perfbench/verify.topk_ids``): doc ids and
+    distances per text."""
+    import numpy as np
+
+    from cobalt_duckdb_spark.client import _ID
+    from cobalt_duckdb_spark.functions.inference import QUERY_PREFIX
+
+    doc_of = dict(client.dataset.select(_ID, "doc_id").collect())
+    store = client.store.collect()
+    ids = np.array([doc_of[r["vec_id"]] for r in store])
+    vecs = np.array([r["embedding"] for r in store], dtype=np.float64)
+    s = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    # the client's query vectors are float32, as the embedder returns them
+    q = np.asarray(client._encode([QUERY_PREFIX + t for t in texts]), np.float32)
+    q = q.astype(np.float64)
+    q /= np.linalg.norm(q, axis=1, keepdims=True)
+    out = []
+    for d in 1.0 - q @ s.T:
+        order = np.lexsort((ids, d))[:n]
+        out.append((ids[order].tolist(), d[order].tolist()))
+    return out
+
+
+def test_search_top_n_matches_numpy_brute_force(spark, sf_dir):
+    """The client's top-n ids equal a numpy float64 brute-force cosine top-n,
+    ties broken by id, for several texts; two documents share one text, so
+    their scores tie exactly and only the id orders them."""
+    from cobalt_duckdb_spark.client import SparkSearchClient
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.orderBy("doc_id").limit(30)
+    [(first, text)] = docs.limit(1).collect()
+    twin = first + 10**9
+    corpus = docs.unionByName(spark.createDataFrame([(twin, text)], docs.schema))
+    client = SparkSearchClient.from_dataframe(corpus, "text", dim=16)
+
+    texts = ["key agg row scan", "stream window join", "検索 クエリ 🚀"]
+    for n in (5, 31):  # 31: the whole corpus, so the tie is inside
+        want = _brute_force_top_n(client, texts, n)
+        for frame, (ids, dists) in zip(client.search_top_n(texts, n=n), want, strict=True):
+            rows = frame.collect()
+            assert [r["rank"] for r in rows] == list(range(n))
+            assert [r["doc_id"] for r in rows] == ids
+            for r, d in zip(rows, dists):
+                assert abs(r["score"] - d) < 1e-12
+            if n == 31:
+                i = ids.index(first)
+                assert ids[i + 1] == twin and dists[i] == dists[i + 1]
+                assert rows[i]["score"] == rows[i + 1]["score"]
+    client.store.unpersist()
+    client.dataset.unpersist()
+
+
+def test_search_top_n_zero_query_ranks_by_id(search_client, monkeypatch):
+    """A zero query vector has no direction: every score is NULL and the n
+    lowest ids win, in id order (what ``cosine_distance`` gives, with
+    NULLs first)."""
+    import numpy as np
+
+    from cobalt_duckdb_spark.client import _ID
+
+    client = search_client
+    monkeypatch.setattr(
+        client, "_encode", lambda texts: np.zeros((len(texts), 16), np.float32)
+    )
+    want = [
+        r["doc_id"]
+        for r in client.dataset.join(
+            client.store.select(F.col("vec_id").alias(_ID)), _ID
+        )
+        .orderBy(_ID)
+        .limit(4)
+        .collect()
+    ]
+    [frame] = client.search_top_n("anything", n=4)
+    rows = frame.collect()
+    assert [r["rank"] for r in rows] == [0, 1, 2, 3]
+    assert [r["score"] for r in rows] == [None] * 4
+    assert [r["doc_id"] for r in rows] == want
 
 
 def test_search_top_n_persists_nothing(spark, search_client):
