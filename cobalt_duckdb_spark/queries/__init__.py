@@ -153,9 +153,15 @@ _DRIVER_PRIORITY = (
     "text_heaps_law_fit",  # src+helpers (r7)
     "events_mad_robust_outliers",  # src+helpers (r8)
     "stats_benjamini_hochberg_fdr",  # src+helpers (r8)
+    "events_markov_entropy_rate",  # src+helpers (r9)
     "stats_key_skew_profiler",  # src+helpers (r9)
     "embedding_knn_hubness_audit",  # src (r10)
+    "embedding_pca_power_iteration",  # src+helpers (r10)
     "events_assoc_rules_types",  # src (r10)
+    "events_markov_absorption",  # src+helpers (r10)
+    "events_markov_removal_attribution",  # src+helpers (r10)
+    "events_markov_stationary",  # src+helpers (r10)
+    "events_transition_matrix",  # src+helpers (r10)
     "join_interval_error_click_left",  # src (r10)
     "train_triplet_margin_audit",  # src (r10)
     "subq_correlated_above_avg_parts",  # helpers (r2)
@@ -175,12 +181,6 @@ _DRIVER_PRIORITY = (
     "events_peak_concurrent_incidents",  # helpers (r3)
     "events_seasonal_hour_anomaly",  # helpers (r3)
     "events_signup_to_purchase_funnel",  # helpers (r3)
-    "events_top_trigram_paths",  # helpers (r3)
-    "events_weekly_cohort_retention",  # helpers (r3)
-    "features_customer_rfm",  # helpers (r3)
-    "graph_pagerank_event_flow",  # helpers (r3)
-    "graph_triangle_parts",  # helpers (r3)
-    "mix_temperature_sample",  # helpers (r3)
 )
 
 

@@ -12,7 +12,7 @@ emulated in SQL as the union of ``window/slide`` phase-shifted buckets.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.exact import (
@@ -25,6 +25,18 @@ from cobalt_duckdb_spark.functions.exact import (
     exact_round_sum,
     exact_round_sum_sql,
     spark_round_sql,
+)
+from cobalt_duckdb_spark.functions.matrix import (
+    add,
+    dense,
+    identity,
+    indices,
+    iterate,
+    let,
+    long,
+    product,
+    total,
+    where,
 )
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.queries import register
@@ -487,6 +499,29 @@ def events_latest_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _transition_counts(e: DataFrame) -> DataFrame:
+    """Per-user transitions in (ts, event_id) order: one row per (i, j) =
+    (event_type, next event_type) with ``n`` (bigint) occurrences, of which
+    ``starts`` are a user's first event. j is NULL on a user's last event,
+    so ``n`` summed over j counts every event of type i. One user_id window
+    shuffle, then a |types|²-row aggregate."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        e.select(
+            F.col("event_type").alias("i"),
+            F.lead("event_type").over(w).alias("j"),
+            (F.row_number().over(w) == 1).alias("_first"),
+        )
+        .groupBy("i", "j")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if("_first").alias("starts"),
+        )
+    )
+
+
 @register(
     "events_transition_matrix",
     oracle="""
@@ -518,25 +553,14 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     via (ts, event_id) tiebreak."""
     from pyspark.sql import Window
 
-    e = load_table(spark, sf_dir, "events")
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
+    pairs = _transition_counts(load_table(spark, sf_dir, "events")).filter(
+        F.col("j").isNotNull()
     )
-    pairs = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("next_type", nxt)
-        .filter(F.col("next_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = Window.partitionBy("from_type")
+    tot = Window.partitionBy("i")
     return pairs.select(
-        "from_type",
-        "to_type",
-        F.col("n").cast("bigint").alias("n"),
+        F.col("i").alias("from_type"),
+        F.col("j").alias("to_type"),
+        "n",
         F.round(F.col("n") / F.sum("n").over(tot), 6).alias("p"),
     ).orderBy("from_type", "to_type")
 
@@ -1103,6 +1127,28 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MKV_SQUARINGS = 5  # P^(2^5) = 32-step chain — ample mixing for 5 states
 
 
+def _round9(cells: Column) -> Column:
+    """The per-step 9-dp fixed point both engines apply to each cell."""
+    return F.transform(cells, lambda x: F.round(x, 9))
+
+
+def _markov_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one-step transition matrix P[i, j] = round(n / row total, 9)
+    as one ``labels``/``cells`` row."""
+    from pyspark.sql import Window
+
+    pairs = _transition_counts(load_table(spark, sf_dir, "events")).filter(
+        F.col("j").isNotNull()
+    )
+    row_total = F.sum("n").over(Window.partitionBy("i"))
+    return dense(pairs.select("i", "j", F.round(F.col("n") / row_total, 9).alias("p")))
+
+
+def _squared(p: Column, k: Column) -> Column:
+    """P^(2^_MKV_SQUARINGS), rounded to 9 dp after every squaring."""
+    return iterate(p, _MKV_SQUARINGS, lambda m: _round9(product(m, m, k)))
+
+
 @register(
     "events_markov_stationary",
     oracle=f"""
@@ -1143,66 +1189,30 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     journeys spend their time in the long run (the equilibrium complement
     of `events_transition_matrix`'s one-step view and the PageRank query's
     damped variant). π is read off P^32: five squarings of the |types|²
-    long-format matrix (repeated-squaring pattern shared with the PCA
+    transition matrix (repeated-squaring pattern shared with the PCA
     query), then a uniform-start row average and renormalization. 9-dp
     rounding per squaring is the cross-engine fixed point.
 
     Scale: the only corpus-wide work is the sequence window's user_id
-    shuffle; every squaring is a join-aggregate over ≤|types|² rows."""
+    shuffle. The matrix is one row (functions/matrix.py) and the squarings
+    are an ``aggregate`` over it inside the same plan — building the query
+    starts no Spark job."""
     from pyspark.sql import Window
 
-    e = load_table(spark, sf_dir, "events")
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    pairs = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("next_type", nxt)
-        .filter(F.col("next_type").isNotNull())
-        .groupBy(F.col("event_type").alias("i"), F.col("next_type").alias("j"))
-        .agg(F.count(F.lit(1)).cast("double").alias("n"))
-    )
-    tot = Window.partitionBy("i")
-    # |types|²-row frames: coalesce(1) around each checkpoint so every
-    # squaring runs as a narrow single-partition join+agg instead of 32-way
-    # shuffles of ≤64 rows (same discipline as operators/graph.pagerank)
-    p = (
-        pairs.select(
-            "i", "j", F.round(F.col("n") / F.sum("n").over(tot), 9).alias("p")
-        )
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-        .coalesce(1)
-    )
-    for _ in range(_MKV_SQUARINGS):
-        x, y = p.alias("x"), p.alias("y")
-        p = (
-            x.join(y, F.col("x.j") == F.col("y.i"))
-            .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
-            .agg(F.round(F.sum(F.col("x.p") * F.col("y.p")), 9).alias("p"))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-            .coalesce(1)
-        )
-    pi_raw = p.groupBy(F.col("j").alias("event_type")).agg(
-        F.avg("p").alias("pi")
-    )
-    z = pi_raw.agg(F.sum("pi").alias("z"))
-    return (
-        pi_raw.crossJoin(F.broadcast(z))
-        .select(
-            "event_type",
-            # z CAN be exactly 0: on a leaky (absorbing) chain the squared
-            # mass decays geometrically and 9-dp rounding floors it to 0
-            # (0.5^32 ≈ 2e-10 — sparse-world fuzz, 10-event corpus). DuckDB
-            # division by zero yields NULL; Spark ANSI raises — guard to
-            # the shared NULL contract (no surviving mass → π undefined).
-            F.round(
-                F.when(F.col("z") > 0, F.col("pi") / F.col("z")), 6
-            ).alias("stationary_p"),
-        )
-        .orderBy("event_type")
-    )
+    pk = long(_markov_dense(spark, sf_dir).select(
+        "labels", _squared(F.col("cells"), F.size("labels")).alias("cells")
+    ))
+    pi = pk.groupBy(F.col("j").alias("event_type")).agg(F.avg("p").alias("pi"))
+    z = F.sum("pi").over(Window.partitionBy())
+    return pi.select(
+        "event_type",
+        # z CAN be exactly 0: on a leaky (absorbing) chain the squared
+        # mass decays geometrically and 9-dp rounding floors it to 0
+        # (0.5^32 ≈ 2e-10 — sparse-world fuzz, 10-event corpus). DuckDB
+        # division by zero yields NULL; Spark ANSI raises — guard to
+        # the shared NULL contract (no surviving mass → π undefined).
+        F.round(F.when(z > 0, F.col("pi") / z), 6).alias("stationary_p"),
+    ).orderBy("event_type")
 
 
 @register(
@@ -1497,66 +1507,32 @@ def events_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     The inverse is never formed: N = Σ Q^k, computed by the DOUBLING
     identity S₂ₙ = Sₙ + Sₙ·Pₙ, P₂ₙ = Pₙ·Pₙ — 7 doublings give the
     128-term series whose residual (ρ(Q)¹²⁸) is far below the 6-dp
-    output rounding. Same long-format matrix algebra + per-step 9-dp
-    fixed point + localCheckpoint discipline as the PCA and stationary
-    queries; every matrix is |transient states|², broadcast-scale."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    probs = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("next_type", nxt)
-        .filter(F.col("next_type").isNotNull())
-        .groupBy(F.col("event_type").alias("i"), F.col("next_type").alias("j"))
-        .agg(F.count(F.lit(1)).cast("double").alias("n"))
-    )
-    tot = Window.partitionBy("i")
-    q = (
-        probs.select(
-            "i", "j", F.round(F.col("n") / F.sum("n").over(tot), 9).alias("p")
-        )
-        .filter((F.col("i") != "purchase") & (F.col("j") != "purchase"))
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-        .coalesce(1)
-    )
-    # identity seed: a distinct over the checkpointed |transient|²-row q
-    # leaf — cheap enough to leave lazy (no second eager checkpoint job)
-    s = (
-        q.select("i")
-        .distinct()
-        .select("i", F.col("i").alias("j"), F.lit(1.0).alias("p"))
-        .coalesce(1)
-    )
-
-    def matmul(a, b):
-        x, y = a.alias("x"), b.alias("y")
-        return (
-            x.join(y, F.col("x.j") == F.col("y.i"))
-            .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
-            .agg(F.round(F.sum(F.col("x.p") * F.col("y.p")), 9).alias("p"))
-        )
-
-    for _ in range(_ABS_DOUBLINGS):
-        s_next = (
-            s.select("i", "j", "p")
-            .unionAll(matmul(s, q))
-            .groupBy("i", "j")
-            .agg(F.round(F.sum("p"), 9).alias("p"))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-            .coalesce(1)
-        )
-        q = matmul(q, q).coalesce(1).localCheckpoint(eager=True).coalesce(1)
-        s = s_next
-    return s.select(
+    output rounding. Same one-row matrix algebra (functions/matrix.py)
+    and per-step 9-dp fixed point as the stationary query; Q is P with
+    the purchase row and column absent, and the series starts from the
+    identity over the states that have a transient successor."""
+    m = _markov_dense(spark, sf_dir)
+    labels, k = F.col("labels"), F.size("labels")
+    q0 = where(F.col("cells"), labels, lambda li, lj: (li != "purchase") & (lj != "purchase"))
+    s_k = let(q0, lambda q: _series(
+        identity(labels, lambda _, a: total(F.slice(q, a * k + 1, k)).isNotNull()),
+        q, k, _ABS_DOUBLINGS, lambda acc: acc["s"],
+    ))
+    return long(m.select("labels", s_k.alias("cells"))).select(
         F.col("i").alias("from_state"),
         F.col("j").alias("to_state"),
         F.round("p", 6).alias("expected_visits"),
     ).orderBy("from_state", "to_state")
+
+
+def _series(s0: Column, q0: Column, k: Column, doublings: int, finish) -> Column:
+    """The series-doubling iteration S₂ₙ = round(Sₙ + Sₙ·Qₙ, 9),
+    Q₂ₙ = round(Qₙ·Qₙ, 9) from (S₁, Q₁) = (``s0``, ``q0``): after d
+    doublings S = Σ Q₁^t, t < 2^d. ``finish`` maps the last (s, q)."""
+    return iterate(F.struct(s0.alias("s"), q0.alias("q")), doublings, lambda acc: F.struct(
+        _round9(add(acc["s"], product(acc["s"], acc["q"], k))).alias("s"),
+        _round9(product(acc["q"], acc["q"], k)).alias("q"),
+    ), finish)
 
 
 # ---------------------------------------------------------------------------
@@ -1820,160 +1796,64 @@ def events_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataF
     missing row mass IS the exit probability), so no synthetic NULL state
     is materialized.
 
-    Scale: the user-sequence scan (one window shuffle) prices the query;
-    all 5 solves run on |channels|²-sized checkpointed frames —
-    counterfactual analysis costs vocabulary-sized algebra, not rescans."""
+    Scale: one user-sequence window yields the pair counts, the occupancy
+    totals and the first events. The matrix is one row (functions/matrix.py)
+    and the five solves are five rows of one frame, each with its removed
+    channel's cells absent — vocabulary-sized algebra in the query's own
+    plan, no rescans and no build job."""
     from pyspark.sql import Window
 
-    e = load_table(spark, sf_dir, "events")
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
+    by_i, everyone = Window.partitionBy("i"), Window.partitionBy()
+    starts = F.sum("starts").over(by_i)
+    counts = _transition_counts(load_table(spark, sf_dir, "events")).select(
+        "i", "j", F.round(F.col("n") / F.sum("n").over(by_i), 9).alias("p"),
+        F.when(starts > 0, F.round(starts / F.sum("starts").over(everyone), 9))
+        .alias("w"),
     )
-    seq = e.select("user_id", "event_type", "ts", "event_id").withColumn(
-        "next_type", nxt
-    )
-    counts = e.groupBy(F.col("event_type").alias("i")).agg(
-        F.count(F.lit(1)).cast("double").alias("n")
-    )
-    pairs = (
-        seq.filter(F.col("next_type").isNotNull())
-        .groupBy(F.col("event_type").alias("i"), F.col("next_type").alias("j"))
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-    )
-    pfull = (
-        pairs.join(F.broadcast(counts), "i")
-        .select("i", "j", F.round(F.col("c") / F.col("n"), 9).alias("p"))
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-        .coalesce(1)
-    )
-    # distinct non-purchase states, materialized ONCE: every counterfactual
-    # solve used to rebuild its identity seed with `e.select(...).distinct()`
-    # — six full event scans + six distinct shuffles per query run for a
-    # ≤|types|-row frame (guide §1.2). All six solves now filter this leaf.
-    chan = (
-        e.select(F.col("event_type").alias("i"))
-        .filter(F.col("i") != "purchase")
-        .distinct()
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-        .coalesce(1)
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    firsts = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select(F.col("event_type").alias("i"))
-    )
-    n_users = firsts.agg(F.count(F.lit(1)).cast("double").alias("nu"))
-    start_dist = (
-        firsts.groupBy("i")
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .crossJoin(F.broadcast(n_users))
-        .select("i", F.round(F.col("c") / F.col("nu"), 9).alias("w"))
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-        .coalesce(1)
-    )
+    # the start distribution w[i] rides along as a map, one entry per type;
+    # the NULL channel is the full graph
+    variants = dense(
+        counts, F.map_from_entries(F.collect_set(F.struct("i", "w"))).alias("w")
+    ).withColumn("channel", F.explode(
+        F.array(F.lit(None).cast("string"), *map(F.lit, _RE_CHANNELS))
+    ))
+    labels, k, w = F.col("labels"), F.size("labels"), F.col("w")
 
-    def matmul(a, b):
-        x, y = a.alias("x"), b.alias("y")
-        return (
-            x.join(y, F.col("x.j") == F.col("y.i"))
-            .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
-            .agg(F.round(F.sum(F.col("x.p") * F.col("y.p")), 9).alias("p"))
-        )
+    def kept(li: Column) -> Column:
+        return (li != "purchase") & ~li.eqNullSafe(F.col("channel"))
 
-    def conversion(excl: str | None):
-        keep = ~F.col("i").isin(excl) if excl else F.lit(True)
-        keep_j = ~F.col("j").isin(excl) if excl else F.lit(True)
-        q = (
-            pfull.filter(
-                (F.col("i") != "purchase") & (F.col("j") != "purchase")
-                & keep & keep_j
-            )
-            # plain filter over the checkpointed pfull leaf — tiny, no
-            # per-solve eager checkpoint job needed
-        )
-        r = pfull.filter(
-            (F.col("j") == "purchase") & (F.col("i") != "purchase") & keep
-        ).select("i", "p")
-        # identity over ALL channels minus the removed one (NOT just states
-        # appearing in q): a state whose only edges lead to purchase or the
-        # removed channel still carries its direct-conversion term via s1·r.
-        # Filters the checkpointed `chan` leaf — no event rescan, no eager
-        # job per solve.
-        s = chan.filter(keep).select(
-            "i", F.col("i").alias("j"), F.lit(1.0).alias("p")
-        )
-        for d in range(_RE_DOUBLINGS):
-            s_next = (
-                s.select("i", "j", "p")
-                .unionAll(matmul(s, q))
-                .groupBy("i", "j")
-                .agg(F.round(F.sum("p"), 9).alias("p"))
-                .coalesce(1)
-                .localCheckpoint(eager=True)
-                .coalesce(1)
-            )
-            q = matmul(q, q).coalesce(1).localCheckpoint(eager=True).coalesce(1)
-            s = s_next
-        b = (
-            s.alias("s")
-            .join(r.alias("r"), F.col("s.j") == F.col("r.i"))
-            .groupBy(F.col("s.i").alias("i"))
-            .agg(F.round(F.sum(F.col("s.p") * F.col("r.p")), 9).alias("p"))
-        )
-        via_chain = (
-            start_dist.alias("sd")
-            .join(b.alias("b"), F.col("sd.i") == F.col("b.i"))
-            .agg(F.coalesce(F.sum(F.col("sd.w") * F.col("b.p")), F.lit(0.0)).alias("v"))
-        )
-        direct = start_dist.filter(F.col("i") == "purchase").agg(
-            F.coalesce(F.sum("w"), F.lit(0.0)).alias("d")
-        )
-        return (
-            via_chain.crossJoin(direct)
-            .select(F.round(F.col("v") + F.col("d"), 9).alias("conv"))
-        )
+    def conversion(acc: Column) -> Column:
+        # b = S·r only has the purchase column; conv = Σ w[i]·b[i] over
+        # the starts that reach it, plus the users who start converted
+        r = where(F.col("cells"), labels, lambda li, lj: kept(li) & (lj == "purchase"))
+        via_chain = let(_round9(product(acc["s"], r, k)), lambda b: total(F.transform(
+            labels, lambda li, a: w[li] * total(F.slice(b, a * k + 1, k))
+        )))
+        direct = F.coalesce(w[F.lit("purchase")], F.lit(0.0))
+        return F.round(F.coalesce(via_chain, F.lit(0.0)) + direct, 9)
 
-    # The 5 counterfactual solves are independent chains of 16-row eager
-    # checkpoints — scheduling-overhead-bound, not compute-bound. Build
-    # them on concurrent driver threads so their tiny jobs interleave in
-    # the scheduler (12.3 s -> ~4 s at sf0.1); each thread only issues
-    # Spark actions, no shared Python state.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        futs = {c: pool.submit(conversion, c) for c in _RE_CHANNELS}
-        conv_full = conversion(None)
-        solved = {c: f.result() for c, f in futs.items()}
-    rows = None
-    for c in _RE_CHANNELS:
-        row = (
-            conv_full.select(F.col("conv").alias("conv_full"))
-            .crossJoin(solved[c].select(F.col("conv").alias("conv_removed")))
-            .select(F.lit(c).alias("channel"), "conv_full", "conv_removed")
-        )
-        rows = row if rows is None else rows.unionByName(row)
+    conv = _series(
+        identity(labels, lambda li, _: kept(li)),
+        where(F.col("cells"), labels, lambda li, lj: kept(li) & kept(lj)),
+        k, _RE_DOUBLINGS, conversion,
+    )
+    conv_full = F.max(F.when(F.col("channel").isNull(), F.col("conv")))
     # Zero guards (round-3 advice), mirrored in the oracle: a slice with no
     # observed conversions (conv_full = 0) or all-zero removal effects
     # degrades to clean 0.0 rows instead of null/NaN attribution.
-    eff = rows.select(
-        "channel",
-        "conv_full",
-        "conv_removed",
-        F.when(F.col("conv_full") == 0, F.lit(0.0))
-        .otherwise(
-            F.round(F.lit(1.0) - F.col("conv_removed") / F.col("conv_full"), 9)
+    eff = (
+        variants.select("channel", conv.alias("conv"))
+        .select(
+            "channel",
+            conv_full.over(everyone).alias("conv_full"),
+            F.col("conv").alias("conv_removed"),
         )
-        .alias("removal_effect"),
+        .filter(F.col("channel").isNotNull())
+        .withColumn("removal_effect", F.when(F.col("conv_full") == 0, 0.0).otherwise(
+            F.round(1.0 - F.col("conv_removed") / F.col("conv_full"), 9)
+        ))
     )
-    wall = Window.partitionBy()
-    tot_eff = F.sum("removal_effect").over(wall)
+    tot_eff = F.sum("removal_effect").over(everyone)
     return eff.select(
         "channel",
         F.round("conv_full", 6).alias("conv_full"),
@@ -2055,65 +1935,40 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition: pi comes from the same 5-squaring P^32 machinery as
     `events_markov_stationary` (9-dp lockstep); row entropies come from
-    the one-step matrix; the rate is a |types|-row weighted sum. One
-    corpus-wide window shuffle; everything else is vocabulary-sized."""
+    the one-step matrix in the same row; the rate is a |types|-row
+    weighted sum. One corpus-wide window shuffle; everything else is
+    vocabulary-sized and runs in the query's own plan."""
     from pyspark.sql import Window
 
-    e = load_table(spark, sf_dir, "events")
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    pairs = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("next_type", nxt)
-        .filter(F.col("next_type").isNotNull())
-        .groupBy(F.col("event_type").alias("i"), F.col("next_type").alias("j"))
-        .agg(F.count(F.lit(1)).cast("double").alias("n"))
-    )
-    tot = Window.partitionBy("i")
-    # same narrow single-partition squaring discipline as
-    # events_markov_stationary (|types|²-row frames)
-    p0 = (
-        pairs.select(
-            "i", "j", F.round(F.col("n") / F.sum("n").over(tot), 9).alias("p")
-        )
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-        .coalesce(1)
-    )
-    p = p0
-    for _ in range(_MKV_SQUARINGS):
-        x, y = p.alias("x"), p.alias("y")
-        p = (
-            x.join(y, F.col("x.j") == F.col("y.i"))
-            .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
-            .agg(F.round(F.sum(F.col("x.p") * F.col("y.p")), 9).alias("p"))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-            .coalesce(1)
-        )
-    pi_raw = p.groupBy(F.col("j").alias("i")).agg(F.avg("p").alias("pi_r"))
-    z = pi_raw.agg(F.sum("pi_r").alias("z"))
-    pi = pi_raw.crossJoin(F.broadcast(z)).select(
+    k, everyone = F.size("labels"), Window.partitionBy()
+    # h[i] = round(-Σ_j p ln p, 9) over row i's present cells; NULL for a
+    # row with no transitions (the oracle's inner join drops that state)
+    h = let(F.col("cells"), lambda p: F.transform(indices(k), lambda a: F.round(
+        -total(F.transform(F.slice(p, a * k + 1, k), lambda x: x * F.log(x))), 9
+    )))
+    pk = long(_markov_dense(spark, sf_dir).select(
+        "labels",
+        _squared(F.col("cells"), k).alias("cells"),
+        F.map_from_arrays("labels", h).alias("h"),
+    ), "h")
+    pi_raw = pk.groupBy(
+        F.col("j").alias("i"), F.col("h")[F.col("j")].alias("h")
+    ).agg(F.avg("p").alias("pi_r"))
+    z = F.sum("pi_r").over(everyone)
+    joined = pi_raw.select(
         "i",
+        "h",
         # same z=0 guard as events_markov_stationary (leaky chain decays
         # to all-zero mass at 9 dp — sparse-world fuzz): DuckDB NULLs,
         # Spark ANSI raises
-        F.round(F.when(F.col("z") > 0, F.col("pi_r") / F.col("z")), 9).alias(
-            "pi"
-        ),
-    )
-    hrow = p0.groupBy("i").agg(
-        F.round(-F.sum(F.col("p") * F.log("p")), 9).alias("h")
-    )
-    joined = pi.join(hrow, "i")
-    wall = Window.partitionBy()
+        F.round(F.when(z > 0, F.col("pi_r") / z), 9).alias("pi"),
+    ).filter(F.col("h").isNotNull())
     return joined.select(
         F.col("i").alias("event_type"),
         F.round("pi", 6).alias("stationary_p"),
         F.round("h", 6).alias("state_entropy_nats"),
         F.round(F.col("pi") * F.col("h"), 6).alias("contribution"),
-        F.round(F.sum(F.col("pi") * F.col("h")).over(wall), 6).alias(
+        F.round(F.sum(F.col("pi") * F.col("h")).over(everyone), 6).alias(
             "chain_entropy_rate"
         ),
     ).orderBy("event_type")

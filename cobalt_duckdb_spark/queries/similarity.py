@@ -5,10 +5,18 @@ registered in queries/__init__.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.exact import spark_round_sql
+from cobalt_duckdb_spark.functions.matrix import (
+    dense,
+    indices,
+    iterate,
+    let,
+    product,
+    total,
+)
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators.knn import knn_topk_batch
 from cobalt_duckdb_spark.operators.similarity import ivf_topk
@@ -1240,17 +1248,19 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     `eigenvalue` = the Rayleigh quotient vᵀCv (variance captured).
 
     Two-phase scale design:
-    1. ONE pass over the data builds the 64×64 covariance in long format —
-       d² mergeable partial sums keyed by (i, j); this is the only stage
+    1. ONE pass over the data builds the 64×64 covariance as d²
+       mergeable partial sums keyed by (i, j); this is the only stage
        that touches the corpus, and it runs identically over 1e9 vectors.
     2. The power method then runs AGAINST C, not the data — and instead of
        k sequential mat-vecs it uses REPEATED SQUARING: 6 matrix-squarings
        give C^64 (64 effective iterations, enough for this near-flat
-       spectrum), each squaring an O(d³) join-aggregate over the tiny
-       broadcast-scale matrix. Per-squaring max-abs normalization keeps the
-       entries in [−1, 1] (C^64 alone would underflow at ~λ⁶⁴) and 9-dp
-       rounding is the cross-engine fixed point (k-means discipline), with
-       the final direction rounded at 6 dp."""
+       spectrum). C is one row of d² cells (functions/matrix.py) and the
+       squarings, the direction and the Rayleigh quotient are expressions
+       over that row in the same plan — no checkpoint and no job per
+       squaring. Per-squaring max-abs normalization keeps the entries in
+       [−1, 1] (C^64 alone would underflow at ~λ⁶⁴) and 9-dp rounding is
+       the cross-engine fixed point (k-means discipline), with the final
+       direction rounded at 6 dp."""
 
     # spread=True: one-row-group scan; heavy per-row vector work below
     # would otherwise run on one core (no-op at production sizes)
@@ -1266,62 +1276,53 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
         "vec_id", "i", (F.col("x") - F.col("m")).alias("c")
     )
     a, b = centered.alias("a"), centered.alias("b")
-    cov = (
+    # cov keeps its lazy checkpoint: inline, the two-pass covariance (mu,
+    # then the a/b self-join) puts 3 more embeddings scans in the plan, over
+    # the tests/test_plans.py ceiling. AQE runs its shuffle stages while the
+    # checkpoint is built (6 jobs); the squarings add none.
+    cov = dense(
         a.join(b, F.col("a.vec_id") == F.col("b.vec_id"))
         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
-        .agg(F.avg(F.col("a.c") * F.col("b.c")).alias("val"))
+        .agg(F.avg(F.col("a.c") * F.col("b.c")).alias("p"))
         .localCheckpoint(eager=False)
     )
+    k = F.size("labels")
 
-    from pyspark.sql import Window
+    def normalized(c: Column) -> Column:
+        # max-abs normalization + the 9-dp fixed point, c bound once
+        return let(c, lambda c: let(
+            F.array_max(F.transform(c, F.abs)),
+            lambda mx: F.transform(c, lambda x: F.round(x / mx, 9)),
+        ))
 
-    def _normalized(mat: DataFrame) -> DataFrame:
-        # max-abs normalizer as a GLOBAL WINDOW over the (single-partition,
-        # d²-row) matrix, not an agg + crossJoin(broadcast(...)): the
-        # broadcast variant costs a separate driver job to build the 1-row
-        # relation EVERY squaring, and these d²-row iterations are
-        # driver-job-latency-bound, not compute-bound (r9 probe: 2.2 s per
-        # squaring → ~1 s; identical value — max is order-insensitive).
-        mx = F.max(F.abs(F.col("val"))).over(Window.partitionBy())
-        return mat.coalesce(1).select(
-            "i", "j", F.round(F.col("val") / mx, 9).alias("val")
+    def direction(m: Column) -> Column:
+        # v = row sums of C^64, unit-normalized, rounded to 6 dp
+        y = F.transform(indices(k), lambda i: total(F.slice(m, i * k + 1, k)))
+        return let(y, lambda y: let(
+            F.sqrt(total(F.transform(y, lambda x: x * x))),
+            lambda nrm: F.transform(y, lambda x: F.round(x / nrm, 6)),
+        ))
+
+    v = cov.select("labels", "cells", iterate(
+        normalized(F.col("cells")),
+        _PCA_SQUARINGS,
+        lambda m: normalized(product(m, m, k)),
+        direction,
+    ).alias("v"))
+    # Rayleigh quotient vᵀCv against the unnormalized covariance cells,
+    # taken on the one row, before the explode
+    lam = let(F.col("v"), lambda v: total(F.flatten(F.transform(
+        indices(k), lambda i: F.transform(
+            indices(k), lambda j: v[i] * F.col("cells")[i * k + j] * v[j]
         )
-
-    # Each squaring references m THREE times (both join sides + its max-abs
-    # normalizer); without lineage truncation the unrolled plan re-derives
-    # the base exponentially (3^6 ×). The matrix is d²=4096 rows, so an
-    # eager localCheckpoint per squaring is microscopic and keeps both the
-    # plan and the analysis time linear in the squaring count; coalesce(1)
-    # around each checkpoint keeps the squarings narrow single-partition
-    # joins (the events_markov_* discipline) instead of 32-way shuffles of
-    # 4096 rows.
-    m = _normalized(cov).localCheckpoint(eager=True).coalesce(1)
-    for _ in range(_PCA_SQUARINGS):
-        x, y = m.alias("x"), m.alias("y")
-        sq = (
-            x.join(y, F.col("x.j") == F.col("y.i"))
-            .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
-            .agg(F.sum(F.col("x.val") * F.col("y.val")).alias("val"))
-        )
-        m = _normalized(sq).localCheckpoint(eager=True).coalesce(1)
-    vraw = m.groupBy("i").agg(F.sum("val").alias("y"))
-    vnrm = vraw.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-    v = vraw.crossJoin(F.broadcast(vnrm)).select(
-        "i", F.round(F.col("y") / F.col("nrm"), 6).alias("val")
-    )
-    va = v.select(F.col("i").alias("ri"), F.col("val").alias("va"))
-    vb = v.select(F.col("i").alias("rj"), F.col("val").alias("vb"))
-    rayleigh = (
-        cov.join(F.broadcast(va), F.col("i") == F.col("ri"))
-        .join(F.broadcast(vb), F.col("j") == F.col("rj"))
-        .agg(F.sum(F.col("va") * F.col("val") * F.col("vb")).alias("lam"))
-    )
+    ))))
     return (
-        v.crossJoin(F.broadcast(rayleigh))
+        v.select("labels", "v", F.round(lam, 4).alias("eigenvalue"))
+        .select("labels", "eigenvalue", F.posexplode_outer("v"))
         .select(
-            (F.col("i") - 1).cast("bigint").alias("dim"),
-            F.col("val").alias("loading"),
-            F.round("lam", 4).alias("eigenvalue"),
+            (F.col("labels")[F.col("pos")] - 1).cast("bigint").alias("dim"),
+            F.col("col").alias("loading"),
+            "eigenvalue",
         )
         .orderBy("dim")
     )

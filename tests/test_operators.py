@@ -971,6 +971,130 @@ def test_markov_absorption_matches_numpy_inverse(spark, sf_dir):
             assert r["expected_visits"] >= 1.0
 
 
+def _round9(cells):
+    return F.transform(cells, lambda x: F.round(x, 9))
+
+
+def _long_square(p):
+    """The long-format step the one-row product replaces: join on the
+    middle label, SUM, round to 9 dp."""
+    x, y = p.alias("x"), p.alias("y")
+    return (
+        x.join(y, F.col("x.j") == F.col("y.i"))
+        .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
+        .agg(F.round(F.sum(F.col("x.p") * F.col("y.p")), 9).alias("p"))
+    )
+
+
+def test_matrix_product_and_iterate_match_long_join(spark):
+    """The one-row product and iteration equal the long-format
+    join-aggregate cell for cell. Absent edges stay absent (NULL, no long
+    row) — c has no successor, nothing reaches a from b — and the a→c
+    cell of P² (1e-5 · 1e-5, rounded to 9 dp) stays a PRESENT 0.0."""
+    from cobalt_duckdb_spark.functions.matrix import dense, iterate, long, product
+
+    p = spark.createDataFrame(
+        [("a", "a", 0.99999), ("a", "b", 1e-5), ("b", "b", 0.99999),
+         ("b", "c", 1e-5)],
+        "i STRING, j STRING, p DOUBLE",
+    )
+    m = dense(p)
+    k = F.size("labels")
+    sq = m.select(
+        "labels", _round9(product(F.col("cells"), F.col("cells"), k)).alias("cells")
+    )
+    p8 = m.select(
+        "labels",
+        iterate(F.col("cells"), 3, lambda c: _round9(product(c, c, k))).alias(
+            "cells"
+        ),
+    )
+
+    def cells(df):
+        return {(r["i"], r["j"]): r["p"] for r in df.collect()}
+
+    want2 = cells(_long_square(p))
+    want8 = cells(_long_square(_long_square(_long_square(p))))
+    assert cells(long(sq)) == want2
+    assert cells(long(p8)) == want8
+    assert want2[("a", "c")] == 0.0
+    row = sq.collect()[0]
+    labels, got = row["labels"], row["cells"]
+    assert labels == ["a", "b", "c"]
+    assert got[0 * 3 + 2] == 0.0  # present zero
+    assert got[1 * 3 + 0] is None  # b never reaches a
+    assert got[2 * 3:] == [None, None, None]  # c has no successor
+    assert ("b", "a") not in want2 and ("b", "a") not in want8
+    # a complete matrix, rows given in reverse: cells come out row-major
+    full = spark.createDataFrame(
+        [(i, j, 10.0 * a + b) for a, i in enumerate("xyz")
+         for b, j in enumerate("xyz")][::-1],
+        "i STRING, j STRING, p DOUBLE",
+    )
+    assert dense(full).collect()[0]["cells"] == [
+        10.0 * a + b for a in range(3) for b in range(3)
+    ]
+
+
+def test_markov_stationary_matches_numpy(spark, sf_dir):
+    """π read off P³² equals numpy's: the exact transition matrix to the
+    32nd power, row-mean, normalized — to 1e-6 (6-dp output plus the
+    9-dp per-squaring fixed point)."""
+    import numpy as np
+
+    from cobalt_duckdb_spark.queries.events import events_markov_stationary
+
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .select("user_id", "event_type", "ts", "event_id")
+        .toPandas()
+        .sort_values(["user_id", "ts", "event_id"])
+    )
+    ev["next"] = ev.groupby("user_id")["event_type"].shift(-1)
+    pairs = ev.dropna(subset=["next"])
+    types = sorted(set(pairs["event_type"]) | set(pairs["next"]))
+    idx = {t: n for n, t in enumerate(types)}
+    C = np.zeros((len(types), len(types)))
+    for a, b in zip(pairs["event_type"], pairs["next"]):
+        C[idx[a], idx[b]] += 1
+    Pk = np.linalg.matrix_power(C / C.sum(axis=1, keepdims=True), 32)
+    # every cell present, so the query's per-column AVG over present cells
+    # is numpy's plain row-mean
+    assert (Pk > 0).all()
+    pi = Pk.mean(axis=0)
+    pi /= pi.sum()
+    got = {
+        r["event_type"]: r["stationary_p"]
+        for r in events_markov_stationary(spark, sf_dir).collect()
+    }
+    assert sorted(got) == types
+    for t in types:
+        assert abs(got[t] - pi[idx[t]]) < 1e-6, (t, got[t], pi[idx[t]])
+
+
+def test_markov_stationary_leaky_chain_is_null(spark, tmp_path):
+    """A leaky chain (a→a, a→b, b has no successor) decays to all-zero
+    mass at 9 dp: P³² keeps its cells as PRESENT 0.0, so π's normalizer
+    is 0 and both engines publish NULL (DuckDB x/0) instead of raising."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from cobalt_duckdb_spark.queries.events import events_markov_stationary
+
+    t0 = dt.datetime(2024, 1, 1)
+    pd.DataFrame({
+        "event_id": [1, 2, 3],
+        "ts": [t0 + dt.timedelta(minutes=m) for m in range(3)],
+        "user_id": [7, 7, 7],
+        "event_type": ["a", "a", "b"],
+        "value": [1.0, 1.0, 1.0],
+        "props": ["{}"] * 3,
+    }).astype({"ts": "datetime64[us]"}).to_parquet(tmp_path / "events.parquet")
+    got = events_markov_stationary(spark, str(tmp_path)).collect()
+    assert [tuple(r) for r in got] == [("a", None), ("b", None)]
+
+
 def test_bpe_round1_agrees_with_pair_counts(spark, sf_dir):
     """The first BPE merge equals the argmax of the standalone pair-count
     query (same tie-break), tying the iterative trainer to its one-step

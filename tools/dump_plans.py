@@ -146,11 +146,13 @@ SHOWCASE = {
     "embedding_pca_power_iteration": (
         "Spectral audit, two-phase. Things to see: the ONLY corpus-wide "
         "stage is the covariance build (posexplode self-join partial-"
-        "aggregating into d^2=4096 (i,j) sums); everything after reads "
-        "Scan ExistingRDD — the localCheckpoint boundary per matrix "
-        "squaring, which keeps the 6-squaring unrolled plan linear "
-        "instead of 3^6 re-derivations. C^64 convergence without a "
-        "spectral gap, data touched once."
+        "aggregating into d^2=4096 (i,j) sums), behind the one Scan "
+        "ExistingRDD leaf left: the covariance's lazy localCheckpoint. A "
+        "global collect_list turns it into ONE row, and the 6 squarings, "
+        "the direction and the Rayleigh quotient are one Project of "
+        "aggregate/transform expressions over it, read out by a "
+        "posexplode — no checkpoint or job per squaring. C^64 "
+        "convergence without a spectral gap."
     ),
     "dedup_cdc_chunk_report": (
         "Content-defined chunking. Things to see: tokenize (posexplode), "
@@ -168,10 +170,10 @@ SHOWCASE = {
     "events_markov_absorption": (
         "Iterative linear algebra. Things to see: ONE corpus-wide stage "
         "(the user_id sequence window feeding the transition counts); "
-        "everything after reads Scan ExistingRDD — the localCheckpoint "
-        "boundary per doubling of the |transient|^2 long-format matrix, "
-        "so 7 doublings (the 128-term fundamental-matrix series) stay "
-        "linear in plan size and broadcast-scale in data."
+        "the counts are collected into one |types|^2-cell row, and the 7 "
+        "doublings of the 128-term fundamental-matrix series are a "
+        "single aggregate expression in one Project over it, read out by "
+        "a posexplode — no ExistingRDD leaf, no build job."
     ),
     "stats_ks_two_sample": (
         "Distribution-free drift gate. Things to see: group sizes come "
@@ -198,13 +200,14 @@ SHOWCASE = {
         "join condition over 16 bytes/row."
     ),
     "events_markov_removal_attribution": (
-        "Counterfactual composition. Things to see: the final frame is "
-        "a union of five per-channel rows, each a crossJoin of two "
-        "1-row conversion aggregates whose lineage ends at checkpointed "
-        "|channels|^2 matrices — five absorbing-chain solves appear in "
-        "the plan as five independent ExistingRDD chains, built "
-        "concurrently on driver threads; the ONLY corpus-wide work is "
-        "the single user-sequence window."
+        "Counterfactual composition. Things to see: ONE user-sequence "
+        "window yields pair counts, occupancy totals and first events; "
+        "they are collected into one matrix row, a Generate explodes it "
+        "into five variant rows (full graph + one per removed channel), "
+        "and each row's absorbing-chain solve is one aggregate expression "
+        "in the Project above; a global window pairs every removal with "
+        "the full-graph conversion — no ExistingRDD leaf, no build job, "
+        "no thread pool."
     ),
 }
 
