@@ -258,8 +258,7 @@ def main() -> None:
     from cobalt_duckdb_spark.operators.knn import (
         build_vector_store,
         knn_topk_batch,
-        knn_topk_unit,
-        unit_cosine_distance,
+        knn_topk_statement,
     )
 
     # serve-path store: coalesce to a few partitions — per-query latency at
@@ -275,13 +274,13 @@ def main() -> None:
         [float(x) for x in r["embedding"]]
         for r in store.orderBy("vec_id").limit(11).collect()
     ]
-    # the client's serving kernel: a normalized store scored with 1 − dot
-    # (one fold per row) against one query literal, the distance Column
-    # built once for all calls
-    distance = unit_cosine_distance()
-
+    # the client's serving kernel: one SQL statement that scores the
+    # normalized store with 1 − dot (one fold per row) against the inlined
+    # query literal
     def warm_knn(vec):
-        return knn_topk_unit(store, distance, vec, 10).collect()
+        return spark.sql(
+            knn_topk_statement("bench_vstore", vec, 10, ["vec_id"])
+        ).collect()
 
     warm_knn(qvecs[0])  # plan warm-up
     t0 = time.perf_counter()
@@ -290,12 +289,16 @@ def main() -> None:
     knn_ms = round((time.perf_counter() - t0) / (len(qvecs) - 1) * 1000, 1)
 
     # The per-query figure above is a fixed per-request cost, not vector
-    # math. Measured at sf0.1 on 4 cores (median of 30 warm calls): 28 ms
-    # of driver-side build (four DataFrame calls and the query literal; a
-    # version that rebuilt the dot-product lambdas through py4j on every
-    # call took 58 ms) and 59 ms for its one job, of which 9 ms is Catalyst
-    # analysis, optimization and planning. SCALE.md's warm-KNN addendum
-    # splits the client's request path the same way. The SET-ORIENTED batch
+    # math. Measured at sf0.1 on 4 cores (median of 30 warm calls,
+    # interleaved with the DataFrame kernel this statement replaced): 31 ms
+    # of driver-side build (spark.sql parses and analyzes the statement;
+    # 9 ms and 13 ms in a second run) and 120 ms for its one job, of which
+    # 10 ms is Catalyst optimization and planning. The replaced kernel took
+    # 45 ms to build and 77 ms for its job, but it returned the top 10
+    # unranked: the rank window and the outer sort cost about 25 ms per
+    # call on this bare store, where there is no join back to save. On the
+    # client's path they replace a join job; SCALE.md's warm-KNN addendum
+    # splits that path the same way. The SET-ORIENTED batch
     # path (one plan, one job, N queries broadcast against the store) pays
     # that cost once, so report both (r5 verdict item 7). Batch = 64 queries
     # through knn_topk_batch, ms amortized per query, min of 2 post-warm-up

@@ -13,30 +13,34 @@ Parity, mapped call-for-call:
 
 - ``from_dataframe``: "文章: " document prefix → embedder (lazy per-executor
   pandas_udf singleton; same model-save/load-local cache-aside the reference
-  does at vector.py:50-60) → L2-normalized persisted vector store + temp
-  view (the DuckDB ``register`` equivalent, vector.py:131). The driver also
-  resolves the same embedding kernel once, for queries.
+  does at vector.py:50-60) → one pass that stamps the id, embeds and
+  L2-normalizes each row into ONE persisted frame (the document columns,
+  the id, the vector) + temp view (the DuckDB ``register`` equivalent,
+  vector.py:131). The driver also resolves the same embedding kernel once,
+  for queries.
 - ``search_top_n``: "クエリ: " prefix → embed on the driver (vector.py:164)
-  → query vector as a literal (the reference inlines its vector into the
-  SQL, vector.py:176) → top-n by cosine distance → join back the ORIGINAL
-  dataset columns + ``score`` + 0-based ``rank`` (the reference's exact
-  result contract; its app then does rank+1 for display).
+  → query vector inlined as a literal into one SQL statement (as the
+  reference does, vector.py:173-180) → top-n by cosine distance, with the
+  ORIGINAL dataset columns + ``score`` + 0-based ``rank`` (the reference's
+  exact result contract; its app then does rank+1 for display).
 
 Where the Spark version deliberately differs (and why it wins at scale):
 all query texts of a call are embedded in one batched ``encode``, and each
-returned frame is one JVM-only plan of two jobs. The query vector is
+returned frame is one JVM-only plan of one job. The query vector is
 normalized on the driver and scored against the unit store with one
-dot-product fold per row (``operators/knn.knn_topk_unit``); the n winners
-are ranked and broadcast into the join back to the dataset. No Python
-worker runs, nothing is persisted per request, and the scoring Column and
-rank window are built once per client, so a request adds only its
-literal. The store is a distributed, spill-safe persisted frame instead of
-an in-process pandas register.
+dot-product fold per row (``operators/knn.knn_topk_statement``); the
+display columns ride in the same cached row as the vector, so the n
+winners need no join back. No Python worker runs, nothing is persisted per
+request, and a request builds no DataFrame before ``spark.sql``. The store
+is a distributed, spill-safe persisted frame instead of an in-process
+pandas register.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import uuid
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.inference import (
@@ -46,31 +50,45 @@ from cobalt_duckdb_spark.functions.inference import (
     with_doc_prefix,
 )
 from cobalt_duckdb_spark.functions.vector import l2_normalize
-from cobalt_duckdb_spark.operators.knn import knn_topk_unit, unit_cosine_distance
+from cobalt_duckdb_spark.operators.knn import knn_topk_statement
 
 _ID = "_cobalt_doc_id"
+_VEC = "_cobalt_embedding"
 
 
 class SparkSearchClient:
-    """See module docstring. Construct via ``from_dataframe``."""
+    """See module docstring. Construct via ``from_dataframe``; ``close``
+    releases the cached frame."""
 
-    def __init__(
-        self,
-        dataset: DataFrame,
-        target: str,
-        store: DataFrame,
-        encode,
-    ) -> None:
-        self.dataset = dataset
+    def __init__(self, data: DataFrame, target: str, embed, encode) -> None:
+        from pyspark import StorageLevel
+
+        # Private per client: the view, so two clients never read each
+        # other's frame, and the plan. Spark keys its cache on the analyzed
+        # plan, so two clients over one input would share one cache entry,
+        # and closing either would leave the other re-embedding the corpus
+        # on every request. A literal of the key, projected away again,
+        # makes the plan this client's own; the optimizer removes it.
+        key = uuid.uuid4().hex
+        self._view = f"_cobalt_search_{key}"
         self.target = target
-        self.store = store
         self._encode = encode
-        self._doc_cols = [c for c in dataset.columns if c != _ID]
-        self._distance = unit_cosine_distance()
-        # 0-based, as the reference ranks
-        self._rank = (
-            F.row_number().over(Window.orderBy("distance", "vec_id")) - 1
-        ).cast("bigint")
+        # two steps: Spark rejects a Python UDF inside the higher-order
+        # functions of l2_normalize
+        self._frame = (
+            data.withColumn(_ID, F.monotonically_increasing_id())
+            .withColumn(_VEC, embed(with_doc_prefix(target)))
+            .withColumn(_VEC, l2_normalize(_VEC))
+            .withColumn(key, F.lit(key))
+            .drop(key)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        self._frame.createOrReplaceTempView(self._view)
+        self._doc_cols = list(data.columns)
+        self.dataset = self._frame.drop(_VEC)
+        self.store = self._frame.select(
+            F.col(_ID).alias("vec_id"), F.col(_VEC).alias("embedding")
+        ).filter(F.col("embedding").isNotNull())
 
     @classmethod
     def from_dataframe(
@@ -84,36 +102,30 @@ class SparkSearchClient:
     ) -> "SparkSearchClient":
         """Initialize from a document DataFrame (reference vector.py:98-135).
 
-        Ids are assigned once (``monotonically_increasing_id``) and frozen by
-        persisting the id-stamped dataset BEFORE deriving the store, so the
-        dataset row and its vector can never disagree.
+        One pass stamps each row's id (``monotonically_increasing_id``),
+        embeds it and L2-normalizes the vector, into ONE persisted frame:
+        the document columns, the id and the vector. The id and the vector
+        sit in the same cached row, so they can never disagree; ``dataset``
+        and ``store`` are projections of that frame, and the first action
+        over either builds the cache in one job. ``store`` is also
+        registered as ``vector_store_name`` for the SQL surface.
 
         The driver loads the embedding model here, as the reference does
         (vector.py:50-60), to encode query text in-process; documents are
         still embedded on the executors. Both sides call the same
         ``load_embed_backend`` kernel, so a query vector equals the vector
         the executors would compute for the same text."""
-        from pyspark import StorageLevel
-
         embed = make_embedder_udf(model_name, dim, model_dir)
         encode, _ = load_embed_backend(model_name, dim, model_dir)
+        client = cls(data, target, embed, encode)
+        client.store.createOrReplaceTempView(vector_store_name)
+        return client
 
-        dataset = data.withColumn(_ID, F.monotonically_increasing_id()).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        dataset.count()  # materialize: freeze ids before the store derives
-
-        store = (
-            dataset.select(
-                F.col(_ID).alias("vec_id"),
-                embed(with_doc_prefix(target)).alias("embedding"),
-            )
-            .select("vec_id", l2_normalize("embedding").alias("embedding"))
-            .filter(F.col("embedding").isNotNull())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        store.createOrReplaceTempView(vector_store_name)
-        return cls(dataset, target, store, encode)
+    def close(self) -> None:
+        """Release the cached frame and the client's private view; the
+        client serves no request after this."""
+        self._frame.sparkSession.catalog.dropTempView(self._view)
+        self._frame.unpersist()
 
     def search_top_n(
         self, query: str | list[str], n: int = 10
@@ -133,20 +145,11 @@ class SparkSearchClient:
         return [self._top_n(vec, n) for vec in vecs]
 
     def _top_n(self, vec, n: int) -> DataFrame:
-        """One query's result frame: ``knn_topk_unit`` scores the store
-        against the query literal and keeps the n nearest
-        (``TakeOrderedAndProject``, one job); the rank window runs over
-        those n rows only, and they are broadcast into the join back to the
-        dataset, whose ``orderBy().limit()`` is the second job."""
-        top = knn_topk_unit(self.store, self._distance, vec, n)
-        ranked = F.broadcast(top.withColumn("rank", self._rank))
-        return (
-            ranked.join(self.dataset, ranked["vec_id"] == self.dataset[_ID])
-            .select(
-                ranked["rank"],
-                ranked["distance"].alias("score"),
-                *self._doc_cols,
-            )
-            .orderBy("rank")
-            .limit(n)
+        """One query's result frame: one ``spark.sql`` statement
+        (``knn_topk_statement``) over the client's cached frame, with the
+        query inlined as a literal. It scores every row, keeps the n
+        nearest with their display columns (``TakeOrderedAndProject``) and
+        ranks those n rows in the same partition: one job, no join."""
+        return self._frame.sparkSession.sql(
+            knn_topk_statement(self._view, vec, n, self._doc_cols, _ID, _VEC)
         )

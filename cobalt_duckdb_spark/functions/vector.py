@@ -58,9 +58,9 @@ def cosine_distance(a: Column | str, b: Column | str) -> Column:
 def l2_normalize(a: Column | str) -> Column:
     """Scale to unit norm (zero vectors → NULL). A store normalized at
     ingest is scored with ``1 − dot`` — one fold per row instead of three —
-    by the serving kernel ``operators/knn.knn_topk_unit``, which normalizes
-    the query on the driver; ``cosine_distance`` itself still folds three
-    times, since it does not know its inputs are unit vectors."""
+    by the serving statement ``operators/knn.knn_topk_statement``, which
+    normalizes the query on the driver; ``cosine_distance`` itself still
+    folds three times, since it does not know its inputs are unit vectors."""
     a = _as_double_array(a)
     n = l2_norm(a)
     return F.when(n != 0.0, F.transform(a, lambda x: x / n))

@@ -22,21 +22,21 @@ Batch queries: the reference loops one SQL statement per query
 for all queries via broadcast of the (small) query set and a per-query
 window top-k.
 
-Serving: ``knn_topk_unit`` is the one-request kernel of ``client`` and
-``bench.py``. The store is unit-normalized at ingest and the query on the
-driver, so each row costs one dot-product fold against a query literal; the
-distance Column (``unit_cosine_distance``) names columns only and is built
-once per caller, so a request adds one literal to the plan.
+Serving: ``knn_topk_statement`` is the one-request kernel of ``client`` and
+``bench.py``, and it is SQL text, as the reference's request is
+(``vector.py:173-180``). The store is unit-normalized at ingest and the query
+on the driver, so each row costs one dot-product fold against a query
+literal inlined into the statement; the statement selects the display
+columns from the same cached frame, so a request is one plan without a
+join: ``TakeOrderedAndProject`` → ``Window`` → ``Sort``, one job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cobalt_duckdb_spark.functions.vector import cosine_distance, dot_product
-
-_QUERY_COL = "_q"
+from cobalt_duckdb_spark.functions.vector import cosine_distance
 
 
 def knn_topk_broadcast_query(
@@ -85,9 +85,9 @@ def build_vector_store(
 ) -> DataFrame:
     """The reference's index build (``from_dataframe`` → register,
     ``vector.py:97-135``) Spark-style: optionally L2-normalize at ingest
-    (so ``knn_topk_unit`` can score it with ``1 − dot``, one fold per row),
-    persist in memory-and-disk, and register as a temp view for the SQL
-    surface. Returns the persisted frame; caller owns ``unpersist()``."""
+    (so ``knn_topk_statement`` can score it with ``1 − dot``, one fold per
+    row), persist in memory-and-disk, and register as a temp view for the
+    SQL surface. Returns the persisted frame; caller owns ``unpersist()``."""
     from pyspark import StorageLevel
 
     from cobalt_duckdb_spark.functions.vector import l2_normalize
@@ -102,33 +102,52 @@ def build_vector_store(
     return store
 
 
-def unit_cosine_distance() -> Column:
-    """Cosine distance of a unit-normalized ``embedding`` to the unit query
-    that ``knn_topk_unit`` adds as column ``_QUERY_COL``: ``1 − dot``. It
-    refers to columns by name only, so build it once and pass it to every
-    request; its lambdas then cost no py4j round trips per request."""
-    return F.lit(1.0) - dot_product("embedding", _QUERY_COL)
+def _quote(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def knn_topk_unit(store: DataFrame, distance: Column, vec, k: int) -> DataFrame:
-    """Top-k of a unit-normalized ``store`` (``vec_id``, ``embedding``)
-    against one query vector: (``vec_id``, ``distance``), the k nearest by
-    (distance, id), planned as ``TakeOrderedAndProject`` over the store scan.
+def _double_array_sql(q) -> str:
+    """A float64 vector as a SQL ``ARRAY<DOUBLE>`` literal. ``repr`` is the
+    shortest decimal that reads back to the same double, so the literal is
+    bit-exact (−0.0 and subnormals included)."""
+    return "array(" + ", ".join(repr(float(x)) + "D" for x in q) + ")"
 
-    ``vec`` is normalized here on the driver, in float64, and enters the
-    plan as one array literal; ``distance`` is ``unit_cosine_distance()``.
-    A zero-norm query has no direction: its literal is NULL, every distance
-    is NULL (as ``cosine_distance`` gives) and the k lowest ids win."""
+
+def knn_topk_statement(
+    view: str,
+    vec,
+    k: int,
+    cols: list[str],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """One SQL statement for the top-k of a unit-normalized store against
+    one query vector: ``rank`` (0-based bigint), ``score`` (cosine distance,
+    ``1 − dot``), then ``cols`` of ``view``, the k nearest by (score, id),
+    in rank order. Rows whose ``vec_col`` is NULL are never returned.
+
+    ``vec`` is normalized here on the driver, in float64, and inlined as
+    one array literal, so a request costs no DataFrame analysis before
+    ``spark.sql``. A zero-norm query has no direction: its literal is NULL,
+    every score is NULL (as ``cosine_distance`` gives) and the k lowest ids
+    win."""
     import numpy as np
 
     q = np.asarray(vec, dtype=np.float64)
     norm = np.linalg.norm(q)
-    query = F.lit(q / norm) if norm else F.lit(None).cast("array<double>")
+    query = _double_array_sql(q / norm) if norm else "CAST(NULL AS ARRAY<DOUBLE>)"
+    i, e = _quote(id_col), _quote(vec_col)
+    shown = "".join(", " + _quote(c) for c in cols)
+    score = (
+        f"1.0D - aggregate(zip_with({e}, {query}, (x, y) -> x * y), 0.0D, "
+        "(acc, x) -> acc + x)"
+    )
     return (
-        store.withColumn(_QUERY_COL, query)
-        .select("vec_id", distance.alias("distance"))
-        .orderBy("distance", "vec_id")
-        .limit(k)
+        f"SELECT CAST(row_number() OVER (ORDER BY score, {i}) - 1 AS BIGINT)"
+        f" AS rank, score{shown} FROM (SELECT {i}, {score} AS score{shown}"
+        f" FROM {_quote(view)} WHERE {e} IS NOT NULL ORDER BY score, {i}"
+        f" LIMIT {int(k)}) ORDER BY rank"
     )
 
 

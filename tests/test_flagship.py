@@ -14,8 +14,10 @@ from cobalt_duckdb_spark.functions.vector import (
 )
 from cobalt_duckdb_spark.io import load_table, EXPECTED_DDL, TABLE_NAMES
 from cobalt_duckdb_spark.operators.knn import (
+    _double_array_sql,
     knn_topk_batch,
     knn_topk_broadcast_query,
+    knn_topk_statement,
     query_vector_of,
 )
 from cobalt_duckdb_spark.queries import QUERIES
@@ -178,13 +180,14 @@ def _cached_rdd_ids(df):
 def test_search_top_n_plan_runs_in_jvm(spark, search_client):
     """A request runs in the JVM alone: no Python worker (the query text is
     embedded on the driver and enters the plan as a literal), no new cached
-    relation (the store and the id-stamped dataset are the only ones), no
-    range-partitioning sort, no nested-loop join against a query row and no
-    per-row norm (``sqrt``: the store and the query are unit vectors); a
-    single request starts at most 2 jobs."""
+    relation (the store and the id-stamped dataset read one and the same
+    persisted frame), no range-partitioning sort, no nested-loop join
+    against a query row and no per-row norm (``sqrt``: the store and the
+    query are unit vectors); a single request starts exactly 1 job."""
     client = search_client
-    stored = _cached_rdd_ids(client.store) | _cached_rdd_ids(client.dataset)
-    assert len(stored) == 2
+    stored = _cached_rdd_ids(client.store)
+    assert len(stored) == 1
+    assert _cached_rdd_ids(client.dataset) == stored
     for query in ("key agg row scan", ["key agg row scan", "stream window join"]):
         for frame in client.search_top_n(query, n=5):
             assert len(frame.collect()) == 5
@@ -218,7 +221,7 @@ def test_search_top_n_plan_runs_in_jvm(spark, search_client):
         jobs = sc.statusTracker().getJobIdsForGroup("search_top_n_jobs")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert 0 < len(jobs) <= 2
+    assert len(jobs) == 1
 
 
 def _brute_force_top_n(client, texts, n):
@@ -257,6 +260,8 @@ def test_search_top_n_matches_numpy_brute_force(spark, sf_dir):
     [(first, text)] = docs.limit(1).collect()
     twin = first + 10**9
     corpus = docs.unionByName(spark.createDataFrame([(twin, text)], docs.schema))
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
     client = SparkSearchClient.from_dataframe(corpus, "text", dim=16)
 
     texts = ["key agg row scan", "stream window join", "検索 クエリ 🚀"]
@@ -272,8 +277,11 @@ def test_search_top_n_matches_numpy_brute_force(spark, sf_dir):
                 i = ids.index(first)
                 assert ids[i + 1] == twin and dists[i] == dists[i + 1]
                 assert rows[i]["score"] == rows[i + 1]["score"]
-    client.store.unpersist()
-    client.dataset.unpersist()
+    # store and dataset are projections of one cached frame: close()
+    # releases that frame, and nothing the client cached stays behind
+    assert sc._jsc.getPersistentRDDs().size() == before + 1
+    client.close()
+    assert sc._jsc.getPersistentRDDs().size() == before
 
 
 def test_search_top_n_zero_query_ranks_by_id(search_client, monkeypatch):
@@ -302,6 +310,143 @@ def test_search_top_n_zero_query_ranks_by_id(search_client, monkeypatch):
     assert [r["rank"] for r in rows] == [0, 1, 2, 3]
     assert [r["score"] for r in rows] == [None] * 4
     assert [r["doc_id"] for r in rows] == want
+
+
+def _bits(x):
+    import struct
+
+    return None if x is None else struct.pack("<d", x)
+
+
+def test_double_array_literal_is_bit_exact(spark):
+    """The query literal reads back as the very doubles it was made from:
+    signed zero, the smallest subnormal, 1e-05 and both ends of the range."""
+    import sys
+
+    big = sys.float_info.max
+    q = [-0.0, 0.0, 5e-324, -5e-324, 1e-05, big, -big, 0.1, -1 / 3]
+    [(got,)] = spark.sql(f"SELECT {_double_array_sql(q)}").collect()
+    assert [_bits(x) for x in got] == [_bits(x) for x in q]
+
+
+def test_knn_topk_statement_score_matches_dot_product_fold(spark):
+    """The statement's inline fold and ``functions/vector.dot_product``'s
+    Column fold give the same score, bit for bit, against the same
+    driver-normalized query (vectors with −0.0, a subnormal, 1e-05 and
+    mixed signs)."""
+    import numpy as np
+
+    store = spark.createDataFrame(
+        [
+            (0, [0.6, -0.8, -0.0, 5e-324, 1e-05]),
+            (1, [-0.0, 1e-05, -0.3, 0.25, 5e-324]),
+            (2, [1e-05, -1e-05, 0.0, -0.0, 0.7]),
+            (3, [-0.1, 0.2, -0.3, 0.4, -0.5]),
+        ],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    store.createOrReplaceTempView("knn_statement_fold")
+    vec = [0.3, -0.0, 5e-324, 1e-05, -0.7]
+    q = np.asarray(vec) / np.linalg.norm(vec)
+    want = {
+        r["vec_id"]: r["score"]
+        for r in store.select(
+            "vec_id",
+            (
+                F.lit(1.0)
+                - dot_product("embedding", F.array(*[F.lit(float(x)) for x in q]))
+            ).alias("score"),
+        ).collect()
+    }
+    rows = spark.sql(
+        knn_topk_statement("knn_statement_fold", vec, 4, ["vec_id"])
+    ).collect()
+    assert [r["rank"] for r in rows] == [0, 1, 2, 3]
+    assert sorted(r["vec_id"] for r in rows) == [0, 1, 2, 3]
+    assert {r["vec_id"]: _bits(r["score"]) for r in rows} == {
+        i: _bits(s) for i, s in want.items()
+    }
+
+
+def test_knn_topk_statement_zero_query_ranks_by_id(spark):
+    """A zero-norm query scores every row NULL; the k lowest ids win in id
+    order, and rows without a vector are never returned."""
+    store = spark.createDataFrame(
+        [(5, [1.0, 0.0]), (3, [0.0, 1.0]), (9, [1.0, 1.0]), (1, [-1.0, 0.0]), (0, None)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    store.createOrReplaceTempView("knn_statement_zero")
+    frame = spark.sql(knn_topk_statement("knn_statement_zero", [0.0, -0.0], 3, ["vec_id"]))
+    assert frame.dtypes == [("rank", "bigint"), ("score", "double"), ("vec_id", "bigint")]
+    rows = frame.collect()
+    assert [(r["rank"], r["score"], r["vec_id"]) for r in rows] == [
+        (0, None, 1),
+        (1, None, 3),
+        (2, None, 5),
+    ]
+
+
+def test_search_clients_in_one_session_are_isolated(spark, sf_dir):
+    """Two clients in one session, both under the default
+    ``vector_store_name``, over disjoint corpora: each returns only its own
+    documents."""
+    from cobalt_duckdb_spark.client import SparkSearchClient
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.orderBy("doc_id").limit(20)
+    halves = [docs.filter(F.col("doc_id") % 2 == parity) for parity in (0, 1)]
+    clients = [SparkSearchClient.from_dataframe(h, "text", dim=16) for h in halves]
+    try:
+        for half, client in zip(halves, clients):
+            own = sorted(r["doc_id"] for r in half.collect())
+            [frame] = client.search_top_n("key agg row scan", n=20)
+            assert sorted(r["doc_id"] for r in frame.collect()) == own
+    finally:
+        for client in clients:
+            client.close()
+
+
+def test_closing_a_client_leaves_its_twin_cached(spark, sf_dir):
+    """Two clients over one input hold a cache entry each: closing one
+    releases exactly its own, and the other still serves from its cache
+    without running the embedder again."""
+    from cobalt_duckdb_spark.client import SparkSearchClient
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(12)
+    sc = spark.sparkContext
+    a, b = (SparkSearchClient.from_dataframe(docs, "text", dim=16) for _ in range(2))
+    try:
+        for client in (a, b):
+            client.store.count()
+        held = sc._jsc.getPersistentRDDs().size()
+        a.close()
+        assert sc._jsc.getPersistentRDDs().size() == held - 1
+        [frame] = b.search_top_n("key agg row scan", n=3)
+        assert len(frame.collect()) == 3
+        names = [op.nodeName() for op in _operators(frame._jdf.queryExecution().executedPlan())]
+        assert any("InMemoryTableScan" in n for n in names), names
+        assert not any("EvalPython" in n for n in names), names
+    finally:
+        b.close()
+
+
+def test_search_top_n_keeps_columns_that_need_quoting(spark):
+    """Display columns whose names need back-quotes (a space, a backtick)
+    come back under their own names, with their values intact."""
+    from cobalt_duckdb_spark.client import SparkSearchClient
+
+    rows = [(i, f"v {i}", f"x`{i}`", f"doc {i} text") for i in range(6)]
+    corpus = spark.createDataFrame(
+        rows, "doc_id BIGINT, `my col` STRING, `a``b` STRING, text STRING"
+    )
+    client = SparkSearchClient.from_dataframe(corpus, "text", dim=16)
+    try:
+        [frame] = client.search_top_n("doc text", n=6)
+        assert frame.columns == ["rank", "score", "doc_id", "my col", "a`b", "text"]
+        got = sorted(tuple(r)[2:] for r in frame.collect())
+        assert got == rows
+    finally:
+        client.close()
 
 
 def test_search_top_n_persists_nothing(spark, search_client):
