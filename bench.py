@@ -261,10 +261,10 @@ def main() -> None:
         knn_topk_statement,
     )
 
-    # serve-path store: coalesce to a few partitions — per-query latency at
-    # this store size is dominated by fixed task overhead (32 tasks of
-    # ~150 rows each), not compute; a real 1e9-vector store would keep its
-    # natural partitioning and this knob disappears
+    # serve-path store: coalesce to at most 8 partitions — per-query
+    # latency at this store size is dominated by fixed task overhead, not
+    # compute; a real 1e9-vector store would keep its natural partitioning
+    # and this knob disappears
     store = build_vector_store(
         load_table(spark, sf_dir, "embeddings").coalesce(8),
         view_name="bench_vstore",
@@ -289,16 +289,17 @@ def main() -> None:
     knn_ms = round((time.perf_counter() - t0) / (len(qvecs) - 1) * 1000, 1)
 
     # The per-query figure above is a fixed per-request cost, not vector
-    # math. Measured at sf0.1 on 4 cores (median of 30 warm calls,
-    # interleaved with the DataFrame kernel this statement replaced): 31 ms
-    # of driver-side build (spark.sql parses and analyzes the statement;
-    # 9 ms and 13 ms in a second run) and 120 ms for its one job, of which
-    # 10 ms is Catalyst optimization and planning. The replaced kernel took
-    # 45 ms to build and 77 ms for its job, but it returned the top 10
-    # unranked: the rank window and the outer sort cost about 25 ms per
-    # call on this bare store, where there is no join back to save. On the
-    # client's path they replace a join job; SCALE.md's warm-KNN addendum
-    # splits that path the same way. The SET-ORIENTED batch
+    # math. At sf0.1 the store is one partition (the embeddings table is
+    # one small file, which coalesce(8) leaves as it is). Measured on
+    # 4 cores, median of 110 warm calls: 18.5 ms in spark.sql (parse and
+    # analysis), 28.5 ms from there to the job's submission (8.0 ms of it
+    # Catalyst optimization and planning), 32.5 ms for the one job and
+    # 5.2 ms after it, 86.8 ms in all. The rank is each row's position in
+    # the TakeOrderedAndProject output, so the plan has no rank window and
+    # no outer sort; the statement that ranked with them, interleaved in
+    # the same session, took 111.3 ms, and this figure read 103.4 ms with
+    # it against 83.6 ms without (one full run each). SCALE.md's warm-KNN
+    # addendum has the phase table. The SET-ORIENTED batch
     # path (one plan, one job, N queries broadcast against the store) pays
     # that cost once, so report both (r5 verdict item 7). Batch = 64 queries
     # through knn_topk_batch, ms amortized per query, min of 2 post-warm-up

@@ -30,8 +30,10 @@ returned frame is one JVM-only plan of one job. The query vector is
 normalized on the driver and scored against the unit store with one
 dot-product fold per row (``operators/knn.knn_topk_statement``); the
 display columns ride in the same cached row as the vector, so the n
-winners need no join back. No Python worker runs, nothing is persisted per
-request, and a request builds no DataFrame before ``spark.sql``. The store
+winners need no join back, and the rank is each winner's position in the
+top-n output, so they need no rank window or re-sort either. No Python
+worker runs, nothing is persisted per request, and a request builds no
+DataFrame before ``spark.sql``. The store
 is a distributed, spill-safe persisted frame instead of an in-process
 pandas register.
 """
@@ -147,9 +149,11 @@ class SparkSearchClient:
     def _top_n(self, vec, n: int) -> DataFrame:
         """One query's result frame: one ``spark.sql`` statement
         (``knn_topk_statement``) over the client's cached frame, with the
-        query inlined as a literal. It scores every row, keeps the n
-        nearest with their display columns (``TakeOrderedAndProject``) and
-        ranks those n rows in the same partition: one job, no join."""
+        query inlined as a literal. It scores every row and keeps the n
+        nearest with their display columns (``TakeOrderedAndProject``),
+        which come out as one partition in (score, id) order; each row's
+        rank is its position there. One job, no join, no window, no
+        sort."""
         return self._frame.sparkSession.sql(
             knn_topk_statement(self._view, vec, n, self._doc_cols, _ID, _VEC)
         )

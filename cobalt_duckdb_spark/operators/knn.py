@@ -28,7 +28,10 @@ Serving: ``knn_topk_statement`` is the one-request kernel of ``client`` and
 on the driver, so each row costs one dot-product fold against a query
 literal inlined into the statement; the statement selects the display
 columns from the same cached frame, so a request is one plan without a
-join: ``TakeOrderedAndProject`` → ``Window`` → ``Sort``, one job.
+join. Its rank is the row's position in the top-k, as the reference takes
+it from the pandas row order (``vector.py:183-188``): the plan is
+``TakeOrderedAndProject`` under one ``Project``, with no rank ``Window``
+and no outer ``Sort``, one job.
 """
 
 from __future__ import annotations
@@ -127,6 +130,20 @@ def knn_topk_statement(
     ``1 − dot``), then ``cols`` of ``view``, the k nearest by (score, id),
     in rank order. Rows whose ``vec_col`` is NULL are never returned.
 
+    ``rank`` is ``monotonically_increasing_id()`` over the
+    ``ORDER BY score, id LIMIT k`` subquery, which plans as a non-root
+    ``TakeOrderedAndProject`` (for every k below
+    ``spark.sql.execution.topKSortFallbackThreshold``, 2³¹ − 16 by
+    default). That operator always emits its k rows as ONE
+    partition, index 0, in (score, id) order: a child of several partitions
+    is merged through a shuffle to a single partition first. The generated
+    id of partition 0's i-th row is i, so it is the row's 0-based rank,
+    with no ``row_number()`` window and no outer ``ORDER BY``. An outer
+    ``ORDER BY rank`` added "to be safe" gives about half of that saving
+    back (adaptive execution plans it as a step of its own); the invariant
+    is pinned by ``tests/test_flagship.py`` on stores of one and of three
+    partitions.
+
     ``vec`` is normalized here on the driver, in float64, and inlined as
     one array literal, so a request costs no DataFrame analysis before
     ``spark.sql``. A zero-norm query has no direction: its literal is NULL,
@@ -144,10 +161,9 @@ def knn_topk_statement(
         "(acc, x) -> acc + x)"
     )
     return (
-        f"SELECT CAST(row_number() OVER (ORDER BY score, {i}) - 1 AS BIGINT)"
-        f" AS rank, score{shown} FROM (SELECT {i}, {score} AS score{shown}"
-        f" FROM {_quote(view)} WHERE {e} IS NOT NULL ORDER BY score, {i}"
-        f" LIMIT {int(k)}) ORDER BY rank"
+        f"SELECT monotonically_increasing_id() AS rank, score{shown} FROM"
+        f" (SELECT {i}, {score} AS score{shown} FROM {_quote(view)}"
+        f" WHERE {e} IS NOT NULL ORDER BY score, {i} LIMIT {int(k)})"
     )
 
 

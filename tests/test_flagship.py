@@ -182,8 +182,10 @@ def test_search_top_n_plan_runs_in_jvm(spark, search_client):
     embedded on the driver and enters the plan as a literal), no new cached
     relation (the store and the id-stamped dataset read one and the same
     persisted frame), no range-partitioning sort, no nested-loop join
-    against a query row and no per-row norm (``sqrt``: the store and the
-    query are unit vectors); a single request starts exactly 1 job."""
+    against a query row, no per-row norm (``sqrt``: the store and the
+    query are unit vectors), and no ``Window`` or ``Sort``: the rank is the
+    row's position in the ``TakeOrderedAndProject`` output. A single
+    request over the one-partition store runs exactly 1 job of 1 stage."""
     client = search_client
     stored = _cached_rdd_ids(client.store)
     assert len(stored) == 1
@@ -200,6 +202,8 @@ def test_search_top_n_plan_runs_in_jvm(spark, search_client):
             ], names
             assert _cached_rdd_ids(frame) <= stored
             assert "BroadcastNestedLoopJoin" not in names, names
+            assert "TakeOrderedAndProject" in names, names
+            assert not [n for n in names if n == "Sort" or n.startswith("Window")], names
             assert not [
                 op.simpleString(10_000)
                 for op in ops
@@ -213,15 +217,30 @@ def test_search_top_n_plan_runs_in_jvm(spark, search_client):
                 == "RangePartitioning"
             ]
 
+    assert client._frame.rdd.getNumPartitions() == 1
+    [frame] = client.search_top_n("key agg row scan", n=5)
+    assert _jobs_and_stages(spark, frame) == (1, 1)
+
+
+def _jobs_and_stages(spark, frame):
+    """Collect ``frame`` in a job group of its own: the number of jobs it
+    ran and the number of stages across them that ran a task (a stage
+    skipped because its shuffle output already exists does not count)."""
     sc = spark.sparkContext
-    sc.setJobGroup("search_top_n_jobs", "one single request")
+    group = f"jobs_of_{id(frame)}"
+    sc.setJobGroup(group, "one single request")
     try:
-        [frame] = client.search_top_n("key agg row scan", n=5)
         frame.collect()
-        jobs = sc.statusTracker().getJobIdsForGroup("search_top_n_jobs")
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = sum(
+            tracker.getStageInfo(st).numCompletedTasks > 0
+            for j in jobs
+            for st in tracker.getJobInfo(j).stageIds
+        )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(jobs) == 1
+    return len(jobs), stages
 
 
 def _brute_force_top_n(client, texts, n):
@@ -249,39 +268,90 @@ def _brute_force_top_n(client, texts, n):
     return out
 
 
+def _twin_corpus(spark, sf_dir):
+    """The first 30 documents plus a twin of the first: a document
+    with the same text under a larger id, so their scores tie exactly for
+    every query and only the id orders them. Returns the corpus and the two
+    ids."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.orderBy("doc_id").limit(30)
+    [(first, text)] = docs.limit(1).collect()
+    twin = first + 10**9
+    corpus = docs.unionByName(spark.createDataFrame([(twin, text)], docs.schema))
+    return corpus, first, twin
+
+
+def _assert_matches_brute_force(client, texts, n, twin_pair=None):
+    """Each of the client's top-n frames for ``texts`` equals the numpy
+    brute force: ranks 0.. in row order, the same doc ids in the same
+    order and the same scores. With ``twin_pair`` (first, twin), the tie is
+    asserted to be inside the top n, the first id ranked just above its
+    twin."""
+    want = _brute_force_top_n(client, texts, n)
+    for frame, (ids, dists) in zip(client.search_top_n(texts, n=n), want, strict=True):
+        rows = frame.collect()
+        assert [r["rank"] for r in rows] == list(range(len(ids)))
+        assert [r["doc_id"] for r in rows] == ids
+        for r, d in zip(rows, dists):
+            assert abs(r["score"] - d) < 1e-12
+        if twin_pair is not None:
+            first, twin = twin_pair
+            i = ids.index(first)
+            assert ids[i + 1] == twin and dists[i] == dists[i + 1]
+            assert rows[i]["score"] == rows[i + 1]["score"]
+
+
 def test_search_top_n_matches_numpy_brute_force(spark, sf_dir):
     """The client's top-n ids equal a numpy float64 brute-force cosine top-n,
     ties broken by id, for several texts; two documents share one text, so
     their scores tie exactly and only the id orders them."""
     from cobalt_duckdb_spark.client import SparkSearchClient
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.orderBy("doc_id").limit(30)
-    [(first, text)] = docs.limit(1).collect()
-    twin = first + 10**9
-    corpus = docs.unionByName(spark.createDataFrame([(twin, text)], docs.schema))
+    corpus, first, twin = _twin_corpus(spark, sf_dir)
     sc = spark.sparkContext
     before = sc._jsc.getPersistentRDDs().size()
     client = SparkSearchClient.from_dataframe(corpus, "text", dim=16)
 
     texts = ["key agg row scan", "stream window join", "検索 クエリ 🚀"]
-    for n in (5, 31):  # 31: the whole corpus, so the tie is inside
-        want = _brute_force_top_n(client, texts, n)
-        for frame, (ids, dists) in zip(client.search_top_n(texts, n=n), want, strict=True):
-            rows = frame.collect()
-            assert [r["rank"] for r in rows] == list(range(n))
-            assert [r["doc_id"] for r in rows] == ids
-            for r, d in zip(rows, dists):
-                assert abs(r["score"] - d) < 1e-12
-            if n == 31:
-                i = ids.index(first)
-                assert ids[i + 1] == twin and dists[i] == dists[i + 1]
-                assert rows[i]["score"] == rows[i + 1]["score"]
+    _assert_matches_brute_force(client, texts, 5)
+    # 31: the whole corpus, so the tie is inside
+    _assert_matches_brute_force(client, texts, 31, twin_pair=(first, twin))
     # store and dataset are projections of one cached frame: close()
     # releases that frame, and nothing the client cached stays behind
     assert sc._jsc.getPersistentRDDs().size() == before + 1
     client.close()
     assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_search_top_n_positional_rank_over_partitions(spark, sf_dir):
+    """The rank is the row's position in the top-n, also when the store
+    spans several partitions and the per-partition top-n heaps merge
+    through a single-partition shuffle: the rows equal the numpy brute
+    force, the twin tie inside the top n included. ``n`` beyond the corpus
+    returns the whole corpus, ranked; ``n = 0`` returns no row and the same
+    columns and types."""
+    from cobalt_duckdb_spark.client import SparkSearchClient
+
+    corpus, first, twin = _twin_corpus(spark, sf_dir)
+    # range partitions in doc_id order keep the client's ids in doc_id
+    # order, the tie-break the brute force uses; first and twin land in
+    # different partitions
+    corpus = corpus.repartitionByRange(3, "doc_id").sortWithinPartitions("doc_id")
+    client = SparkSearchClient.from_dataframe(corpus, "text", dim=16)
+    try:
+        assert client._frame.rdd.getNumPartitions() == 3
+        texts = ["key agg row scan", "検索 クエリ 🚀"]
+        _assert_matches_brute_force(client, texts, 31, twin_pair=(first, twin))
+        _assert_matches_brute_force(client, texts, 40, twin_pair=(first, twin))
+        [frame] = client.search_top_n(texts[0], n=31)
+        # partial top-n per partition, then the merge: 1 job of 2 stages
+        assert _jobs_and_stages(spark, frame) == (1, 2)
+
+        [empty] = client.search_top_n(texts[0], n=0)
+        assert empty.collect() == []
+        assert empty.dtypes == frame.dtypes
+    finally:
+        client.close()
 
 
 def test_search_top_n_zero_query_ranks_by_id(search_client, monkeypatch):
