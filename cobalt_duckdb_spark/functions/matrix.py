@@ -8,10 +8,15 @@ no middle label links both factors (SQL ``SUM`` of no term), which the
 oracles' ``AVG(p) GROUP BY j`` and absorbing-chain series depend on. A
 cell that rounds to 0 stays a present 0.0.
 
+A length-k vector over the same labels is an ``array<double>`` in label
+order; `vecmat` multiplies it into a matrix with the same absent-term
+rule as `product`.
+
 All of it is Catalyst expressions: `dense` builds the row with one global
 aggregate (no ``collect()`` feeds the plan), `iterate` is
 ``aggregate(sequence(1, steps), init, step)``, `long` posexplodes the row
-back into ``(i, j, p)`` rows. Building a query on these starts no job.
+back into ``(i, j, p)`` rows and `per_label` turns vectors back into one
+row per label. Building a query on these starts no job.
 
 HOF-CSE (SCALE.md): CollapseProject substitutes a column's expression into
 every reference, and a reference inside a lambda runs once per element.
@@ -55,6 +60,23 @@ def product(a: Column, b: Column, k: Column) -> Column:
             F.transform(indices(k), lambda t: a[i * k + t] * b[t * k + j])
         ))
     ))))
+
+
+def vecmat(v: Column, m: Column, k: Column) -> Column:
+    """v·M for a length-k vector v; entry j absent when no t has v[t] and
+    M[t, j] present."""
+    return let(v, lambda v: let(m, lambda m: F.transform(
+        indices(k), lambda j: total(
+            F.transform(indices(k), lambda t: v[t] * m[t * k + j])
+        )
+    )))
+
+
+def transpose(m: Column, k: Column) -> Column:
+    """Mᵀ: cell (i, j) is M[j, i]."""
+    return let(m, lambda m: F.flatten(F.transform(
+        indices(k), lambda i: F.transform(indices(k), lambda j: m[j * k + i])
+    )))
 
 
 def where(
@@ -115,6 +137,17 @@ def dense(long_: DataFrame, *carry: Column) -> DataFrame:
         ))).alias("cells"),
     )))
     return row.select(m.alias("_m"), *names).select("_m.*", *names)
+
+
+def per_label(m: DataFrame, **vectors: Column) -> DataFrame:
+    """``(label, name…)`` rows, one per label of ``m``, from the length-k
+    arrays ``vectors`` (expressions over ``m``'s columns). As in `long`,
+    ``inline_outer`` evaluates the arrays once; k = 0 gives no row."""
+    z = F.arrays_zip(
+        F.col("labels").alias("label"),
+        *(v.alias(name) for name, v in vectors.items()),
+    )
+    return m.select(F.inline_outer(z)).filter(F.col("label").isNotNull())
 
 
 def long(m: DataFrame, *keep: str) -> DataFrame:

@@ -11,12 +11,36 @@ join + one aggregate, both shuffling on vertex id. The driver-side loop is
 the standard Pregel-without-Pregel shape (GraphFrames does the same under
 the hood); convergence is checked with a count, not by materializing
 labels on the driver.
+
+It also holds the event-transition graph's one edge extraction,
+:func:`transition_counts`, shared by the Markov and event-graph queries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def transition_counts(events: DataFrame) -> DataFrame:
+    """Per-user transitions in (ts, event_id) order: one row per (i, j) =
+    (event_type, next event_type) with ``n`` (bigint) occurrences, of which
+    ``starts`` are a user's first event. j is NULL on a user's last event,
+    so ``n`` summed over j counts every event of type i. One user_id window
+    shuffle, then a |types|²-row aggregate."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        events.select(
+            F.col("event_type").alias("i"),
+            F.lead("event_type").over(w).alias("j"),
+            (F.row_number().over(w) == 1).alias("_first"),
+        )
+        .groupBy("i", "j")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if("_first").alias("starts"),
+        )
+    )
 
 
 def connected_components(
@@ -109,9 +133,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    checkpoint_every: int | None = None,
-    reset: DataFrame | None = None,
-    narrow: bool | None = None,
 ) -> DataFrame:
     """Fixed-iteration power-method PageRank → (node, pagerank).
 
@@ -120,38 +141,23 @@ def pagerank(
     engines can replay bit-for-bit, which is what a differential oracle needs.
     rank₀(v) = 1/N;  rankₜ₊₁(v) = (1−d)/N + d·Σᵤ rankₜ(u)·w(u→v), with
     w(u→v) = the out-normalized edge weight. Dangling mass is NOT
-    redistributed (documented; near-dup/transition graphs have none).
+    redistributed (documented; co-occurrence graphs have none).
 
-    ``reset``: optional (node, weight) frame of restart mass — PERSONALIZED
-    PageRank / random walk with restart: rank₀ = the normalized reset
-    vector and every step teleports (1−d) to it instead of to uniform.
-    Nodes absent from ``reset`` get zero restart mass. ``reset=None`` keeps
-    the classic uniform behavior (bit-identical to before the parameter
-    existed). Degenerate resets are DEFINED, not confusing: duplicate node
-    rows pre-sum, weight on nodes outside the edge list is excluded from
-    the normalizer (so in-graph restart mass still sums to 1), and a reset
-    whose in-graph mass is ≤ 0 degrades to the uniform restart.
-
-    Scale shape — the standard Pregel-without-Pregel loop: each step is one
+    Scale shape — the standard Pregel-without-Pregel loop for a graph built
+    from the data (``text_textrank_keywords``' word graph): each step is one
     join of the rank vector against the edge list (both hash-partitioned on
-    the join key) plus one aggregate on dst. Nodes and edges stay distributed;
-    nothing is collected. For small ``iterations`` the whole recurrence is
-    left as ONE chained plan (a single job, Catalyst pipelines it); for deep
-    iteration counts pass ``checkpoint_every`` to truncate lineage with
-    ``localCheckpoint`` the way :func:`connected_components` does.
+    the join key) plus one aggregate on dst. Nodes and edges stay
+    distributed; nothing is collected, and the 10-step recurrence is one
+    chained plan. Graphs over a fixed, tiny vocabulary (the event-transition
+    graph) run as a one-row matrix instead (``functions/matrix.py``).
 
-    ``narrow``: whether the per-iteration frames (edge probabilities, node
-    set, teleport base) are coalesced to ONE partition — right for the
-    vocabulary-sized graphs the registry feeds this (single-task loop steps
-    instead of 32-way shuffles of ≤64 rows), wrong for a billion-edge graph,
-    which must keep its natural partitioning. Default ``None`` probes the
-    eagerly-checkpointed edge table's ACTUAL width (free — the blocks
-    already exist, no job runs): fewer partitions than the session's cores
-    means AQE already judged the graph fixed-overhead-scale and narrowing
-    costs nothing; at data scale the checkpoint keeps ≥cores partitions and
-    the operator stays fully distributed. Pass ``narrow=False`` to force
-    the distributed shape regardless (r9 verdict item 5 — the narrowing is
-    gated on frame width, not assumed).
+    The per-iteration frames (edge probabilities, node set, teleport base)
+    are coalesced to ONE partition when the eagerly-checkpointed edge table
+    is narrower than the session's cores: the probe is free (the blocks
+    already exist, no job runs), AQE has already judged such a graph
+    fixed-overhead-scale, and each loop step then runs as one task instead
+    of a shuffle of ≤64 rows. At data scale the checkpoint keeps ≥cores
+    partitions and the operator stays fully distributed.
     """
     w = F.col(weight) if weight else F.lit(1.0)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
@@ -166,105 +172,49 @@ def pagerank(
     # per-step shuffles are ≤|nodes|-row AQE-coalesced exchanges; a
     # broadcast-hint variant that removed them entirely planned zero
     # Exchange nodes but measured SLOWER (each broadcast build is a blocking
-    # driver job, 2 per power step — r9 A/B: PPR 8.3 s broadcast vs 6.2 s
-    # plain on the same host), so tiny shuffles through AQE win over
+    # driver job, 2 per power step), so tiny shuffles through AQE win over
     # driver-side builds.
     probs = probs.localCheckpoint(eager=True)
-    if narrow is None:
-        # Post-checkpoint width probe — no job runs (the blocks exist, the
-        # adaptive plan is final). AQE has already coalesced this exchange
-        # to its data size, so "narrower than the core count" == "too small
-        # to benefit from distribution".
-        narrow = (
-            probs.rdd.getNumPartitions()
-            < probs.sparkSession.sparkContext.defaultParallelism
-        )
+    # Post-checkpoint width probe — no job runs (the blocks exist, the
+    # adaptive plan is final).
+    narrow = (
+        probs.rdd.getNumPartitions()
+        < probs.sparkSession.sparkContext.defaultParallelism
+    )
     if narrow:
-        # Single-partition loop frames: each power step's join/agg runs as
-        # one task instead of a 32-way shuffle of ≤|nodes|² rows. The
-        # trailing .coalesce(1) re-narrows the checkpointed leaf
-        # (localCheckpoint publishes UnknownPartitioning).
+        # the trailing .coalesce(1) re-narrows the checkpointed leaf
+        # (localCheckpoint publishes UnknownPartitioning)
         probs = probs.coalesce(1)
     # Node set DERIVED FROM the checkpointed probs, not from e: every edge
     # row survives the out-norm join (its src group always exists), so
     # probs carries the identical (src, dst) universe — while deriving from
     # e would materialize the caller's whole edge-extraction pipeline a
-    # second time (r9 profile: the tokenize/window subtree ran twice per
-    # pagerank build, half the build cost of textrank/PPR — guide §1.2
-    # "don't compute things you throw away").
+    # second time.
     nodes = probs.select(F.col("src").alias("node")).unionByName(
         probs.select(F.col("dst").alias("node"))
     ).distinct()
     if narrow:
         nodes = nodes.coalesce(1)
-    # N as a 1-row frame cross-joined in (broadcast, no driver round-trip)
+    # N as a 1-row frame cross-joined in (broadcast, no driver round-trip);
+    # per-node teleport (1−d)/N and start mass 1/N are materialized ONCE so
+    # no power step re-plans the N aggregate. A narrowed node set keeps
+    # base to one partition through the broadcast join.
     n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n_nodes"))
-    if reset is not None:
-        # Defensive normalization (round-3 advice): duplicate node rows are
-        # pre-summed (defined semantics instead of double-counted mass), the
-        # normalizer is the reset mass restricted to IN-GRAPH nodes (weight
-        # on absent nodes would otherwise be silently dropped AFTER
-        # normalization, leaving the rank vector summing to < 1), and a
-        # non-positive in-graph reset mass degrades to the uniform restart
-        # instead of null/NaN ranks.
-        in_graph = (
-            reset.groupBy("node")
-            .agg(F.sum("weight").alias("weight"))
-            .withColumnRenamed("node", "rnode")
-            .join(nodes, nodes.node == F.col("rnode"), "semi")
-        )
-        rtot = in_graph.agg(F.sum("weight").alias("rtot"))
-        reset_norm = (
-            nodes.join(in_graph, nodes.node == F.col("rnode"), "left")
-            .crossJoin(F.broadcast(rtot))
-            .crossJoin(F.broadcast(n_df))
-            .select(
-                "node",
-                F.when(
-                    F.col("rtot") > 0,
-                    F.coalesce("weight", F.lit(0.0)) / F.col("rtot"),
-                )
-                .otherwise(F.lit(1.0) / F.col("n_nodes"))
-                .alias("rw"),
-            )
-            # teleport term folded in ONCE: every iteration used to rebuild
-            # (1−d)·rw from rw inline; precomputing it here is the same
-            # double product evaluated once (bit-identical), and it lets the
-            # loop drop a per-step projection input (guide §2.4).
-            .withColumn("tp", (1.0 - damping) * F.col("rw"))
-        )
-        if narrow:
-            reset_norm = reset_norm.coalesce(1)
-        reset_norm = reset_norm.localCheckpoint(eager=True)
-        if narrow:
-            reset_norm = reset_norm.coalesce(1)
-        base = reset_norm
-        ranks = reset_norm.select("node", F.col("rw").alias("rank"))
-    else:
-        # per-node teleport (1−d)/N and start mass 1/N materialized ONCE:
-        # the old loop cross-joined the 1-row n_df aggregate into every
-        # power step, which planned a BroadcastNestedLoopJoin PLUS the full
-        # n_df aggregate subtree per iteration (10× in the r9 before-plans;
-        # guide §2.4 — operations keyed the same way share one build). Both
-        # expressions are the identical doubles the loop used to compute.
-        base = nodes.crossJoin(F.broadcast(n_df)).select(
-            "node",
-            (F.lit(1.0) / F.col("n_nodes")).alias("rank0"),
-            ((1.0 - damping) / F.col("n_nodes")).alias("tp"),
-        )
-        if narrow:
-            base = base.coalesce(1)
-        base = base.localCheckpoint(eager=True)
-        if narrow:
-            base = base.coalesce(1)
-        ranks = base.select("node", F.col("rank0").alias("rank"))
+    base = nodes.crossJoin(F.broadcast(n_df)).select(
+        "node",
+        (F.lit(1.0) / F.col("n_nodes")).alias("rank0"),
+        ((1.0 - damping) / F.col("n_nodes")).alias("tp"),
+    ).localCheckpoint(eager=True)
+    if narrow:
+        base = base.coalesce(1)
+    ranks = base.select("node", F.col("rank0").alias("rank"))
     # Plain shuffled joins each step, NOT broadcast hints: a broadcast build
     # is a separate driver-collect job, and paying two of those per power
     # step measures ~70% slower than letting the ≤|nodes|-row shuffles flow
     # through AQE (which coalesces them to single-task exchanges). On a
     # billion-node graph the same shuffled-join plan is exactly what
     # GraphX/Pregel runs, keyed on src/dst.
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
             probs.join(ranks, probs.src == ranks.node)
             .groupBy("dst")
@@ -279,8 +229,6 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 
@@ -296,9 +244,9 @@ def pagerank_oracle_cte(
     as ``(node, rank)`` — callers wrap it for projection/rounding.
 
     ``reset_cte`` (optional, personalized variant): a CTE body defining
-    ``reset(node, w)`` with arbitrary non-negative weights — normalized here
-    exactly as the operator does; r0 = the normalized reset vector and each
-    step teleports (1−d) onto it."""
+    ``reset(node, w)`` with arbitrary non-negative weights, normalized over
+    the in-graph nodes; r0 = the normalized reset vector and each step
+    teleports (1−d) onto it (``graph_personalized_pagerank_error``)."""
     d = damping
     parts = [
         edges_cte,
@@ -307,13 +255,12 @@ def pagerank_oracle_cte(
     ]
     if reset_cte is not None:
         parts.append(reset_cte)
-        # Mirror the operator's documented degenerate-reset contract
-        # exactly: duplicate node rows pre-sum, the normalizer is the reset
-        # mass restricted to IN-GRAPH nodes, and a non-positive in-graph
-        # mass degrades to the uniform restart (sparse-world fuzz: the
-        # 'error' seed can be absent from a filtered corpus — without the
-        # fallback the oracle returns all-zero ranks while the operator
-        # returns classic PageRank).
+        # Degenerate resets are defined: duplicate node rows pre-sum, the
+        # normalizer is the reset mass restricted to IN-GRAPH nodes, and a
+        # non-positive in-graph mass degrades to the uniform restart
+        # (sparse-world fuzz: the 'error' seed can be absent from a
+        # filtered corpus — without the fallback the oracle returns
+        # all-zero ranks while the query returns classic PageRank).
         parts.append(
             "rsum AS (SELECT node, SUM(w) AS w FROM reset GROUP BY node)"
         )
@@ -398,9 +345,6 @@ def label_propagation(
     hash-partitioned on the node key, nothing on the driver. Rounds chain
     lazily; on billion-edge graphs insert ``localCheckpoint`` every few
     rounds exactly as :func:`connected_components` does."""
-    from pyspark.sql import Window
-
-
     # the edge list is consumed once per round (and often derives from an
     # expensive self-join) — materialize it, and truncate the label
     # lineage each round so round t doesn't re-derive rounds 1..t-1

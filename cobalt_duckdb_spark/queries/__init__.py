@@ -131,8 +131,10 @@ _load_all_modules()
 # first, then every other name in registration order.
 # Pasted from `python tools/next_window.py --suggest`.
 _DRIVER_PRIORITY = (
+    "graph_pagerank_event_flow",  # src+helpers (r3)
     "stats_chi2_lang_source",  # src+helpers (r3)
     "events_survival_km",  # src+helpers (r4)
+    "graph_scc_mutual_reachability",  # src+helpers (r4)
     "matryoshka_recall_audit",  # src+helpers (r5)
     "events_growth_accounting",  # src+helpers (r6)
     "events_window_funnel_depth",  # src+helpers (r6)
@@ -154,6 +156,7 @@ _DRIVER_PRIORITY = (
     "events_mad_robust_outliers",  # src+helpers (r8)
     "stats_benjamini_hochberg_fdr",  # src+helpers (r8)
     "events_markov_entropy_rate",  # src+helpers (r9)
+    "graph_personalized_pagerank_error",  # src+helpers (r9)
     "stats_key_skew_profiler",  # src+helpers (r9)
     "embedding_knn_hubness_audit",  # src (r10)
     "embedding_pca_power_iteration",  # src+helpers (r10)
@@ -162,6 +165,7 @@ _DRIVER_PRIORITY = (
     "events_markov_removal_attribution",  # src+helpers (r10)
     "events_markov_stationary",  # src+helpers (r10)
     "events_transition_matrix",  # src+helpers (r10)
+    "graph_hits_hubs_authorities",  # src+helpers (r10)
     "join_interval_error_click_left",  # src (r10)
     "train_triplet_margin_audit",  # src (r10)
     "subq_correlated_above_avg_parts",  # helpers (r2)
@@ -177,10 +181,6 @@ _DRIVER_PRIORITY = (
     "dq_equidepth_deciles",  # helpers (r3)
     "dq_histogram_totalprice",  # helpers (r3)
     "events_gap_filled_minutes",  # helpers (r3)
-    "events_multi_resolution_rollup",  # helpers (r3)
-    "events_peak_concurrent_incidents",  # helpers (r3)
-    "events_seasonal_hour_anomaly",  # helpers (r3)
-    "events_signup_to_purchase_funnel",  # helpers (r3)
 )
 
 

@@ -39,6 +39,7 @@ from cobalt_duckdb_spark.functions.matrix import (
     where,
 )
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.operators.graph import transition_counts
 from cobalt_duckdb_spark.queries import register
 
 
@@ -499,29 +500,6 @@ def events_latest_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _transition_counts(e: DataFrame) -> DataFrame:
-    """Per-user transitions in (ts, event_id) order: one row per (i, j) =
-    (event_type, next event_type) with ``n`` (bigint) occurrences, of which
-    ``starts`` are a user's first event. j is NULL on a user's last event,
-    so ``n`` summed over j counts every event of type i. One user_id window
-    shuffle, then a |types|²-row aggregate."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        e.select(
-            F.col("event_type").alias("i"),
-            F.lead("event_type").over(w).alias("j"),
-            (F.row_number().over(w) == 1).alias("_first"),
-        )
-        .groupBy("i", "j")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if("_first").alias("starts"),
-        )
-    )
-
-
 @register(
     "events_transition_matrix",
     oracle="""
@@ -553,7 +531,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     via (ts, event_id) tiebreak."""
     from pyspark.sql import Window
 
-    pairs = _transition_counts(load_table(spark, sf_dir, "events")).filter(
+    pairs = transition_counts(load_table(spark, sf_dir, "events")).filter(
         F.col("j").isNotNull()
     )
     tot = Window.partitionBy("i")
@@ -1137,7 +1115,7 @@ def _markov_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one ``labels``/``cells`` row."""
     from pyspark.sql import Window
 
-    pairs = _transition_counts(load_table(spark, sf_dir, "events")).filter(
+    pairs = transition_counts(load_table(spark, sf_dir, "events")).filter(
         F.col("j").isNotNull()
     )
     row_total = F.sum("n").over(Window.partitionBy("i"))
@@ -1805,7 +1783,7 @@ def events_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataF
 
     by_i, everyone = Window.partitionBy("i"), Window.partitionBy()
     starts = F.sum("starts").over(by_i)
-    counts = _transition_counts(load_table(spark, sf_dir, "events")).select(
+    counts = transition_counts(load_table(spark, sf_dir, "events")).select(
         "i", "j", F.round(F.col("n") / F.sum("n").over(by_i), 9).alias("p"),
         F.when(starts > 0, F.round(starts / F.sum("starts").over(everyone), 9))
         .alias("w"),

@@ -1,25 +1,37 @@
-"""Graph-analytics pack: PageRank centrality over the event-transition
-graph. Together with connected components (``operators/graph.py``) this is
-the iterative-graph family — the Pregel-shaped driver loops a pipeline runs
-for dedup-group resolution, influence ranking, and session-flow analysis.
+"""Graph-analytics pack: centrality, structure and communities.
 
-Semantics pinned as fixed-iteration computations (see
-:func:`cobalt_duckdb_spark.operators.graph.pagerank`) so the DuckDB oracle
+The event-graph queries (PageRank, personalized PageRank, SCC; HITS lives
+in ``queries/selection.py``) work on the event-transition graph, whose
+nodes are the handful of event types: the matrix is one row
+(``functions/matrix.py``) and the iteration an ``aggregate`` over it inside
+the query's own plan, so building one starts no Spark job. Graphs built
+from the data (connected components, label propagation, textrank's word
+graph) keep the distributed loops of ``operators/graph.py``.
+
+Semantics are pinned as fixed-iteration computations so the DuckDB oracle
 replays the identical recurrence — differential testing of an iterative
 algorithm, which a run-to-convergence formulation would not allow.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.exact import spark_round_sql
+from cobalt_duckdb_spark.functions.matrix import (
+    dense,
+    iterate,
+    let,
+    per_label,
+    product,
+    vecmat,
+)
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators.graph import (
     label_propagation_oracle_cte,
-    pagerank,
     pagerank_oracle_cte,
+    transition_counts,
 )
 from cobalt_duckdb_spark.queries import register
 
@@ -40,6 +52,35 @@ edges AS (
     WHERE next_type IS NOT NULL
     GROUP BY event_type, next_type
 )"""
+
+
+def _pagerank(counts: DataFrame, seed: str | None = None) -> DataFrame:
+    """``(node, rank)`` after ``_PR_ITERS`` damped power steps over the
+    transition counts ``(i, j, n)``: r₀ = the restart vector t and
+    rₜ₊₁ = (1−d)·t + d·rₜ·P, with P[i, j] = n / row total (unrounded, as
+    the oracle's edges) and absent mass 0. Without ``seed`` t is uniform
+    (classic PageRank); with it t is one-hot on ``seed`` (personalized
+    PageRank), uniform again when ``seed`` is not a node (the oracle's
+    ``rnorm`` fallback). Dangling mass is not redistributed."""
+    pairs = counts.filter(F.col("j").isNotNull())
+    m = dense(pairs.select(
+        "i", "j", (F.col("n") / F.sum("n").over(Window.partitionBy("i"))).alias("p")
+    ))
+    labels, k, d = F.col("labels"), F.size("labels"), _PR_DAMPING
+    n = k.cast("double")
+    if seed is None:
+        start = F.transform(labels, lambda _: F.lit(1.0) / n)
+        teleport = F.transform(labels, lambda _: (1.0 - d) / n)
+    else:
+        known = F.array_contains(labels, seed)
+        start = F.transform(labels, lambda li: F.when(~known, F.lit(1.0) / n)
+                            .when(li == seed, 1.0).otherwise(0.0))
+        teleport = F.transform(start, lambda r: (1.0 - d) * r)
+    ranks = let(teleport, lambda t: iterate(start, _PR_ITERS, lambda r: F.zip_with(
+        t, vecmat(r, F.col("cells"), k),
+        lambda tp, mass: tp + d * F.coalesce(mass, F.lit(0.0)),
+    )))
+    return per_label(m, rank=ranks).withColumnRenamed("label", "node")
 
 
 @register(
@@ -63,33 +104,9 @@ def graph_pagerank_event_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     score says which state is most central to user journeys.
 
     Scale shape: edge extraction is ONE shuffle on user_id (sequence window)
-    + a |types|² aggregate; each power step is a join + dst-aggregate with
-    both sides hash-partitioned on the key, nothing collected. On a
-    billion-node graph the identical loop runs with ``checkpoint_every`` set
-    (lineage truncation) — pinned by the connected-components test; here the
-    10-step recurrence stays one chained Catalyst plan → a single job."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    edges = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("next_type", nxt)
-        .filter(F.col("next_type").isNotNull())
-        .groupBy(F.col("event_type").alias("src"), F.col("next_type").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    # checkpoint_every=5: two lineage truncations across the 10 power steps.
-    # Leaving all 10 chained makes Catalyst re-optimize a plan that doubles
-    # per step (measured 3.4 s → 2.2 s warm at sf0.1, identical results);
-    # at billion-edge scale the same cadence is what bounds both optimizer
-    # time and the recovery-replay depth.
-    pr = pagerank(
-        edges, iterations=_PR_ITERS, damping=_PR_DAMPING, weight="w",
-        checkpoint_every=5,
-    )
+    + a |types|² aggregate; the 10 power steps are an ``aggregate`` over the
+    one-row matrix in the same plan (:func:`_pagerank`)."""
+    pr = _pagerank(transition_counts(load_table(spark, sf_dir, "events")))
     return pr.select(
         F.col("node").alias("event_type"),
         F.round("rank", 6).alias("pagerank"),
@@ -559,64 +576,41 @@ def graph_scc_mutual_reachability(spark: SparkSession, sf_dir: str) -> DataFrame
     collapsing into one recurrent component while purchase/view stay
     acyclic is exactly the loop-vs-exit structure of the journey graph.
 
-    Spark computes transitive closure by REACHABILITY DOUBLING —
-    R_(k+1) = R_k JOIN R_k — the same O(log diameter) strategy as the
-    absorbing-chain series (`events_markov_absorption`): 3 self-join
-    rounds cover paths of length 8 on a graph whose longest shortest path
-    is at most |V|-1 = 4. Each round is one equi-join + distinct on a
-    frame bounded by |V|^2 (event-type vocabulary, ~25 rows), broadcast
-    throughout; the oracle replays the identical closure as a recursive
-    CTE. The user-sequence scan (one window shuffle on user_id) dominates
-    at scale; everything after is vocabulary-sized."""
-    e = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
+    Spark computes the transitive closure by REACHABILITY DOUBLING on the
+    one-row presence matrix — R ← R·R, present cells clamped to 1.0 — the
+    same O(log diameter) strategy as the absorbing-chain series
+    (`events_markov_absorption`): 3 rounds cover paths of length 8, and a
+    simple path over 6 edges is at most 6 long. The oracle replays the
+    identical closure as a recursive CTE. The user-sequence scan (one
+    window shuffle on user_id) dominates at scale; the rest is
+    vocabulary-sized algebra in the same plan, with no build job."""
+    c = transition_counts(load_table(spark, sf_dir, "events"))
+    edge = F.col("j").isNotNull() & (F.col("j") != F.col("i"))
+    # |types|²-bounded frame: the single-partition rank window is fine
+    rank = F.row_number().over(Window.orderBy(edge.desc(), F.desc("n"), "i", "j"))
+    top = edge & (rank <= _SCC_TOP_EDGES)
+    # R₀ = I ∪ E over EVERY event type, not only the edges' endpoints: a
+    # (v, v) cell per type plus the top edges, none of which is a self-loop.
+    # R is reflexive, so R·R ⊇ R and each round is one product.
+    r0 = c.select("i", F.when(top, F.col("j")).alias("j")).select(
+        "i", F.explode(F.array("i", "j")).alias("j")
     )
-    pairs = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("nxt", nxt)
-        .filter(F.col("nxt").isNotNull() & (F.col("nxt") != F.col("event_type")))
-        .groupBy(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    # |types|^2-bounded frame: the single-partition rank window is fine
-    r = F.row_number().over(Window.orderBy(F.desc("n"), "src", "dst"))
-    edges = (
-        pairs.withColumn("r", r).filter(F.col("r") <= _SCC_TOP_EDGES)
-        .select("src", "dst")
-        .localCheckpoint()  # pin the sparse graph; reused 2x per doubling round
-    )
-    nodes = e.select(F.col("event_type").alias("v")).distinct()
-    reach = nodes.select(
-        F.col("v").alias("src"), F.col("v").alias("dst")
-    ).unionByName(edges).distinct()
-    for _ in range(3):  # paths up to length 8 >= diameter bound |V|-1
-        step = (
-            reach.alias("a")
-            .join(
-                reach.alias("b"),
-                F.col("a.dst") == F.col("b.src"),
-            )
-            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-        )
-        reach = reach.unionByName(step).distinct().localCheckpoint()
-    mutual = (
-        reach.alias("a")
-        .join(
-            reach.alias("b"),
-            (F.col("a.src") == F.col("b.dst")) & (F.col("a.dst") == F.col("b.src")),
-        )
-        .select(F.col("a.src").alias("v"), F.col("a.dst").alias("u"))
-    )
-    scc = mutual.groupBy("v").agg(F.min("u").alias("scc_id"))
-    sizes = scc.groupBy("scc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("scc_size")
-    )
+    m = dense(r0.distinct().withColumn("p", F.lit(1.0)))
+    labels, k = F.col("labels"), F.size("labels")
+    reach = iterate(F.col("cells"), 3, lambda r: F.transform(
+        product(r, r, k), lambda x: F.when(x.isNotNull(), F.lit(1.0))
+    ))
+    # each node's SCC: the labels it reaches that reach it back
+    scc = let(reach, lambda r: F.transform(labels, lambda _, a: F.filter(
+        labels, lambda _, b: r[a * k + b].isNotNull() & r[b * k + a].isNotNull()
+    )))
     return (
-        scc.join(F.broadcast(sizes), "scc_id")
-        .select(F.col("v").alias("event_type"), "scc_id", "scc_size")
+        per_label(m, scc=scc)
+        .select(
+            F.col("label").alias("event_type"),
+            F.array_min("scc").alias("scc_id"),
+            F.size("scc").cast("bigint").alias("scc_size"),
+        )
         .orderBy("event_type")
     )
 
@@ -647,39 +641,13 @@ def graph_personalized_pagerank_error(spark: SparkSession, sf_dir: str) -> DataF
     uniform vector, so the score measures proximity-to-failure along the
     observed transition flow — the graph-native 'which states orbit this
     one' query behind related-item panels, fraud-neighborhood scoring, and
-    incident blast-radius ranking. Same fixed-iteration recurrence, SAME
-    operator (`operators/graph.py::pagerank`, now with a `reset`
-    distribution; `graph_pagerank_event_flow` is the uniform special
-    case), same unrolled-CTE oracle — personalization adds one broadcast
-    restart vector to the plan and nothing else.
-
-    Scale: identical to the classic variant — per-step rank-against-edges
-    join keyed on src/dst; the restart vector is a checkpointed
-    |nodes|-row leaf reused by every step."""
-    from cobalt_duckdb_spark.operators.graph import pagerank
-
-    e = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    edges = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("next_type", nxt)
-        .filter(F.col("next_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("src"), F.col("next_type").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
-    )
-    reset = spark.createDataFrame([("error", 1.0)], "node string, weight double")
-    ranks = pagerank(
-        edges,
-        iterations=_PR_ITERS,
-        damping=_PR_DAMPING,
-        weight="cnt",
-        reset=reset,
+    incident blast-radius ranking. Same fixed-iteration recurrence and
+    helper as `graph_pagerank_event_flow` (the uniform special case), same
+    unrolled-CTE oracle — personalization only swaps the restart vector.
+    A corpus with no 'error' event restarts uniformly, as the oracle's
+    ``rnorm`` fallback does."""
+    ranks = _pagerank(
+        transition_counts(load_table(spark, sf_dir, "events")), seed="error"
     )
     return (
         ranks.select(

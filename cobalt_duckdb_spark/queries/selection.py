@@ -10,7 +10,7 @@ selection/mixing stages. Every query carries a DuckDB oracle twin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.exact import (
@@ -20,7 +20,17 @@ from cobalt_duckdb_spark.functions.exact import (
     exact_round_sum_sql,
     spark_round_sql,
 )
+from cobalt_duckdb_spark.functions.matrix import (
+    dense,
+    iterate,
+    let,
+    per_label,
+    total,
+    transpose,
+    vecmat,
+)
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.operators.graph import transition_counts
 from cobalt_duckdb_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -260,6 +270,37 @@ def _hits_oracle(iters: int = _HITS_ITERS) -> str:
     return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
+def _unit(x: Column) -> Column:
+    """x over its L2 norm, absent entries 0; the norm sums the present
+    entries only, as the oracle's ``SUM(a * a)`` over the raw rows."""
+    return let(x, lambda x: let(
+        F.sqrt(total(F.transform(x, lambda v: v * v))),
+        lambda norm: F.transform(x, lambda v: F.coalesce(v, F.lit(0.0)) / norm),
+    ))
+
+
+def _hits(counts: DataFrame) -> DataFrame:
+    """``(node, hub, authority)`` after ``_HITS_ITERS`` rounds over the
+    weighted transition counts ``(i, j, n)``: a = unit(h·A), then
+    h = unit(a·Aᵀ) = unit(A·a), from h₀ = 1 on every node."""
+    m = dense(counts.filter(F.col("j").isNotNull()).select(
+        "i", "j", F.col("n").cast("double").alias("p")
+    ))
+    labels, k = F.col("labels"), F.size("labels")
+    ones = F.transform(labels, lambda _: F.lit(1.0))
+    state = F.struct(ones.alias("a"), ones.alias("h"))
+    hits = let(transpose(F.col("cells"), k), lambda at: iterate(
+        state, _HITS_ITERS, lambda s: let(
+            _unit(vecmat(s["h"], F.col("cells"), k)),
+            lambda a: F.struct(a.alias("a"), _unit(vecmat(a, at, k)).alias("h")),
+        ),
+    ))
+    return per_label(
+        m.select("labels", hits.alias("s")),
+        hub=F.col("s.h"), authority=F.col("s.a"),
+    ).withColumnRenamed("label", "node")
+
+
 @register("graph_hits_hubs_authorities", oracle=_hits_oracle())
 def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS (Kleinberg) hubs & authorities on the weighted event-transition
@@ -270,77 +311,15 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     authorities — complementary to PageRank's stationary centrality.
 
     Scale shape: edge extraction is one user_id-shuffle (lead window) + a
-    |types|²-row aggregate; every HITS round is a join + keyed aggregate on
-    the |types|²-row edge frame with a 1-row L2 norm broadcast back —
-    identical loop discipline to ``operators/graph.pagerank`` (tiny frames
-    coalesce(1) + localCheckpoint per round, nothing collected; on a
-    billion-edge graph drop the coalesce and keep the same plan)."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    nxt = F.lead("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    edges = (
-        e.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("next_type", nxt)
-        .filter(F.col("next_type").isNotNull())
-        .groupBy(F.col("event_type").alias("src"), F.col("next_type").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .coalesce(1)
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .coalesce(1)
-        .localCheckpoint(eager=False)
-    )
-    hub = nodes.select("node", F.lit(1.0).alias("h"))
-    auth = None
-    # L2 norm as a GLOBAL WINDOW over the (single-partition, |types|-row)
-    # joined frame instead of an agg + crossJoin(broadcast(...)): the
-    # broadcast variant paid a separate driver job to build the 1-row norm
-    # relation per half-step (10 per run), and these tiny rounds are
-    # driver-job-latency-bound (same finding as the PCA squarings). SUM
-    # skips the left-join NULLs, so the window sums exactly the araw/hraw
-    # terms — identical values.
-    w_all = Window.partitionBy()
-    for _ in range(_HITS_ITERS):
-        araw = (
-            edges.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("h")).alias("a"))
-        )
-        anrm = F.sqrt(F.sum(F.col("a") * F.col("a")).over(w_all))
-        auth = (
-            nodes.join(araw, "node", "left")
-            .coalesce(1)
-            .select("node", (F.coalesce("a", F.lit(0.0)) / anrm).alias("a"))
-            .localCheckpoint(eager=False)
-        )
-        hraw = (
-            edges.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("a")).alias("h"))
-        )
-        hnrm = F.sqrt(F.sum(F.col("h") * F.col("h")).over(w_all))
-        hub = (
-            nodes.join(hraw, "node", "left")
-            .coalesce(1)
-            .select("node", (F.coalesce("h", F.lit(0.0)) / hnrm).alias("h"))
-            .localCheckpoint(eager=False)
-        )
-    return (
-        hub.join(auth, "node")
-        .select(
-            F.col("node").alias("event_type"),
-            F.round("h", 6).alias("hub"),
-            F.round("a", 6).alias("authority"),
-        )
-        .orderBy("event_type")
-    )
+    |types|²-row aggregate; the rounds are an ``aggregate`` over the one-row
+    matrix (``functions/matrix.py``) in the same plan, with the transpose
+    taken once outside the loop, so building the query starts no job."""
+    hits = _hits(transition_counts(load_table(spark, sf_dir, "events")))
+    return hits.select(
+        F.col("node").alias("event_type"),
+        F.round("hub", 6).alias("hub"),
+        F.round("authority", 6).alias("authority"),
+    ).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------

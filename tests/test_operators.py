@@ -1776,64 +1776,143 @@ def test_round3_closing_wave_invariants(spark, sf_dir):
 
 
 def test_pagerank_degenerate_reset_inputs(spark):
-    """Round-3 advice: pagerank(reset=...) must be DEFINED on degenerate
-    resets — duplicate node rows pre-sum, out-of-graph weight is excluded
-    from the normalizer (in-graph mass still sums to 1), zero mass degrades
-    to the uniform restart — instead of emitting null/NaN or <1-mass
-    vectors."""
-    from cobalt_duckdb_spark.operators.graph import pagerank
+    """A personalized PageRank whose seed is not a node has zero restart
+    mass: it degrades to the uniform restart (the oracle's ``rnorm``
+    fallback) — on a cycle, uniform ranks summing to 1 — instead of
+    emitting null/NaN or a <1-mass vector."""
+    from cobalt_duckdb_spark.queries.graph_analytics import _pagerank
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"]
+    cycle = spark.createDataFrame(
+        [("a", "b", 1), ("b", "c", 1), ("c", "a", 1)], "i STRING, j STRING, n BIGINT"
     )
-
-    def mass(reset_rows):
-        reset = spark.createDataFrame(reset_rows, ["node", "weight"])
-        ranks = {
-            r["node"]: r["rank"]
-            for r in pagerank(edges, iterations=5, reset=reset).collect()
-        }
-        assert all(v is not None and v == v for v in ranks.values()), ranks
-        return sum(ranks.values()), ranks
-
-    # weight on a node absent from the graph: excluded from the normalizer
-    total, _ = mass([("a", 1.0), ("zzz", 9.0)])
-    assert abs(total - 1.0) < 1e-9
-
-    # duplicate node rows: summed once, not double-counted vs a single row
-    total_dup, ranks_dup = mass([("a", 1.0), ("a", 1.0), ("b", 2.0)])
-    _, ranks_single = mass([("a", 2.0), ("b", 2.0)])
-    assert abs(total_dup - 1.0) < 1e-9
-    for n in ranks_single:
-        assert abs(ranks_dup[n] - ranks_single[n]) < 1e-12
-
-    # zero in-graph mass: uniform fallback, not NaN
-    total_zero, ranks_zero = mass([("zzz", 5.0)])
-    assert abs(total_zero - 1.0) < 1e-9
-    assert max(ranks_zero.values()) - min(ranks_zero.values()) < 1e-9
+    ranks = {r["node"]: r["rank"] for r in _pagerank(cycle, seed="zzz").collect()}
+    assert sorted(ranks) == ["a", "b", "c"]
+    assert all(v is not None and v == v for v in ranks.values()), ranks
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9
+    assert max(ranks.values()) - min(ranks.values()) < 1e-9
 
 
 def test_pagerank_narrow_gate(spark):
-    """r10 (r9 verdict item 5): the single-partition narrowing of the loop
-    frames is GATED, not assumed — narrow=False keeps the operator's
-    documented distributed shape, and both modes return identical ranks
-    (the recurrence is partition-layout independent under the rounding
-    discipline)."""
+    """The single-partition narrowing of the loop frames is GATED on the
+    checkpointed edge table's width, not assumed: with AQE partition
+    coalescing off the table keeps the cores' width and the operator runs
+    its distributed branch (no Coalesce in the plan), and both branches
+    return the same ranks."""
     from cobalt_duckdb_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")], ["src", "dst"]
     )
-    auto = {
-        r["node"]: r["rank"] for r in pagerank(edges, iterations=5).collect()
-    }
-    wide = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, iterations=5, narrow=False).collect()
-    }
-    assert set(auto) == set(wide)
+
+    def run():
+        ranks = pagerank(edges, iterations=5)
+        plan = ranks._jdf.queryExecution().executedPlan().toString()
+        return {r["node"]: r["rank"] for r in ranks.collect()}, "Coalesce 1" in plan
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    auto, auto_narrow = run()
+    spark.conf.set(key, "false")
+    try:
+        wide, wide_narrow = run()
+    finally:
+        spark.conf.set(key, before)
+    assert auto_narrow and not wide_narrow
+    assert set(auto) == set(wide) == {"a", "b", "c"}
     for n in auto:
         assert abs(auto[n] - wide[n]) < 1e-12, (n, auto[n], wide[n])
+
+
+# A hand-built 4-node transition graph: d has no in-edges, a has a
+# self-loop, and every node has out-edges.
+_G4 = [("a", "a", 1), ("a", "b", 2), ("b", "c", 3), ("c", "a", 1),
+       ("c", "b", 1), ("d", "a", 4), ("d", "c", 1)]
+
+
+def _g4(spark):
+    import numpy as np
+
+    counts = spark.createDataFrame(_G4, "i STRING, j STRING, n BIGINT")
+    A = np.zeros((4, 4))
+    for i, j, n in _G4:
+        A["abcd".index(i), "abcd".index(j)] = n
+    return counts, A
+
+
+def test_vecmat_and_pagerank_match_numpy(spark):
+    """The one-row vector–matrix product equals numpy's v·A, with the
+    column nothing reaches (d) absent rather than 0; PageRank and a
+    personalized PageRank seeded at d equal a numpy power iteration —
+    all to 1e-12."""
+    import numpy as np
+
+    from cobalt_duckdb_spark.functions.matrix import dense, vecmat
+    from cobalt_duckdb_spark.queries.graph_analytics import (
+        _PR_DAMPING,
+        _PR_ITERS,
+        _pagerank,
+    )
+
+    counts, A = _g4(spark)
+    v = [0.1, 0.2, 0.3, 0.4]
+    m = dense(counts.select("i", "j", F.col("n").cast("double").alias("p")))
+    got = m.select(
+        vecmat(F.array(*map(F.lit, v)), F.col("cells"), F.size("labels")).alias("x")
+    ).collect()[0]["x"]
+    want = np.array(v) @ A
+    assert got[3] is None
+    for g, w in zip(got[:3], want[:3]):
+        assert abs(g - w) < 1e-12, (got, want)
+
+    P, d = A / A.sum(axis=1, keepdims=True), _PR_DAMPING
+
+    def power(t):
+        r = t.copy()
+        for _ in range(_PR_ITERS):
+            r = (1 - d) * t + d * (r @ P)
+        return r
+
+    for seed, t in ((None, np.full(4, 0.25)), ("d", np.eye(4)[3])):
+        ranks = {r["node"]: r["rank"] for r in _pagerank(counts, seed).collect()}
+        assert sorted(ranks) == list("abcd")
+        for node, w in zip("abcd", power(t)):
+            assert abs(ranks[node] - w) < 1e-12, (seed, node, ranks[node], w)
+
+
+def test_hits_matches_numpy(spark):
+    """HITS equals numpy's alternating a = Aᵀh, h = A·a with L2
+    normalization each half-step, to 1e-12; d, with no in-edge, has
+    authority 0."""
+    import numpy as np
+
+    from cobalt_duckdb_spark.queries.selection import _HITS_ITERS, _hits
+
+    counts, A = _g4(spark)
+    h = np.ones(4)
+    for _ in range(_HITS_ITERS):
+        a = A.T @ h
+        a /= np.linalg.norm(a)
+        h = A @ a
+        h /= np.linalg.norm(h)
+    got = {r["node"]: r for r in _hits(counts).collect()}
+    assert sorted(got) == list("abcd")
+    assert got["d"]["authority"] == 0.0
+    for x, node in enumerate("abcd"):
+        assert abs(got[node]["hub"] - h[x]) < 1e-12, (node, got[node], h)
+        assert abs(got[node]["authority"] - a[x]) < 1e-12, (node, got[node], a)
+
+
+def test_ppr_with_absent_seed_is_classic_pagerank(spark):
+    """Personalized PageRank seeded at a label that is not a node restarts
+    uniformly, which is classic PageRank."""
+    from cobalt_duckdb_spark.queries.graph_analytics import _pagerank
+
+    counts, _ = _g4(spark)
+    classic = {r["node"]: r["rank"] for r in _pagerank(counts).collect()}
+    absent = {r["node"]: r["rank"] for r in _pagerank(counts, "zzz").collect()}
+    assert sorted(classic) == sorted(absent) == list("abcd")
+    for n in classic:
+        assert abs(classic[n] - absent[n]) < 1e-12, (n, classic[n], absent[n])
 
 
 def test_selection_pack_semantic_invariants(spark, sf_dir):

@@ -59,12 +59,13 @@ SHOWCASE = {
         "per-query ranking is a window over the summed partials."
     ),
     "graph_pagerank_event_flow": (
-        "Fixed-iteration PageRank (Pregel-without-Pregel). Things to see: "
-        "each power step is one SortMergeJoin/ShuffledHashJoin keyed on the "
-        "vertex id plus one hash aggregate on dst — no broadcast builds in "
-        "the loop (a broadcast is a separate driver job per step, measured "
-        "slower); the edge table is a localCheckpoint leaf, so iteration "
-        "plans don't re-nest the extraction subtree."
+        "Fixed-iteration PageRank over the one-row transition matrix. "
+        "Things to see: Exchanges on user_id (sequence window), (i, j) "
+        "(pair counts) and i (row totals), then one SinglePartition "
+        "aggregate builds the matrix row; the 10 power steps are one "
+        "aggregate(sequence) expression inside the Generate that returns "
+        "a row per event type — no join per step, no Scan ExistingRDD "
+        "leaf."
     ),
     "events_peak_concurrent_incidents": (
         "Sweep-line interval concurrency. Things to see: the union of "
