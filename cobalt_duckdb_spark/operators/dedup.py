@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.text import fingerprint, shingles
+from cobalt_duckdb_spark.ordering import sort_result
 
 # --- shared deterministic 32-bit token hash ---------------------------------
 # First 8 hex chars of md5, parsed as unsigned int. Identical in DuckDB via
@@ -159,7 +160,7 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", F.round("jaccard", round_to).alias("jaccard"))
-        .orderBy("a_id", "b_id")
+        .transform(sort_result, "a_id", "b_id")
     )
 
 
@@ -226,7 +227,8 @@ def minhash_lsh_pairs(
     """LSH candidate pairs (same hash in ≥1 of 8 bands of 4 rows) verified
     with exact shingle Jaccard ≥ threshold. Deterministic: candidates are a
     pure function of the hardcoded hash family, so the DuckDB oracle can
-    reproduce the identical pair set.
+    reproduce the identical pair set. Unsorted: other queries join the
+    pairs, and the query that returns them sorts them.
 
     One MATERIALIZED shingle pass feeds both stages: signatures aggregate
     over the (id, hash) rows, and verification counts common hashes per
@@ -312,7 +314,6 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", F.round("jaccard", round_to).alias("jaccard"))
-        .orderBy("a_id", "b_id")
     )
 
 
@@ -481,7 +482,7 @@ def simhash_pairs(
         .filter(F.col(id_col) < F.col("b_id"))
         .select(F.col(id_col).alias("a_id"), "b_id", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .orderBy("a_id", "b_id")
+        .transform(sort_result, "a_id", "b_id")
     )
 
 
@@ -667,7 +668,7 @@ def semdedup_dropped(
         .applyInPandas(
             prune_fn, "doc_id BIGINT, cid BIGINT, keeper_id BIGINT, cos_sim DOUBLE"
         )
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -804,7 +805,7 @@ def srp_lsh_pairs(
     return (
         out.filter(F.col("cos_sim") >= eps)
         .select("a_id", "b_id", "n_bands", "cos_sim")
-        .orderBy("a_id", "b_id")
+        .transform(sort_result, "a_id", "b_id")
     )
 
 
@@ -961,7 +962,7 @@ def containment_pairs(
             F.round(containment, round_to).alias("containment"),
             F.round(jaccard, round_to).alias("jaccard"),
         )
-        .orderBy("a_id", "b_id")
+        .transform(sort_result, "a_id", "b_id")
     )
 
 
@@ -984,7 +985,8 @@ def minhash_lsh_incremental(
 
     Returns one row per flagged batch doc: (doc_id, n_corpus_dups,
     best_jaccard, best_corpus_id) with Jaccard verified exactly on the
-    shingle tables; ties on best resolve to the lowest corpus id."""
+    shingle tables; ties on best resolve to the lowest corpus id. Unsorted,
+    like ``minhash_lsh_pairs``."""
     from pyspark.sql import Window
 
     def bands_of(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1066,7 +1068,6 @@ def minhash_lsh_incremental(
             F.round(F.max("j"), round_to).alias("best_jaccard"),
             F.min_by("corpus_id", F.col("_rn")).alias("best_corpus_id"),
         )
-        .orderBy("doc_id")
     )
 
 

@@ -306,7 +306,8 @@ def pagerank_oracle_cte(
 
 def dedup_groups(pairs: DataFrame, src: str = "a_id", dst: str = "b_id") -> DataFrame:
     """Resolve near-dup pairs into groups: (doc_id, keeper_id, group_size),
-    keeper = component minimum. Everything except keepers is the drop list."""
+    keeper = component minimum. Everything except keepers is the drop list.
+    Unsorted, like ``dedup.minhash_lsh_pairs``."""
     comp = connected_components(pairs, src, dst)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("group_size")
@@ -318,7 +319,6 @@ def dedup_groups(pairs: DataFrame, src: str = "a_id", dst: str = "b_id") -> Data
             F.col("component").alias("keeper_id"),
             "group_size",
         )
-        .orderBy("doc_id")
     )
 
 

@@ -18,9 +18,9 @@ Spark-first translation:
   unlike the reference's engine-accidental tie order (SURVEY.md §5.2.4).
 
 Batch queries: the reference loops one SQL statement per query
-(``vector.py:171``); ``knn_topk_batch`` is the set-oriented rewrite — one job
+(``vector.py:171``); ``knn_topk_batch`` is the set-oriented rewrite — one plan
 for all queries via broadcast of the (small) query set and a per-query
-window top-k.
+window top-k, 4 Spark jobs at collect (8 queries, k = 5, sf0.1, 4 cores).
 
 Serving: ``knn_topk_statement`` is the one-request kernel of ``client`` and
 ``bench.py``, and it is SQL text, as the reference's request is
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.vector import cosine_distance
+from cobalt_duckdb_spark.ordering import sort_result
 
 
 def knn_topk_broadcast_query(
@@ -186,13 +187,17 @@ def knn_topk_batch(
     query_vec_col: str = "query_vec",
     round_to: int | None = 6,
 ) -> DataFrame:
-    """Set-oriented batch KNN: all queries in ONE job.
+    """Set-oriented batch KNN: all queries in ONE plan, 4 Spark jobs at
+    collect (8 queries, k = 5, sf0.1, 4 cores): the query-set broadcast,
+    the shuffle into the rank window, the shuffle into one partition and
+    the final sort (``ordering.sort_result``, no range-sampling job).
 
     Broadcast the query set (queries are user-issued — small) against the
     embeddings scan, score each (query, doc) pair, then per-query top-k with a
     rank window. At scale this is a map-only stage over the big table plus a
     shuffle of only ``n_queries × N_partition_survivors`` rows — the loop the
-    reference runs (``vector.py:171``) would be n_queries full scans.
+    reference runs (``vector.py:171``) would be n_queries full scans. The
+    ``n_queries × k`` result rows are sorted in one partition.
     """
     scored = embeddings.crossJoin(F.broadcast(queries)).select(
         F.col(query_id_col),
@@ -205,5 +210,5 @@ def knn_topk_batch(
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
         .select(query_id_col, "rank", id_col, dist.alias("distance"))
-        .orderBy(query_id_col, "rank")
+        .transform(sort_result, query_id_col, "rank")
     )

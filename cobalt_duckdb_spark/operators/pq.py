@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cobalt_duckdb_spark.ordering import sort_result
+
 PQ_M = 8  # subspaces
 PQ_DSUB = 8  # dims per subspace (M * DSUB = embedding dim 64)
 PQ_KSUB = 16  # centroids per subspace
@@ -143,7 +145,8 @@ def pq_adc_topk(
     Ranking uses the ROUNDED distance with a vec_id tiebreak: PQ code
     collisions make exact distance ties COMMON (same codes ⇒ same lookup
     multiset), and summation order would otherwise make the tie order
-    engine-dependent."""
+    engine-dependent. Unsorted: the re-rank query joins the candidates, and
+    the query that returns them sorts them."""
     books = pq_codebooks(embeddings, m, dsub, ksub, id_col)
     codes = pq_encode(embeddings, books, m, dsub, id_col)
 
@@ -169,7 +172,6 @@ def pq_adc_topk(
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
         .select(query_id_col, "rank", id_col, "adc_distance")
-        .orderBy(query_id_col, "rank")
     )
 
 
@@ -256,7 +258,7 @@ def ivfpq_adc_topk(
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
         .select(query_id_col, "rank", id_col, "adc_distance")
-        .orderBy(query_id_col, "rank")
+        .transform(sort_result, query_id_col, "rank")
     )
 
 
@@ -496,5 +498,5 @@ def adc_topk_from_index(
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
         .select(query_id_col, "rank", id_col, "adc_distance")
-        .orderBy(query_id_col, "rank")
+        .transform(sort_result, query_id_col, "rank")
     )

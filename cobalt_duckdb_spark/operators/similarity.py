@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.functions.vector import cosine_distance
+from cobalt_duckdb_spark.ordering import sort_result
 
 
 def ivf_assign(
@@ -121,5 +122,5 @@ def ivf_topk(
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
         .select(query_id_col, "rank", id_col, F.round("_dist", round_to).alias("distance"))
-        .orderBy(query_id_col, "rank")
+        .transform(sort_result, query_id_col, "rank")
     )

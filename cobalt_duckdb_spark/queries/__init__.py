@@ -131,56 +131,56 @@ _load_all_modules()
 # first, then every other name in registration order.
 # Pasted from `python tools/next_window.py --suggest`.
 _DRIVER_PRIORITY = (
+    "subq_correlated_above_avg_parts",  # src+helpers (r2)
+    "subq_in_top_spenders",  # src+helpers (r2)
+    "text_chunk_sliding_windows",  # src+helpers (r2)
+    "text_gopher_quality_flags",  # src+helpers (r2)
+    "text_repetition_scores",  # src+helpers (r2)
+    "text_tfidf_keywords",  # src+helpers (r2)
+    "events_multi_resolution_rollup",  # src+helpers (r3)
+    "events_peak_concurrent_incidents",  # src+helpers (r3)
+    "events_seasonal_hour_anomaly",  # src+helpers (r3)
+    "events_weekly_cohort_retention",  # src+helpers (r3)
     "graph_pagerank_event_flow",  # src+helpers (r3)
+    "multimodal_feature_extract",  # src+helpers (r3)
+    "pack_sequences_budget",  # src+helpers (r3)
+    "q12_case_aggregation",  # src+helpers (r3)
+    "q13_customer_order_distribution",  # src+helpers (r3)
+    "q14_promo_revenue_share",  # src+helpers (r3)
+    "q16_supplier_part_counts",  # src+helpers (r3)
+    "q20_nested_in_supplier_parts",  # src+helpers (r3)
+    "q21_sole_late_supplier",  # src+helpers (r3)
+    "q22_inactive_wealthy_customers",  # src+helpers (r3)
+    "q2_top_supplier_per_nation",  # src+helpers (r3)
+    "q4_late_order_priority",  # src+helpers (r3)
+    "q8_market_share",  # src+helpers (r3)
+    "sample_per_user_event_cap",  # src+helpers (r3)
+    "skyline_cheap_small_parts",  # src+helpers (r3)
+    "split_stratified_sample",  # src+helpers (r3)
+    "split_train_valid_test_hash",  # src+helpers (r3)
     "stats_chi2_lang_source",  # src+helpers (r3)
+    "text_pii_redaction",  # src+helpers (r3)
+    "udaf_label_centroids",  # src+helpers (r3)
+    "udtf_sentence_split",  # src+helpers (r3)
+    "agg_decimal_exact_money",  # src+helpers (r4)
+    "dedup_incremental_lsh_near",  # src+helpers (r4)
     "events_survival_km",  # src+helpers (r4)
     "graph_scc_mutual_reachability",  # src+helpers (r4)
-    "matryoshka_recall_audit",  # src+helpers (r5)
-    "events_growth_accounting",  # src+helpers (r6)
-    "events_window_funnel_depth",  # src+helpers (r6)
-    "sample_method_bakeoff",  # src+helpers (r6)
-    "sample_neyman_allocation",  # src+helpers (r6)
-    "sample_raking_calibration",  # src+helpers (r6)
-    "text_corpus_drift_kl",  # src+helpers (r6)
-    "text_rake_keywords",  # src+helpers (r6)
-    "text_sif_information_density",  # src+helpers (r6)
-    "dq_column_profile",  # src+helpers (r7)
-    "dq_freshness_audit",  # src+helpers (r7)
-    "features_woe_iv",  # src+helpers (r7)
-    "lineitem_revenue_waterfall",  # src+helpers (r7)
-    "mix_waterfill_budget",  # src+helpers (r7)
-    "orders_tier_migration_matrix",  # src+helpers (r7)
-    "pipeline_mix_entropy_shift",  # src+helpers (r7)
-    "stats_gmm_em_one_step",  # src+helpers (r7)
-    "text_heaps_law_fit",  # src+helpers (r7)
-    "events_mad_robust_outliers",  # src+helpers (r8)
-    "stats_benjamini_hochberg_fdr",  # src+helpers (r8)
-    "events_markov_entropy_rate",  # src+helpers (r9)
-    "graph_personalized_pagerank_error",  # src+helpers (r9)
-    "stats_key_skew_profiler",  # src+helpers (r9)
-    "embedding_knn_hubness_audit",  # src (r10)
-    "embedding_pca_power_iteration",  # src+helpers (r10)
-    "events_assoc_rules_types",  # src (r10)
-    "events_markov_absorption",  # src+helpers (r10)
-    "events_markov_removal_attribution",  # src+helpers (r10)
-    "events_markov_stationary",  # src+helpers (r10)
-    "events_transition_matrix",  # src+helpers (r10)
-    "graph_hits_hubs_authorities",  # src+helpers (r10)
-    "join_interval_error_click_left",  # src (r10)
-    "train_triplet_margin_audit",  # src (r10)
-    "subq_correlated_above_avg_parts",  # helpers (r2)
-    "subq_in_top_spenders",  # helpers (r2)
-    "text_bm25_topk",  # helpers (r2)
-    "text_bpe_merge_pairs",  # helpers (r2)
-    "text_chunk_sliding_windows",  # helpers (r2)
-    "text_gopher_quality_flags",  # helpers (r2)
-    "text_repetition_scores",  # helpers (r2)
-    "text_tfidf_keywords",  # helpers (r2)
-    "text_vocab_coverage",  # helpers (r2)
-    "window_percent_rank_cume",  # helpers (r2)
-    "dq_equidepth_deciles",  # helpers (r3)
-    "dq_histogram_totalprice",  # helpers (r3)
-    "events_gap_filled_minutes",  # helpers (r3)
+    "join_asof_bucketed_click_before_error",  # src+helpers (r4)
+    "join_asof_tolerance_click_before_error",  # src+helpers (r4)
+    "join_range_bucketed_incident_clicks",  # src+helpers (r4)
+    "json_props_variant",  # src+helpers (r4)
+    "multimodal_ahash_neardup_pairs",  # src+helpers (r4)
+    "multimodal_crossmodal_stub_topk",  # src+helpers (r4)
+    "udtf_polymorphic_windows",  # src+helpers (r4)
+    "udtf_table_argument_sessions",  # src+helpers (r4)
+    "dq_orders_lineitem_reconciliation",  # src+helpers (r5)
+    "embedding_ood_mahalanobis_diag",  # src+helpers (r5)
+    "embedding_rptree_partition_audit",  # src+helpers (r5)
+    "events_autocorrelation_hourly",  # src+helpers (r5)
+    "events_changepoint_cusum",  # src+helpers (r5)
+    "events_time_decay_attribution",  # src+helpers (r5)
+    "features_hashing_collision_audit",  # src+helpers (r5)
 )
 
 

@@ -18,6 +18,7 @@ from cobalt_duckdb_spark.functions.exact import (
     spark_round_sql,
 )
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -95,7 +96,7 @@ def scalar_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("c_acctbal") > 5000, "wealthy")
         .otherwise("regular")
         .alias("segment"),
-    ).orderBy("c_custkey")
+    ).transform(sort_result, "c_custkey")
 
 
 @register("agg_approx_sketches")
@@ -110,7 +111,7 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.approx_count_distinct("l_orderkey").alias("approx_orders"),
             F.percentile_approx("l_extendedprice", 0.5, 1000).alias("approx_median"),
         )
-        .orderBy("l_returnflag")
+        .transform(sort_result, "l_returnflag")
     )
 
 
@@ -198,7 +199,7 @@ def udaf_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             "centroid_milli",
             F.round("_spread", 6).alias("mean_dist_to_centroid"),
         )
-        .orderBy("label")
+        .transform(sort_result, "label")
     )
 
 
@@ -245,7 +246,7 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.createOrReplaceTempView("chunk_docs")
     return spark.sql(
         """
-        SELECT d.doc_id, c.chunk_idx, c.n_tokens, c.chunk
+        SELECT /*+ REPARTITION(1) */ d.doc_id, c.chunk_idx, c.n_tokens, c.chunk
         FROM chunk_docs d, LATERAL chunk_split(d.text, 32) c
         ORDER BY d.doc_id, c.chunk_idx
         """
@@ -276,7 +277,7 @@ def scalar_array_serialization(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.size("embedding").cast("bigint").alias("dim"),
         F.to_json(milli).alias("vec_milli_json"),
-    ).orderBy("vec_id")
+    ).transform(sort_result, "vec_id")
 
 
 def _cms_oracle() -> str:
@@ -335,7 +336,7 @@ def split_train_valid_test_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_test"),
             F.count(F.lit(1)).alias("n_total"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -435,7 +436,7 @@ def split_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", "lang", bucket.alias("bucket"), rate.alias("rate"))
         .filter(F.col("bucket") < F.col("rate"))
         .select("doc_id", "lang")
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -502,7 +503,7 @@ def pack_sequences_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").cast("bigint").alias("bin_tokens"),
             F.min("doc_id").cast("bigint").alias("first_doc"),
         )
-        .orderBy("lang", "bin_id")
+        .transform(sort_result, "lang", "bin_id")
     )
 
 
@@ -753,7 +754,7 @@ def skyline_cheap_small_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("p_retailprice", 2).alias("price"),
             "p_size",
         )
-        .orderBy("price", "p_partkey")
+        .transform(sort_result, "price", "p_partkey")
     )
 
 
@@ -988,7 +989,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(benford, 6).alias("benford_p"),
             F.round(F.abs(F.col("n") / F.col("t") - benford), 6).alias("abs_dev"),
         )
-        .orderBy("first_digit")
+        .transform(sort_result, "first_digit")
     )
 
 
@@ -1051,7 +1052,7 @@ def stats_entropy_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("normalized"),
         )
         .select("cohort", "n_types", "entropy_nats", "normalized")
-        .orderBy("cohort")
+        .transform(sort_result, "cohort")
     )
 
 
@@ -1320,7 +1321,7 @@ def udtf_polymorphic_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.createOrReplaceTempView("poly_docs")
     return spark.sql(
         """
-        SELECT d.doc_id, w.pos, w.tok1, w.tok2, w.tok3
+        SELECT /*+ REPARTITION(1) */ d.doc_id, w.pos, w.tok1, w.tok2, w.tok3
         FROM poly_docs d, LATERAL sliding_tokens(d.text, 3) w
         ORDER BY d.doc_id, w.pos
         """
@@ -1381,7 +1382,7 @@ def udaf_arrow_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean_chars", exact_round_ratio(F.col("sum_chars"), F.col("n_vals"), 4)
         )
         .select("source", "n_docs", "mean_chars", "max_chars")
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -1732,7 +1733,7 @@ def udtf_table_argument_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return spark.sql(
         """
-        SELECT user_id, n_events, n_sessions
+        SELECT /*+ REPARTITION(1) */ user_id, n_events, n_sessions
         FROM session_counter(
             TABLE(ta_events) PARTITION BY user_id ORDER BY (ts, event_id)
         )
@@ -2700,7 +2701,7 @@ def stats_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             "boot_hi",
             "boot_se",
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -3739,7 +3740,7 @@ def sql_api_try_error_safe_parsing(spark: SparkSession, sf_dir: str) -> DataFram
             .alias("n_div_guarded"),
             F.sum("v").cast("bigint").alias("parsed_sum"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from cobalt_duckdb_spark.functions.exact import exact_round_avg, exact_round_avg_sql
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators import dedup as D
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 # Exact-decimal mean of 6-dp-lattice jaccards (shared by the oracle
@@ -46,7 +47,7 @@ def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("f").alias("n_unique"),
             (F.count(F.lit(1)) - F.countDistinct("f")).alias("n_exact_dups"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -94,7 +95,9 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the identical hash family in SQL, so this probabilistic
     algorithm is still differentially tested."""
     d = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_pairs(d, threshold=0.5)
+    return D.minhash_lsh_pairs(d, threshold=0.5).transform(
+        sort_result, "a_id", "b_id"
+    )
 
 
 @register("dedup_simhash_pairs", oracle=D.simhash_oracle_sql(max_hamming=12))
@@ -160,7 +163,7 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("label")
         .applyInPandas(pairs_fn, "a_id BIGINT, b_id BIGINT, cos_sim DOUBLE")
-        .orderBy("a_id", "b_id")
+        .transform(sort_result, "a_id", "b_id")
     )
 
 
@@ -224,7 +227,7 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"), threshold=0.5
     )
-    return dedup_groups(pairs)
+    return dedup_groups(pairs).transform(sort_result, "doc_id")
 
 
 @register(
@@ -287,7 +290,7 @@ def dedup_keep_best_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("group_size").cast("bigint").alias("group_size"),
             (F.col("group_size") - 1).cast("bigint").alias("n_dropped"),
         )
-        .orderBy("keeper_id")
+        .transform(sort_result, "keeper_id")
     )
 
 
@@ -360,7 +363,7 @@ def dedup_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "eval_id", "train_id", F.round(contain, 6).alias("containment")
         )
-        .orderBy("eval_id", "train_id")
+        .transform(sort_result, "eval_id", "train_id")
     )
 
 
@@ -446,7 +449,7 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dup_any).cast("bigint").alias("n_dup_any"),
             (F.count(F.lit(1)) - F.sum(dup_any)).cast("bigint").alias("n_admitted"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -656,7 +659,9 @@ def dedup_incremental_lsh_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("source") == "src0")
     batch = d.filter(F.col("source") != "src0")
-    return D.minhash_lsh_incremental(corpus, batch, threshold=0.5)
+    return D.minhash_lsh_incremental(corpus, batch, threshold=0.5).transform(
+        sort_result, "doc_id"
+    )
 
 
 @register("dedup_semdedup_dropped", oracle=D.semdedup_oracle_sql(k=8, eps=0.4))
@@ -746,7 +751,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_round_avg("jaccard", dp=6, scale=6).alias("avg_jaccard"),
             F.round(F.max("jaccard"), 6).alias("max_jaccard"),
         )
-        .orderBy("src_a", "src_b")
+        .transform(sort_result, "src_a", "src_b")
     )
 
 

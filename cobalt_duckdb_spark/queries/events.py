@@ -40,6 +40,7 @@ from cobalt_duckdb_spark.functions.matrix import (
 )
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators.graph import transition_counts
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -67,7 +68,7 @@ def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").alias("max_k"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -98,7 +99,7 @@ def stream_tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame
             "n_events",
             "sum_value",
         )
-        .orderBy("window_start", "event_type")
+        .transform(sort_result, "window_start", "event_type")
     )
 
 
@@ -140,7 +141,7 @@ def stream_sliding_window_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_value"),
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "avg_value")
-        .orderBy("window_start")
+        .transform(sort_result, "window_start")
     )
 
 
@@ -186,7 +187,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.end").alias("session_end"),
             "n_events",
         )
-        .orderBy("user_id", "session_start")
+        .transform(sort_result, "user_id", "session_start")
     )
 
 
@@ -210,7 +211,7 @@ def stream_dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").alias("first_event_id"),
             F.count(F.lit(1)).alias("n_total"),
         )
-        .orderBy("user_id", "event_type")
+        .transform(sort_result, "user_id", "event_type")
     )
 
 
@@ -236,7 +237,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .orderBy("c_mktsegment", "event_type")
+        .transform(sort_result, "c_mktsegment", "event_type")
     )
 
 
@@ -279,7 +280,7 @@ def events_user_journey_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ordered.alias("first_events"),
             F.count(F.lit(1)).alias("n_events"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -310,7 +311,7 @@ def json_props_as_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum("prop_value").alias("total"),
         )
-        .orderBy("event_type", "prop_key")
+        .transform(sort_result, "event_type", "prop_key")
     )
 
 
@@ -349,7 +350,7 @@ def join_interval_error_click(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_pairs"),
             F.countDistinct("error_id").alias("n_errors_with_click"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -393,7 +394,7 @@ def events_value_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 2).alias("value"),
             F.round(z, 4).alias("zscore"),
         )
-        .orderBy("event_id")
+        .transform(sort_result, "event_id")
     )
 
 
@@ -444,7 +445,7 @@ def events_windowed_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", rnk.alias("rnk")
         )
         .filter(F.col("rnk") <= 2)
-        .orderBy("window_start", "rnk")
+        .transform(sort_result, "window_start", "rnk")
     )
 
 
@@ -496,7 +497,7 @@ def events_latest_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("last_ts"),
             F.col("n_events").cast("bigint").alias("n_events"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -540,7 +541,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("j").alias("to_type"),
         "n",
         F.round(F.col("n") / F.sum("n").over(tot), 6).alias("p"),
-    ).orderBy("from_type", "to_type")
+    ).transform(sort_result, "from_type", "to_type")
 
 
 @register(
@@ -612,7 +613,7 @@ def events_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             valid_to.isNull().alias("is_current"),
             F.row_number().over(w).cast("bigint").alias("version"),
         )
-        .orderBy("user_id", "version")
+        .transform(sort_result, "user_id", "version")
     )
 
 
@@ -692,7 +693,7 @@ def join_interval_error_click_left(spark: SparkSession, sf_dir: str) -> DataFram
             .cast("bigint")
             .alias("n_errors_orphan"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -870,7 +871,7 @@ def events_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             # engine-dependent (functions/exact.py) — sum exactly instead.
             exact_round_sum(F.col("credit"), 4).alias("attributed_revenue"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -962,7 +963,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("revenue"),
         )
-        .orderBy("user_id", "session_n")
+        .transform(sort_result, "user_id", "session_n")
     )
 
 
@@ -1000,7 +1001,7 @@ def json_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(k >= 50, 1).otherwise(0)).cast("bigint").alias("n_high"),
             F.schema_of_variant_agg("v").alias("variant_schema"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -1098,7 +1099,7 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_clipped"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -1288,7 +1289,7 @@ def events_bitemporal_restatement(spark: SparkSession, sf_dir: str) -> DataFrame
         F.round(F.col("rev_final") - F.col("rev_known"), 2).alias(
             "restatement"
         ),
-    ).orderBy("day")
+    ).transform(sort_result, "day")
 
 
 @register(
@@ -1423,7 +1424,7 @@ def join_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             "state_at_purchase",
             "state_version",
         )
-        .orderBy("event_id")
+        .transform(sort_result, "event_id")
     )
 
 
@@ -2055,7 +2056,7 @@ def events_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("wrev_c").over(cum), F.col("cohort_size") * 100, 4
             ).alias("cum_ltv_per_user"),
         )
-        .orderBy("cohort", "week_offset")
+        .transform(sort_result, "cohort", "week_offset")
     )
 
 
@@ -2131,7 +2132,7 @@ def events_dau_wau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("wau").cast("bigint").alias("wau"),
         F.col("mau").cast("bigint").alias("mau"),
         F.round(F.col("dau") / F.col("mau"), 4).alias("stickiness"),
-    ).orderBy("d")
+    ).transform(sort_result, "d")
 
 
 # ---------------------------------------------------------------------------

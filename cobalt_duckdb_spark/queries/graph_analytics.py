@@ -33,6 +33,7 @@ from cobalt_duckdb_spark.operators.graph import (
     pagerank_oracle_cte,
     transition_counts,
 )
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 _PR_ITERS = 10
@@ -294,7 +295,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("node").cast("bigint").alias("max_node"),
         )
         .filter(F.col("n_nodes") >= 2)
-        .orderBy(F.col("n_nodes").desc(), "community")
+        .transform(sort_result, F.col("n_nodes").desc(), "community")
     )
 
 

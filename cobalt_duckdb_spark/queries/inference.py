@@ -18,6 +18,7 @@ from cobalt_duckdb_spark.functions.inference import (
 )
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators.knn import knn_topk_batch
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -60,5 +61,5 @@ def infer_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size("toks")).cast("bigint").alias("total_tokens"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )

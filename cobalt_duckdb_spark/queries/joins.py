@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators.joins import asof_join, band_join
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -60,7 +61,7 @@ def join_full_outer_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("rev97", F.lit(0.0)) - F.coalesce("rev96", F.lit(0.0)), 2
             ).alias("delta"),
         )
-        .orderBy("custkey")
+        .transform(sort_result, "custkey")
     )
 
 
@@ -87,7 +88,7 @@ def join_semi_urgent_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
         .groupBy("n_name")
         .agg(F.count(F.lit(1)).alias("n_urgent_buyers"))
-        .orderBy("n_name")
+        .transform(sort_result, "n_name")
     )
 
 
@@ -112,7 +113,7 @@ def join_anti_no_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(urgent, c.c_custkey == urgent.o_custkey, "left_anti")
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 
@@ -140,7 +141,7 @@ def join_band_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.groupBy("s_suppkey")
         .agg(F.count(F.lit(1)).alias("n_close_customers"))
-        .orderBy("s_suppkey")
+        .transform(sort_result, "s_suppkey")
     )
 
 
@@ -188,7 +189,7 @@ def join_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.col("asof_click_id"),
         F.col("asof_click_ts"),
-    ).orderBy("event_id")
+    ).transform(sort_result, "event_id")
 
 
 @register(
@@ -241,7 +242,7 @@ def join_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.col("asof_click_id"),
         F.col("asof_click_ts"),
-    ).orderBy("event_id")
+    ).transform(sort_result, "event_id")
 
 
 @register(
@@ -292,7 +293,7 @@ def join_asof_next_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.col("asof_click_id"),
         F.col("asof_click_ts"),
-    ).orderBy("event_id")
+    ).transform(sort_result, "event_id")
 
 
 @register(
@@ -349,7 +350,7 @@ def join_asof_nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.col("click_id_nearest").alias("nearest_click_id"),
         F.col("matched_time").alias("nearest_click_ts"),
-    ).orderBy("event_id")
+    ).transform(sort_result, "event_id")
 
 
 @register(
@@ -409,7 +410,7 @@ def join_range_bucketed_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
             F.min("click_id").alias("first_click_id"),
             F.max("click_id").alias("last_click_id"),
         )
-        .orderBy("incident_id")
+        .transform(sort_result, "incident_id")
     )
 
 
@@ -486,4 +487,4 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 > 600_000_000
             )
         ).alias("dropped_by_tolerance"),
-    ).orderBy("event_id")
+    ).transform(sort_result, "event_id")

@@ -23,6 +23,7 @@ from cobalt_duckdb_spark.operators.multimodal import (
     extract_features,
     synth_media_from_documents,
 )
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -59,7 +60,7 @@ def multimodal_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_bytes").alias("max_bytes"),
             F.countDistinct("content_hash").alias("n_distinct"),
         )
-        .orderBy("kind")
+        .transform(sort_result, "kind")
     )
 
 
@@ -89,7 +90,7 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns 8 features). The differential gate now checks the mapInPandas
     path end-to-end instead of counting rows."""
     media = synth_media_from_documents(load_table(spark, sf_dir, "documents"))
-    return extract_features(media).orderBy("media_id")
+    return extract_features(media).transform(sort_result, "media_id")
 
 
 @register(
@@ -119,7 +120,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         frame_sample_plan(media, every_n_bytes=1024)
         .select("media_id", F.col("byte_offset").cast("bigint").alias("byte_offset"))
-        .orderBy("media_id", "byte_offset")
+        .transform(sort_result, "media_id", "byte_offset")
     )
 
 
@@ -222,7 +223,7 @@ def multimodal_crossmodal_stub_topk(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("rank") <= 3)
         .select("query_id", F.col("rank").cast("bigint").alias("rank"),
                 "media_id", "score")
-        .orderBy("query_id", "rank")
+        .transform(sort_result, "query_id", "rank")
     )
 
 
@@ -349,7 +350,7 @@ def multimodal_ahash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
             hamming.alias("hamming"),
         )
         .filter(F.col("hamming") <= _AHASH_MAX_HAMMING)
-        .orderBy("hamming", "doc_a", "doc_b")
+        .transform(sort_result, "hamming", "doc_a", "doc_b")
     )
 
 

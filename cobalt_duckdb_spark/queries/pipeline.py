@@ -41,6 +41,7 @@ from cobalt_duckdb_spark.functions.exact import (
 )
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators import dedup as D
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 _MIN_TOKENS = 30
@@ -252,7 +253,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(_stage_audit(n2, 3, "near_dedup"))
         .unionByName(_stage_audit(d5, 4, "decontaminated"))
         .unionByName(split_audit)
-        .orderBy("stage_idx")
+        .transform(sort_result, "stage_idx")
     )
 
 
@@ -368,7 +369,7 @@ def sample_per_user_event_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_errors_kept"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -609,7 +610,7 @@ def profile_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return scalars.unionByName(langs).orderBy("section", "metric")
+    return scalars.unionByName(langs).transform(sort_result, "section", "metric")
 
 
 @register(
@@ -665,7 +666,7 @@ def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed.withColumn("pos", F.row_number().over(w).cast("bigint"))
         .filter(F.col("pos") <= 10)
         .select("epoch", "pos", "doc_id")
-        .orderBy("epoch", "pos")
+        .transform(sort_result, "epoch", "pos")
     )
 
 
@@ -939,7 +940,7 @@ def features_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("loo_encoding"),
             F.col("n").alias("category_n"),
         )
-        .orderBy("event_id")
+        .transform(sort_result, "event_id")
     )
 
 
@@ -1270,7 +1271,7 @@ def sample_balanced_class_downsample(spark: SparkSession, sf_dir: str) -> DataFr
             .cast("bigint")
             .alias("id_checksum"),
         )
-        .orderBy("label")
+        .transform(sort_result, "label")
     )
 
 
@@ -1778,7 +1779,7 @@ def sample_raking_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("target_total"),
             6,
         ).alias("rel_margin_dev"),
-    ).orderBy("lang")
+    ).transform(sort_result, "lang")
 
 
 # ---------------------------------------------------------------------------

@@ -27,6 +27,7 @@ from cobalt_duckdb_spark.functions.exact import (
     spark_round_sql,
 )
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -89,7 +90,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_round_avg_int(F.col("l_discount"), 4, 2).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(sort_result, "l_returnflag", "l_linestatus")
     )
 
 
@@ -196,7 +197,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_extendedprice") * (1 - F.col("l_discount")), 2
             ).alias("revenue")
         )
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
+        .transform(sort_result, F.desc("revenue"), F.asc("n_name"))
     )
 
 
@@ -220,7 +221,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_custkey").alias("n_customers"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .orderBy("o_orderpriority")
+        .transform(sort_result, "o_orderpriority")
     )
 
 
@@ -259,7 +260,8 @@ def agg_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "r_name", "n_name", "g_region", "g_nation", "total_acctbal", "n_customers"
         )
-        .orderBy(
+        .transform(
+            sort_result,
             "g_region",
             "g_nation",
             F.col("r_name").asc_nulls_first(),
@@ -292,7 +294,8 @@ def agg_cube_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         )
         .select("l_returnflag", "l_linestatus", "g_flag", "g_status", "n_items", "sum_qty")
-        .orderBy(
+        .transform(
+            sort_result,
             "g_flag",
             "g_status",
             F.col("l_returnflag").asc_nulls_first(),
@@ -330,7 +333,7 @@ def agg_collect_sorted_list(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("segments"),
             F.count(F.lit(1)).alias("n_customers"),
         )
-        .orderBy("n_name")
+        .transform(sort_result, "n_name")
     )
 
 
@@ -364,7 +367,7 @@ def agg_stats_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile("o_totalprice", 0.5), 4).alias("median_price"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sort_result, "o_orderstatus")
     )
 
 
@@ -397,7 +400,7 @@ def agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "covar_qty_price"
             ),
         )
-        .orderBy("l_returnflag")
+        .transform(sort_result, "l_returnflag")
     )
 
 
@@ -426,7 +429,7 @@ def predicate_pack_part(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("p_retailprice").isNotNull()
         )
         .select("p_partkey", "p_name", "p_brand", "p_size", "p_retailprice")
-        .orderBy("p_partkey")
+        .transform(sort_result, "p_partkey")
     )
 
 
@@ -546,7 +549,7 @@ def scalar_string_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.pow("o_totalprice", F.lit(0.5)) + F.abs(F.col("o_totalprice") * -1), 4
         ).alias("math_mix"),
-    ).orderBy("o_orderkey")
+    ).transform(sort_result, "o_orderkey")
 
 
 @register(
@@ -558,7 +561,7 @@ def distinct_mktsegments(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "customer")
         .select("c_mktsegment")
         .distinct()
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 
@@ -637,7 +640,7 @@ def unpivot_event_totals_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return wide.unpivot(
         ["user_id"], ["click", "purchase", "view"], "kind", "amount"
-    ).orderBy("user_id", "kind")
+    ).transform(sort_result, "user_id", "kind")
 
 
 @register(
@@ -703,7 +706,7 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(m3 / F.pow(m2, 1.5), 4).alias("skewness_pop"),
             F.round(m4 / F.pow(m2, 2.0) - 3.0, 4).alias("excess_kurtosis_pop"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sort_result, "o_orderstatus")
     )
 
 
@@ -741,7 +744,7 @@ def agg_grouping_sets_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     li.createOrReplaceTempView("_gs_lineitem")
     return spark.sql(
         """
-        SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
+        SELECT /*+ REPARTITION(1) */ COALESCE(l_returnflag, 'ALL') AS returnflag,
                COALESCE(l_linestatus, 'ALL') AS linestatus,
                COALESCE(CAST(ship_year AS STRING), 'ALL') AS ship_year,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -881,7 +884,7 @@ def agg_decimal_exact_money(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("exact_sum"),
             F.round(F.sum("l_extendedprice"), 2).alias("double_sum"),
         )
-        .orderBy("l_returnflag")
+        .transform(sort_result, "l_returnflag")
     )
 
 
@@ -966,7 +969,7 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("p50w", 2).alias("p50_weighted"),
             F.round("p90w", 2).alias("p90_weighted"),
         )
-        .orderBy("flag")
+        .transform(sort_result, "flag")
     )
 
 
@@ -1051,7 +1054,7 @@ def stats_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.corr("rq", "rp"), 4).alias("spearman_qty_price"),
             F.round(F.corr("rq", "rd"), 4).alias("spearman_qty_discount"),
         )
-        .orderBy("flag")
+        .transform(sort_result, "flag")
     )
 
 
@@ -1128,5 +1131,5 @@ def agg_trimmed_mean_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(value, 0.5)"), 4).alias("median"),
             (mean_all - trimmed_x).alias("tail_pull"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )

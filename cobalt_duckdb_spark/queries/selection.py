@@ -31,6 +31,7 @@ from cobalt_duckdb_spark.functions.matrix import (
 )
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators.graph import transition_counts
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -119,7 +120,7 @@ def sample_coreset_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     return selected.select(
         "sel_rank", "vec_id", F.round("d", 6).alias("dist_to_set")
-    ).orderBy("sel_rank")
+    ).transform(sort_result, "sel_rank")
 
 
 # ---------------------------------------------------------------------------
@@ -624,7 +625,7 @@ def pipeline_token_budget_allocator(spark: SparkSession, sf_dir: str) -> DataFra
                 "budget_share"
             ),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -766,8 +767,9 @@ def embedding_ood_mahalanobis_diag(spark: SparkSession, sf_dir: str) -> DataFram
             "sigma"
         ),
     )
-    # broadcast the 64-row stats as aligned arrays; score via one zip fold
-    packed = stats.orderBy("i").agg(
+    # broadcast the 64-row stats as aligned arrays; score via one zip fold.
+    # Sorted in one partition, so both collect_lists follow dimension order
+    packed = stats.transform(sort_result, "i").agg(
         F.collect_list("mu").alias("mus"), F.collect_list("sigma").alias("sigmas")
     )
     # mean over dims: divide by F.size(v) — schema-driven rather than a
@@ -954,7 +956,7 @@ def hybrid_alpha_blend_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         blended.withColumn("rank", rnk.cast("bigint"))
         .filter(F.col("rank") <= _BLEND_TOP)
         .select("alpha", "rank", "doc_id", "blend")
-        .orderBy("alpha", "rank")
+        .transform(sort_result, "alpha", "rank")
     )
 
 
@@ -1050,7 +1052,7 @@ def dq_orders_lineitem_reconciliation(spark: SparkSession, sf_dir: str) -> DataF
             exact_round_avg(F.col("adiff"), 4).alias("avg_abs_diff"),
             F.round(F.max("adiff"), 4).cast("double").alias("max_abs_diff"),
         )
-        .orderBy("band")
+        .transform(sort_result, "band")
     )
 
 
@@ -1171,7 +1173,7 @@ def events_piecewise_trend_knots(spark: SparkSession, sf_dir: str) -> DataFrame:
             "intercept"
         ),
         F.round(r2, 6).alias("r2"),
-    ).orderBy("seg_idx")
+    ).transform(sort_result, "seg_idx")
 
 
 # ---------------------------------------------------------------------------
@@ -1285,7 +1287,7 @@ def text_backoff_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFram
             F.round(F.avg("nll"), 6).alias("cross_entropy_nats"),
             F.round(F.exp(F.avg("nll")), 4).alias("perplexity"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -1639,7 +1641,7 @@ def embedding_rptree_partition_audit(spark: SparkSession, sf_dir: str) -> DataFr
             F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
             F.round(F.avg("cos_c"), 6).alias("mean_cos_to_centroid"),
         )
-        .orderBy("leaf")
+        .transform(sort_result, "leaf")
     )
 
 
@@ -1732,7 +1734,7 @@ def pipeline_quality_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFr
             F.round("ece", 6).alias("ece"),
             F.round("brier", 6).alias("brier"),
         )
-        .orderBy("bin_idx")
+        .transform(sort_result, "bin_idx")
     )
 
 
@@ -1937,7 +1939,7 @@ def features_hashing_collision_audit(spark: SparkSession, sf_dir: str) -> DataFr
                 6,
             ).alias("expected_pair_rate"),
         )
-        .orderBy("bucket_bits")
+        .transform(sort_result, "bucket_bits")
     )
 
 
@@ -2023,7 +2025,7 @@ def pipeline_loso_source_influence(spark: SparkSession, sf_dir: str) -> DataFram
             F.round(loso, 6).alias("loso_mean_quality"),
             F.round(F.col("gsq") / F.col("gn") - loso, 6).alias("influence"),
         )
-        .orderBy(F.col("influence").desc(), "source")
+        .transform(sort_result, F.col("influence").desc(), "source")
     )
 
 
@@ -2087,7 +2089,7 @@ def text_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFr
                 "mean_doc_fertility"
             ),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -2201,7 +2203,7 @@ def events_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
                 "attributed_revenue"
             ),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -2237,7 +2239,7 @@ def sql_api_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gba")
     return spark.sql(
         """
-        SELECT o_orderpriority,
+        SELECT /*+ REPARTITION(1) */ o_orderpriority,
                o_orderstatus,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
                ROUND(SUM(o_totalprice), 2) AS total_value
@@ -2411,7 +2413,7 @@ def embedding_label_alignment_matrix(spark: SparkSession, sf_dir: str) -> DataFr
             "label_b",
             F.round(cosine_similarity("cva", "cvb"), 6).alias("centroid_cosine"),
         )
-        .orderBy("label_a", "label_b")
+        .transform(sort_result, "label_a", "label_b")
     )
 
 
@@ -2896,5 +2898,5 @@ def simsearch_srp_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFra
                 f"mean_recall_at_{_MP_K}"
             ),
         )
-        .orderBy("probe_depth")
+        .transform(sort_result, "probe_depth")
     )

@@ -20,6 +20,7 @@ from cobalt_duckdb_spark.functions.matrix import (
 from cobalt_duckdb_spark.io import load_table
 from cobalt_duckdb_spark.operators.knn import knn_topk_batch
 from cobalt_duckdb_spark.operators.similarity import ivf_topk
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 _QUERY_IDS = [0, 1, 2]
@@ -57,8 +58,9 @@ def _query_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def simsearch_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force batch KNN — one job for all queries (the set-oriented
-    rewrite of the reference's per-query loop, SURVEY.md §2.10 U4)."""
+    """Exact brute-force batch KNN — one plan for all queries (the
+    set-oriented rewrite of the reference's per-query loop, SURVEY.md §2.10
+    U4), 4 jobs at collect."""
     emb = load_table(spark, sf_dir, "embeddings")
     return knn_topk_batch(emb, _query_set(spark, sf_dir), k=_K)
 
@@ -310,7 +312,7 @@ def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_points"),
             F.round(F.avg("dist"), 4).alias("avg_dist"),
         )
-        .orderBy("cid")
+        .transform(sort_result, "cid")
     )
 
 
@@ -379,7 +381,9 @@ def simsearch_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cobalt_duckdb_spark.operators.pq import pq_adc_topk
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    return pq_adc_topk(emb, _query_set(spark, sf_dir), k=_K)
+    return pq_adc_topk(emb, _query_set(spark, sf_dir), k=_K).transform(
+        sort_result, "query_id", "rank"
+    )
 
 
 @register(
@@ -460,7 +464,7 @@ def simsearch_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("negative_id"),
             F.round("_d", 6).alias("distance"),
         )
-        .orderBy("query_id", "rank")
+        .transform(sort_result, "query_id", "rank")
     )
 
 
@@ -565,7 +569,7 @@ def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_overlap",
             F.round(F.col("n_overlap") / _MRL_K, 6).alias("recall_at_k"),
         )
-        .orderBy("query_id")
+        .transform(sort_result, "query_id")
     )
 
 
@@ -640,7 +644,7 @@ def simsearch_pq_rerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= _K)
         .select("query_id", "rank", "vec_id", F.round("d", 6).alias("distance"))
-        .orderBy("query_id", "rank")
+        .transform(sort_result, "query_id", "rank")
     )
 
 
@@ -685,6 +689,8 @@ def simsearch_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("label").cast("bigint").alias("label")
     )
+    # knn_topk_batch sorts its result in one partition, and the broadcast
+    # join keeps it there: this sort is local, with no exchange of its own
     return out.join(F.broadcast(lab), "vec_id").select(
         "query_id", "rank", "vec_id", "label", "distance"
     ).orderBy("query_id", "rank")
@@ -804,7 +810,7 @@ def simsearch_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("db", 6).alias("avg_dist_batch"),
             F.round(F.col("db") - F.col("dc"), 6).alias("drift"),
         )
-        .orderBy("cell")
+        .transform(sort_result, "cell")
     )
 
 
@@ -906,7 +912,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.round(F.col("nb") - F.col("na"), 6).alias("norm_shift"),
         )
-        .orderBy("label")
+        .transform(sort_result, "label")
     )
 
 
@@ -1022,7 +1028,7 @@ def cluster_silhouette_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_misassigned"),
         )
-        .orderBy("cid")
+        .transform(sort_result, "cid")
     )
 
 
@@ -1170,7 +1176,7 @@ def simsearch_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.col("rel").alias("relevance"),
         )
-        .orderBy("pick")
+        .transform(sort_result, "pick")
     )
 
 
@@ -1552,7 +1558,7 @@ def simsearch_recall_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame
                 "avg_scanned_share"
             ),
         )
-        .orderBy("nprobe")
+        .transform(sort_result, "nprobe")
     )
 
 
@@ -1724,7 +1730,7 @@ def simsearch_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .filter(F.col("rank") <= _BH_K)
         .select("query_id", "rank", "vec_id", "hamming")
-        .orderBy("query_id", "rank")
+        .transform(sort_result, "query_id", "rank")
     )
 
 
@@ -1982,7 +1988,7 @@ def simsearch_range_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(q))
         .filter(dist <= _RANGE_RADIUS)
         .select("vec_id", F.round(dist, 6).alias("distance"))
-        .orderBy("distance", "vec_id")
+        .transform(sort_result, "distance", "vec_id")
     )
 
 
@@ -2235,5 +2241,5 @@ def train_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_margin_violations"),
         )
-        .orderBy("label")
+        .transform(sort_result, "label")
     )

@@ -45,7 +45,7 @@ def subq_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
-        SELECT l.l_partkey AS l_partkey,
+        SELECT /*+ REPARTITION(1) */ l.l_partkey AS l_partkey,
                COUNT(*) AS n_heavy_items,
                ROUND(SUM(l.l_quantity), 2) AS total_qty
         FROM lineitem l
@@ -80,7 +80,7 @@ def subq_in_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT c.c_custkey AS c_custkey, c.c_name AS c_name,
+        SELECT /*+ REPARTITION(1) */ c.c_custkey AS c_custkey, c.c_name AS c_name,
                ROUND(c.c_acctbal, 2) AS acctbal
         FROM customer c
         WHERE c.c_custkey IN (
@@ -117,7 +117,7 @@ def subq_scalar_vs_global_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_s = exact_round_avg_sql("o_totalprice", 4, dialect="spark")
     return spark.sql(
         """
-        SELECT o_orderpriority,
+        SELECT /*+ REPARTITION(1) */ o_orderpriority,
                {avg_s} AS avg_price,
                {avg_s} - (SELECT {avg_s} FROM orders) AS delta_vs_global
         FROM orders
@@ -231,7 +231,8 @@ def sql_api_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFram
             FROM reach r JOIN {view} e ON e.src = r.dst
             WHERE r.hop < 4
         )
-        SELECT dst AS event_type, CAST(MIN(hop) AS BIGINT) AS min_hops,
+        SELECT /*+ REPARTITION(1) */
+               dst AS event_type, CAST(MIN(hop) AS BIGINT) AS min_hops,
                CAST(COUNT(*) AS BIGINT) AS n_paths_le4
         FROM reach GROUP BY dst ORDER BY event_type
         """
@@ -294,7 +295,7 @@ def sql_api_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
                      {avg_s} AS avg_price
            GROUP BY o_orderpriority
         |> WHERE n_orders > 10
-        |> SELECT o_orderpriority, n_orders, revenue, avg_price
+        |> SELECT /*+ REPARTITION(1) */ o_orderpriority, n_orders, revenue, avg_price
         |> ORDER BY o_orderpriority
         """.replace(
             "{avg_s}", exact_round_avg_sql("o_totalprice", 4, dialect="spark")
@@ -323,7 +324,7 @@ def sql_api_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(
         """
-        SELECT o_orderpriority,
+        SELECT /*+ REPARTITION(1) */ o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
                {avg_s} AS avg_price
         FROM orders

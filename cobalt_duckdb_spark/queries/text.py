@@ -18,6 +18,7 @@ from cobalt_duckdb_spark.functions.exact import (
     spark_round_sql,
 )
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 _STOPWORDS = ["the", "a", "of", "and"]
@@ -47,7 +48,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("tc"), 4).alias("avg_tokens"),
             F.round(F.avg("atl"), 4).alias("avg_token_len"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -84,7 +85,7 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(T.stopword_ratio("text", _STOPWORDS), 6).alias("stopword_ratio"),
         F.round(T.avg_token_length("text"), 4).alias("avg_token_len"),
         F.round(T.quality_score("text", _STOPWORDS), 6).alias("quality"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 def _langid_oracle() -> str:
@@ -118,7 +119,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("lang", T.predicted_lang("text").alias("predicted"))
         .groupBy("lang", "predicted")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "predicted")
+        .transform(sort_result, "lang", "predicted")
     )
 
 
@@ -132,7 +133,9 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    return d.select("doc_id", T.fingerprint("text").alias("fp")).orderBy("doc_id")
+    return d.select("doc_id", T.fingerprint("text").alias("fp")).transform(
+        sort_result, "doc_id"
+    )
 
 
 @register(
@@ -269,7 +272,7 @@ def text_levenshtein_near_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_near"),
             avg.alias("avg_dist"),
         )
-        .orderBy("p_brand")
+        .transform(sort_result, "p_brand")
     )
 
 
@@ -307,7 +310,7 @@ def text_bpe_ish_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bpe").alias("bpe_ish_tokens"),
             F.round(F.sum("bpe") * 1.0 / F.sum("ws"), 4).alias("expansion_ratio"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -411,7 +414,7 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dup_4gram_frac"
             ),
         )
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -488,7 +491,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
             F.round(-F.avg(F.log(F.col("c12") / F.col("c1"))), 4).alias("nll"),
         )
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -779,7 +782,7 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tfidf",
             "rank",
         )
-        .orderBy("doc_id", "rank")
+        .transform(sort_result, "doc_id", "rank")
     )
 
 
@@ -870,7 +873,7 @@ def text_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         flag_s.alias("flag_stopwords"),
         flag_r.alias("flag_repetition"),
         (flag_n & flag_m & flag_s & flag_r).alias("keep"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 _CHUNK_W = 64  # tokens per chunk
@@ -932,7 +935,7 @@ def text_chunk_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.lit(_CHUNK_W), F.size("t") - F.col("start0"))
         .cast("bigint")
         .alias("n_tokens"),
-    ).orderBy("doc_id", "chunk_idx")
+    ).transform(sort_result, "doc_id", "chunk_idx")
 
 
 # Cross-engine-safe PII patterns: plain character classes and counted
@@ -1007,7 +1010,7 @@ def text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             _PII_PHONE,
             "[PHONE]",
         ).alias("redacted"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 @register(
@@ -1141,7 +1144,7 @@ def text_corpus_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("js_vs_base"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -1465,7 +1468,7 @@ def text_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = picks[0]
     for p in picks[1:]:
         out = out.unionAll(p)
-    return out.orderBy("round")
+    return out.transform(sort_result, "round")
 
 
 def _prf_oracle() -> str:
@@ -1982,7 +1985,7 @@ def text_yule_k_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_tokens") * F.col("n_tokens")),
             4,
         ).alias("yule_k"),
-    ).orderBy("source")
+    ).transform(sort_result, "source")
 
 
 # ---------------------------------------------------------------------------
@@ -2068,7 +2071,7 @@ def text_ngram_novelty_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("novelty_rate"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -2417,7 +2420,7 @@ def text_watermark_greenlist_detect(spark: SparkSession, sf_dir: str) -> DataFra
             .cast("bigint")
             .alias("n_flagged"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -2590,7 +2593,7 @@ def text_umass_keyword_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.log((F.col("dij") + 1) / F.col("dj"))), 4
             ).alias("umass_coherence"),
         )
-        .orderBy("keyword_set")
+        .transform(sort_result, "keyword_set")
     )
 
 
@@ -2756,7 +2759,7 @@ def text_char_entropy_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(ent, 4).alias("entropy_bits_per_char"),
             F.round(ent / 8.0, 4).alias("min_compress_ratio"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 

@@ -17,6 +17,7 @@ from cobalt_duckdb_spark.functions.exact import (
     spark_round_sql,
 )
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -47,7 +48,7 @@ def pivot_event_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy("user_id")
         .pivot("event_type", _EVENT_TYPES)
         .agg(F.round(F.sum("value"), 2))
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
     # pivot leaves NULL where a user lacks that type; the CASE twin yields 0
     return out.select(
@@ -106,7 +107,7 @@ def events_multi_resolution_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     out = hourly.select(F.lit("hour").alias("resolution"), "*").unionByName(
         daily.select(F.lit("day").alias("resolution"), "*")
     )
-    return out.orderBy("resolution", "bucket_start")
+    return out.transform(sort_result, "resolution", "bucket_start")
 
 
 @register(
@@ -268,7 +269,7 @@ def events_weekly_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFram
             .alias("weeks_since_cohort"),
         )
         .agg(F.countDistinct("user_id").alias("n_active"))
-        .orderBy("cohort_week", "weeks_since_cohort")
+        .transform(sort_result, "cohort_week", "weeks_since_cohort")
     )
 
 
@@ -333,7 +334,7 @@ def events_seasonal_hour_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed.join(F.broadcast(base), ["dow", "hod"])
         .filter((F.col("c") >= 3) & (F.col("s") > 1e-9) & (F.abs(z) > 1.4))
         .select("bucket", F.round("v", 2).alias("hourly_value"), z.alias("z"))
-        .orderBy("bucket")
+        .transform(sort_result, "bucket")
     )
 
 
@@ -411,7 +412,7 @@ def events_peak_concurrent_incidents(spark: SparkSession, sf_dir: str) -> DataFr
         # bridges (object date vs datetime64) and breaks the value hash —
         # ISO string on both sides instead
         .select(F.col("day").cast("string").alias("day"), "peak_concurrent", "n_incidents")
-        .orderBy("day")
+        .transform(sort_result, "day")
     )
 
 
@@ -492,7 +493,7 @@ def events_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round("value", 2).alias("value"),
         F.round(folded, 6).alias("ewma"),
-    ).orderBy("user_id", "event_id")
+    ).transform(sort_result, "user_id", "event_id")
 
 
 _MAD_K = 1.4826  # normal-consistency constant
@@ -564,7 +565,7 @@ def events_mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("value") - F.col("med")) / (F.lit(_MAD_K) * F.col("mad")), 4
             ).alias("robust_z"),
         )
-        .orderBy("event_type", "event_id")
+        .transform(sort_result, "event_type", "event_id")
     )
 
 
@@ -643,7 +644,7 @@ def events_latency_percentile_rollup(spark: SparkSession, sf_dir: str) -> DataFr
             at_rank("rn = (19 * nn + 19) div 20").alias("p95"),
             at_rank("rn = (99 * nn + 99) div 100").alias("p99"),
         )
-        .orderBy("event_type", "hour_of_day")
+        .transform(sort_result, "event_type", "hour_of_day")
     )
 
 
@@ -714,7 +715,7 @@ def events_time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .filter(F.col("_sum_dur") > 0)
         .drop("_sum_dur")
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -888,7 +889,7 @@ def events_incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFra
             4,
         ).alias("pop_stddev"),
         F.round("mx", 2).alias("max_value"),
-    ).orderBy("day", "event_type")
+    ).transform(sort_result, "day", "event_type")
 
 
 @register(
@@ -991,7 +992,7 @@ def events_autocorrelation_hourly(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(F.corr("x", "x2"), 6).alias("acf_2"),
             F.round(F.corr("x", "x3"), 6).alias("acf_3"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -1093,7 +1094,7 @@ def events_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_events").cast("bigint").alias("n_events"),
             F.round(F.sum("dur_us") / F.lit(1e6), 6).alias("covered_seconds"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -1147,7 +1148,7 @@ def events_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round((lo + hi) / 2, 6).alias("rolling_median"),
             "ts",
         )
-        .orderBy("event_type", "ts", "event_id")
+        .transform(sort_result, "event_type", "ts", "event_id")
         .drop("ts")
     )
 
@@ -1238,7 +1239,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("c", 6).alias("max_abs_cusum"),
             F.col("n_days").cast("bigint").alias("n_days"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -1713,7 +1714,7 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .orderBy("dow", "hour")
+        .transform(sort_result, "dow", "hour")
     )
 
 
@@ -1852,7 +1853,7 @@ def events_holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("s.l"), 6).alias("level"),
         F.round(F.col("s.b"), 6).alias("trend"),
         F.round(F.col("s.l") + F.col("s.b"), 6).alias("forecast_next_day"),
-    ).orderBy("event_type")
+    ).transform(sort_result, "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -1935,7 +1936,7 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
             ).alias("smape"),
             F.round(F.sqrt(F.avg(err * err)), 4).alias("rmse"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -2116,7 +2117,7 @@ def events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.round(F.sum("value"), 2).alias("volume"),
         )
-        .orderBy("event_type", "bar_start")
+        .transform(sort_result, "event_type", "bar_start")
     )
 
 
@@ -2329,7 +2330,7 @@ def events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFram
                 guard, F.round((sd_us - mu_us) / (sd_us + mu_us), 4)
             ).alias("burstiness_b"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -3076,5 +3077,5 @@ def events_volume_anomaly_weekday_adjusted(
             F.round("dow_mean", 2).alias("weekday_baseline"),
             F.round("z", 4).alias("adjusted_z"),
         )
-        .orderBy("day")
+        .transform(sort_result, "day")
     )

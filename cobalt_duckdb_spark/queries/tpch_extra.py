@@ -19,6 +19,7 @@ from cobalt_duckdb_spark.functions.exact import (
     exact_round_sum_sql,
 )
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -42,7 +43,7 @@ def q2_top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT n.n_name AS n_name, s.s_suppkey AS s_suppkey,
+        SELECT /*+ REPARTITION(1) */ n.n_name AS n_name, s.s_suppkey AS s_suppkey,
                ROUND(s.s_acctbal, 2) AS acctbal
         FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
         WHERE s.s_acctbal = (
@@ -79,7 +80,7 @@ def q4_late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT o.o_orderpriority AS o_orderpriority,
+        SELECT /*+ REPARTITION(1) */ o.o_orderpriority AS o_orderpriority,
                COUNT(*) AS order_count
         FROM orders o
         WHERE o.o_orderdate >= TIMESTAMP '1996-07-01'
@@ -120,7 +121,7 @@ def q12_case_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).cast("bigint").alias("low_line_count"),
         )
-        .orderBy("ship_year")
+        .transform(sort_result, "ship_year")
     )
 
 
@@ -147,7 +148,7 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .groupBy(F.year("l_shipdate").cast("bigint").alias("ship_year"))
         .agg(F.round(100.0 * F.sum(promo) / F.sum(rev), 4).alias("promo_pct"))
-        .orderBy("ship_year")
+        .transform(sort_result, "ship_year")
     )
 
 
@@ -175,7 +176,8 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT p.p_brand AS p_brand, p.p_type AS p_type, p.p_size AS p_size,
+        SELECT /*+ REPARTITION(1) */
+               p.p_brand AS p_brand, p.p_type AS p_type, p.p_size AS p_size,
                COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE p.p_brand <> 'Brand#1'
@@ -265,7 +267,7 @@ def q22_inactive_wealthy(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT substr(c.c_name, 17, 2) AS cust_prefix,
+        SELECT /*+ REPARTITION(1) */ substr(c.c_name, 17, 2) AS cust_prefix,
                COUNT(*) AS numcust,
                ROUND(SUM(c.c_acctbal), 2) AS totacctbal
         FROM customer c
@@ -434,7 +436,7 @@ def q7_cross_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_extendedprice") * (1 - F.col("l_discount")), 2
             ).alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        .transform(sort_result, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -473,7 +475,7 @@ def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
               AND l_shipdate < TIMESTAMP '1996-04-01'
             GROUP BY l_suppkey
         )
-        SELECT s.s_suppkey AS s_suppkey, s.s_name AS s_name,
+        SELECT /*+ REPARTITION(1) */ s.s_suppkey AS s_suppkey, s.s_name AS s_name,
                r.total_revenue AS total_revenue
         FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
         WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
@@ -519,7 +521,7 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT s.s_name AS s_name, COUNT(*) AS numwait
+        SELECT /*+ REPARTITION(1) */ s.s_name AS s_name, COUNT(*) AS numwait
         FROM supplier s
         JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
         JOIN orders o ON o.o_orderkey = l1.l_orderkey
@@ -591,7 +593,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
         .groupBy(F.year("o_orderdate").cast("bigint").alias("l_year"))
         .agg(F.round(F.sum(target) / F.sum(vol), 6).alias("mkt_share"))
-        .orderBy("l_year")
+        .transform(sort_result, "l_year")
     )
 
 
@@ -619,7 +621,7 @@ def q20_nested_in_supplier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
-        SELECT s.s_suppkey AS s_suppkey, s.s_name AS s_name
+        SELECT /*+ REPARTITION(1) */ s.s_suppkey AS s_suppkey, s.s_name AS s_name
         FROM supplier s
         WHERE s.s_suppkey IN (
             SELECT l_suppkey FROM lineitem
@@ -694,7 +696,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sum_profit")
         )
-        .orderBy(F.asc("nation"), F.desc("o_year"))
+        .transform(sort_result, F.asc("nation"), F.desc("o_year"))
     )
 
 
@@ -762,7 +764,7 @@ def q11_important_part_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_partkey", F.round("value", 2).cast("double").alias("value")
         )
-        .orderBy(F.desc("value"), "l_partkey")
+        .transform(sort_result, F.desc("value"), "l_partkey")
     )
 
 
@@ -802,7 +804,7 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
+        .transform(sort_result, F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -910,7 +912,7 @@ def orders_fulfillment_leadtime_sla(spark: SparkSession, sf_dir: str) -> DataFra
                 4,
             ).alias("sla_violation_rate"),
         )
-        .orderBy("priority")
+        .transform(sort_result, "priority")
     )
 
 
@@ -1010,7 +1012,7 @@ def orders_tier_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint").alias("n_customers"),
             F.round(F.col("n") / F.sum("n").over(row), 4).alias("row_share"),
         )
-        .orderBy("tier_h1", "tier_h2")
+        .transform(sort_result, "tier_h1", "tier_h2")
     )
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cobalt_duckdb_spark.io import load_table
+from cobalt_duckdb_spark.ordering import sort_result
 from cobalt_duckdb_spark.queries import register
 
 
@@ -49,7 +50,7 @@ def window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.ntile(4).over(w).cast("bigint").alias("quartile"),
         )
         .filter(F.col("rn") <= 5)
-        .orderBy("n_name", "rn")
+        .transform(sort_result, "n_name", "rn")
     )
 
 
@@ -83,7 +84,7 @@ def window_lag_lead_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("days_since_prev"),
-    ).orderBy("o_custkey", "o_orderdate", "o_orderkey")
+    ).transform(sort_result, "o_custkey", "o_orderdate", "o_orderkey")
 
 
 @register(
@@ -127,7 +128,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             2,
         ).alias("last_price"),
-    ).orderBy("o_custkey", "o_orderdate", "o_orderkey")
+    ).transform(sort_result, "o_custkey", "o_orderdate", "o_orderkey")
 
 
 @register(
@@ -176,7 +177,7 @@ def window_range_frame_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round("value", 2).alias("value"),
         "n_within_5",
-    ).orderBy("user_id", "value", "event_id")
+    ).transform(sort_result, "user_id", "value", "event_id")
 
 
 @register(
@@ -232,7 +233,7 @@ def window_trailing_hour_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "n_trailing_1h",
         "value_trailing_1h",
-    ).orderBy("user_id", "ts", "event_id")
+    ).transform(sort_result, "user_id", "ts", "event_id")
 
 
 @register(
@@ -289,7 +290,7 @@ def window_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.when(tot_day != 0, F.col("revenue") / tot_day), 6
         ).alias("share_of_day"),
-    ).orderBy("event_type", "day")
+    ).transform(sort_result, "event_type", "day")
 
 
 @register(
@@ -334,6 +335,6 @@ def window_distinct_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("distinct_types_last10"),
             "ts",
         )
-        .orderBy("user_id", "ts", "event_id")
+        .transform(sort_result, "user_id", "ts", "event_id")
         .drop("ts")
     )

@@ -93,7 +93,11 @@ def test_knn_ties_break_by_id_and_k_exceeds_n(spark):
     assert [r["doc_id"] for r in out] == [10, 11, 12]  # tie 10/11 broken by id
 
 
-def test_knn_batch_one_job_matches_loop(spark, sf_dir):
+def test_knn_batch_matches_loop(spark, sf_dir):
+    """All queries in one plan, four jobs at collect: the query-set
+    broadcast, the shuffle into the per-query rank window, the shuffle into
+    one partition and the final sort. The sort has no range-sampling job
+    (ordering.sort_result); with a plain orderBy it ran five."""
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id").isin([0, 1, 2])).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -106,6 +110,16 @@ def test_knn_batch_one_job_matches_loop(spark, sf_dir):
         assert [r["rank"] for r in per] == [1, 2, 3, 4, 5]
         assert per[0]["vec_id"] == qid  # self-match at rank 1
         assert abs(per[0]["distance"]) < 1e-6
+    assert _jobs_and_stages(spark, knn_topk_batch(emb, qs, k=5))[0] == 4
+
+
+def test_one_partition_result_sort_saves_the_sampling_job(spark, sf_dir):
+    """events_mad_robust_outliers sorts its result with
+    ordering.sort_result: 3 jobs at collect. Its plain global orderBy ran 4,
+    the fourth a range-sampling job that computed both percentile windows
+    a second time."""
+    frame = QUERIES["events_mad_robust_outliers"](spark, sf_dir)
+    assert _jobs_and_stages(spark, frame)[0] == 3
 
 
 def test_query_vector_of_missing_raises(spark, sf_dir):

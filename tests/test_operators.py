@@ -19,6 +19,70 @@ from cobalt_duckdb_spark.operators.dedup import (
     simhash_pairs,
 )
 from cobalt_duckdb_spark.operators.joins import asof_join
+from cobalt_duckdb_spark.ordering import sort_result
+
+
+# --- result ordering ---------------------------------------------------------
+
+
+def _ordering_fixture(spark):
+    """Three partitions of rows with duplicate keys, NULLs and NaN; every
+    row appears twice."""
+    nan = float("nan")
+    xs = [1.0, None, nan, 1.0, -0.5, nan, None, 2.0, 1.0, -0.5, 0.0, nan]
+    ss = ["b", None, "a", "b", None, "c", "a", "b", "a", None, "c", None]
+    rows = [(i % 7, x, s) for i, (x, s) in enumerate(zip(xs, ss))] * 2
+    df = spark.createDataFrame(rows, "id BIGINT, x DOUBLE, s STRING")
+    return df.repartition(3, "id")
+
+
+def _canon(rows):
+    # NaN != NaN, so compare the printed values
+    return [tuple(repr(v) for v in r) for r in rows]
+
+
+# Column functions need a live session, so each case builds its keys late
+_ORDER_CASES = [
+    lambda: ((F.asc_nulls_last("x"), F.desc_nulls_first("s"), "id"), {}),
+    lambda: ((F.desc("x"), F.asc("s"), F.desc("id")), {}),
+    lambda: ((F.desc_nulls_last("s"), F.asc_nulls_first("x"), F.asc("id")), {}),
+    lambda: (("x", "s", "id"), {"ascending": [False, True, False]}),
+]
+
+
+@pytest.mark.parametrize("case", range(len(_ORDER_CASES)))
+def test_sort_result_rows_equal_order_by(spark, case):
+    """sort_result returns orderBy's rows in orderBy's order: duplicate
+    keys, NULLs and NaN under mixed directions and NULL placements."""
+    keys, kwargs = _ORDER_CASES[case]()
+    df = _ordering_fixture(spark)
+    assert df.rdd.getNumPartitions() == 3
+    want = df.orderBy(*keys, **kwargs).collect()
+    got = sort_result(df, *keys, **kwargs).collect()
+    assert len(got) == 24
+    assert _canon(got) == _canon(want)
+
+
+def test_sort_result_of_empty_frame(spark):
+    df = _ordering_fixture(spark).filter(F.col("id") < 0)
+    got = sort_result(df, F.desc("x"), "id")
+    assert got.collect() == []
+    assert got.dtypes == df.dtypes
+
+
+def test_sort_result_plans_no_range_exchange(spark):
+    """The sort's child is one partition: the executed plan has no
+    rangepartitioning shuffle (whose partitioner would sample its child in
+    a job of its own), only a single-partition one."""
+    df = _ordering_fixture(spark).groupBy("s").agg(F.count("*").alias("n"))
+    plain = df.orderBy("s")
+    plain.collect()
+    assert "rangepartitioning" in plain._jdf.queryExecution().executedPlan().toString()
+    one = sort_result(df, "s")
+    one.collect()
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan
+    assert "Exchange SinglePartition" in plan
 
 
 # --- as-of join --------------------------------------------------------------

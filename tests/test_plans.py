@@ -113,15 +113,23 @@ def test_one_row_matrix_queries_build_lazily(spark, sf_dir):
 
 # Registry-wide ceilings: ratchets that may only fall. Redundant scans are
 # a table read again in a plan that already reads it; a new checkpoint
-# must not hide a scan by turning it into a Scan ExistingRDD leaf.
+# must not hide a scan by turning it into a Scan ExistingRDD leaf. A range
+# exchange is a global sort whose partitioner samples its child in a job
+# of its own; the 2 left are sql_api_lateral_topk_per_group's, which runs
+# the oracle's own SQL text. A result sorted in one partition
+# (ordering.sort_result) swaps a range exchange for a single-partition one;
+# a redundant repartition(1) shows up as a rise in the shuffle total.
 MAX_REDUNDANT_PARQUET_SCANS = 160
 MAX_EXISTING_RDD_SCANS = 240
+MAX_RANGE_EXCHANGES = 2
+MAX_SHUFFLE_EXCHANGES = 1012
 
 
 def test_no_plan_smells_anywhere(spark, sf_dir):
     """Registry-wide physical-plan audit: no CartesianProduct, no
     row-at-a-time Python (BatchEvalPython) in ANY registered query's plan,
-    and the redundant-scan / materialized-leaf totals under their ceilings.
+    and the redundant-scan, materialized-leaf, range-exchange and
+    shuffle-exchange totals under their ceilings.
     A de-optimized plan is a failed test, not a surprise at 100 TB."""
     import sys, os
     sys.path.insert(
@@ -134,8 +142,12 @@ def test_no_plan_smells_anywhere(spark, sf_dir):
     assert bad == {}
     redundant = sum(a.redundant_scans for a in results.values())
     rdd = sum(a.rdd_scans for a in results.values())
+    ranges = {k: a.range_exchanges for k, a in results.items() if a.range_exchanges}
+    shuffles = sum(a.exchanges for a in results.values())
     assert redundant <= MAX_REDUNDANT_PARQUET_SCANS, redundant
     assert rdd <= MAX_EXISTING_RDD_SCANS, rdd
+    assert sum(ranges.values()) <= MAX_RANGE_EXCHANGES, ranges
+    assert shuffles <= MAX_SHUFFLE_EXCHANGES, shuffles
 
 
 def test_no_python_in_library_operator_plans(spark, sf_dir):

@@ -13,10 +13,14 @@ itself does) for patterns that don't survive scale:
   flagged: every occurrence here is a deliberate single-row/corpus-stats
   broadcast (cutoffs, corpus aggregates), which is the intended pattern.
 
-It also counts, per query, the parquet scans of each table path and the
+It also counts, per query, the parquet scans of each table path, the
 ``Scan ExistingRDD`` leaves (materialized frames: ``localCheckpoint``,
-``createDataFrame``). A table read k times in one plan is k - 1 redundant
-scans; the registry totals of both counts are ratcheted by test_plans.py.
+``createDataFrame``), the shuffle ``Exchange`` nodes and, among them, the
+``rangepartitioning`` ones. A table read k times in one plan is k - 1
+redundant scans. A range exchange is a global sort: its partitioner runs a
+sampling job over the exchange's child first (``ordering.sort_result`` sorts
+a result without one). The registry totals of all four counts are ratcheted
+by test_plans.py.
 
 Usage: python tools/plan_audit.py [sf_dir] [name ...]
 Prints the registry totals; exit 1 if any smell is found. Run by pytest
@@ -36,12 +40,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SMELLS = ("CartesianProduct", "BatchEvalPython")
 _SCAN = re.compile(r"FileScan parquet .*?Location: \w+\(\d+ paths?\)\[([^\],]+)")
+# a shuffle exchange; BroadcastExchange and ReusedExchange do not match
+_EXCHANGE = re.compile(r"\bExchange (\w+)")
 
 
 class PlanAudit(NamedTuple):
     smells: list[str]
     scans: dict[str, int]  # parquet table path -> scans in the plan
     rdd_scans: int  # Scan ExistingRDD leaves
+    exchanges: int  # shuffle Exchange nodes
+    range_exchanges: int  # of which rangepartitioning
 
     @property
     def redundant_scans(self) -> int:
@@ -59,10 +67,13 @@ def audit(spark, sf_dir: str, only: set[str] | None = None) -> dict[str, PlanAud
             continue
         df = fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
+        exchanges = _EXCHANGE.findall(plan)
         out[name] = PlanAudit(
             [s for s in SMELLS if s in plan],
             dict(Counter(m.group(1) for m in _SCAN.finditer(plan))),
             plan.count("Scan ExistingRDD"),
+            len(exchanges),
+            exchanges.count("rangepartitioning"),
         )
     return out
 
@@ -81,9 +92,14 @@ def main() -> int:
     for name, a in sorted(results.items(), key=lambda kv: -kv[1].redundant_scans):
         if a.redundant_scans:
             print(f"REDUNDANT {a.redundant_scans} {name}")
+    for name, a in results.items():
+        if a.range_exchanges:
+            print(f"RANGE {a.range_exchanges} {name}")
     print(f"{len(results) - len(bad)}/{len(results)} plans clean")
     print(f"redundant parquet scans: {sum(a.redundant_scans for a in results.values())}")
     print(f"Scan ExistingRDD leaves: {sum(a.rdd_scans for a in results.values())}")
+    print(f"shuffle exchanges: {sum(a.exchanges for a in results.values())}")
+    print(f"range exchanges: {sum(a.range_exchanges for a in results.values())}")
     return 1 if bad else 0
 
 
